@@ -99,8 +99,9 @@ BENCH_QUERIES = [
     # ADC scans + the exact-L2 truth over the query set)
     "pq_recall_sweep",
     # round-7: ANCE-style hard-negative mining off the ADC shortlist,
-    # and the OPQ-style balanced-permutation A/B (trains a second
-    # quantizer — deliberately NOT a shared-index consumer)
+    # and the OPQ-style balanced-permutation A/B (reads the shared PQ
+    # index for its contiguous leg and trains a second quantizer off
+    # the index's exploded frame for the balanced leg)
     "hard_negative_mine",
     "pq_opq_compare",
     # round-6 late: lexical+semantic fusion, the KMV sketch, and the
@@ -321,92 +322,21 @@ def main() -> None:
                 "overwrite"
             ).save()
 
-    # Shared materialized intermediates (queries.treestats
-    # .shared_descendant_pairs, queries.dedup.shared_lsh_pairs): the
-    # tree family and the dedup family each aggregate one deterministic
-    # frame that is localCheckpointed once per session. Time those
-    # builds EXPLICITLY as their own line items, counted into the
-    # total — otherwise the build cost would land in an untimed warm-up
-    # and vanish from every recorded number. Consumers below then
-    # measure their true steady-state (aggregate-from-materialized)
-    # cost, which is what a pipeline run pays per query.
-    from convoy_spark.queries.dedup import shared_lsh_pairs
-    from convoy_spark.queries.similarity import shared_ivf_index, shared_pq_index
-    from convoy_spark.queries.treestats import shared_descendant_pairs
+    # Shared materialized intermediates (queries.shared.SHARED_BUILDS):
+    # each is one deterministic frame built once per session and read
+    # by its consumer queries. Time those builds EXPLICITLY as their
+    # own line items, counted into the total — otherwise the build cost
+    # would land in an untimed warm-up and vanish from every recorded
+    # number. Consumers below then measure their true steady-state
+    # (read-from-materialized) cost, which is what a pipeline run pays
+    # per query.
+    from convoy_spark.queries.shared import SHARED_BUILDS
 
-    _TREE_CONSUMERS = {
-        "tree_stats",
-        "tree_engagement",
-        "tree_metric_mad",
-        "root_stats_fastpath",
-    }
-    _LSH_CONSUMERS = {"minhash_lsh_neardup", "dedup_clusters", "split_contamination"}
-    _PQ_CONSUMERS = {
-        "pq_rerank_topk",
-        "ann_ivfpq_topk",
-        "pq_recall_sweep",
-        "hard_negative_mine",
-    }
-    _IVF_CONSUMERS = {"ann_ivfpq_topk", "pq_recall_sweep"}
-    _LPA_CONSUMERS = {"label_propagation_communities", "community_rollup"}
-    _KNNG_CONSUMERS = {
-        "knn_graph_ivf",
-        "semantic_communities",
-        "community_text_profile",
-    }
-
-    def _materialize_knng(spark, sf_dir):
-        from convoy_spark.queries.similarity import shared_knn_graph
-
-        shared_knn_graph(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    def _materialize_knng_labels(spark, sf_dir):
-        # round-10: the LPA-over-knng label frame went session-shared
-        # (_knng_labels) — without this explicit line item its build
-        # would hide in the first consumer's untimed warm-up pass
-        from convoy_spark.queries.similarity import _knng_labels
-
-        _knng_labels(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    def _materialize_lpa(spark, sf_dir):
-        from convoy_spark.queries.graph import _copurchase_labels
-
-        _copurchase_labels(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-
-    def _materialize_pq(spark, sf_dir):
-        # the tuple frames are lazily checkpointed; force the blocks
-        # so consumers measure steady-state index reads
-        for frame in shared_pq_index(spark, sf_dir):
-            frame.write.format("noop").mode("overwrite").save()
-
-    def _materialize_ivf(spark, sf_dir):
-        for frame in shared_ivf_index(spark, sf_dir):
-            frame.write.format("noop").mode("overwrite").save()
-
-    for label, builder, consumers in [
-        ("_shared_tree_pairs_build", shared_descendant_pairs, _TREE_CONSUMERS),
-        ("_shared_lsh_pairs_build", shared_lsh_pairs, _LSH_CONSUMERS),
-        ("_shared_pq_index_build", _materialize_pq, _PQ_CONSUMERS),
-        ("_shared_ivf_index_build", _materialize_ivf, _IVF_CONSUMERS),
-        ("_shared_lpa_labels_build", _materialize_lpa, _LPA_CONSUMERS),
-        ("_shared_knn_graph_build", _materialize_knng, _KNNG_CONSUMERS),
-        (
-            "_shared_knng_labels_build",
-            _materialize_knng_labels,
-            {"semantic_communities", "community_text_profile"},
-        ),
-    ]:
-        if not consumers & set(names):
-            continue
+    builds = [b for b in SHARED_BUILDS.values() if b.consumers & set(names)]
+    for b in builds:
         t0 = time.perf_counter()
-        builder(spark, sf_dir)
-        timings[label] = round(time.perf_counter() - t0, 4)
+        b.materialize(spark, sf_dir)
+        timings[f"_shared_{b.name}_build"] = round(time.perf_counter() - t0, 4)
     for name in names:
         # Construction INSIDE the timer: the iterative operators
         # (closure, tree stats) run their convergence loops eagerly
@@ -479,21 +409,14 @@ def main() -> None:
     # a reader compares these to the DuckDB family totals directly
     # instead of reconstructing them from per-query lines.
     families = {}
-    for fam, build, consumers in [
-        ("tree", "_shared_tree_pairs_build", _TREE_CONSUMERS),
-        ("lsh", "_shared_lsh_pairs_build", _LSH_CONSUMERS),
-        ("pq", "_shared_pq_index_build", _PQ_CONSUMERS),
-        ("ivf", "_shared_ivf_index_build", _IVF_CONSUMERS),
-        ("lpa", "_shared_lpa_labels_build", _LPA_CONSUMERS),
-        ("knng", "_shared_knn_graph_build", _KNNG_CONSUMERS),
-    ]:
-        members = [build, *sorted(consumers)]
-        present = [m for m in members if m in timings]
-        if present:
-            families[fam] = {
-                "total": round(sum(timings[m] for m in present), 4),
-                "members": present,
-            }
+    for fam in dict.fromkeys(b.family for b in builds):
+        own = [b for b in builds if b.family == fam]
+        consumers = set().union(*(b.consumers for b in own)) & set(names)
+        present = [f"_shared_{b.name}_build" for b in own] + sorted(consumers)
+        families[fam] = {
+            "total": round(sum(timings[m] for m in present), 4),
+            "members": present,
+        }
     # Hygiene flag (round-5 lesson: numbers collected while other
     # sessions run on the host are 3–6× inflated): record the host
     # load so a contended artifact self-documents instead of silently

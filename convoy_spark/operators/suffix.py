@@ -108,7 +108,8 @@ def suffix_window_ranks(
     on it.
 
     Precondition (held by ``token_positions`` and the streaming
-    position store, which only ever appends whole-doc tokenizations):
+    position store, whose read takes each doc's whole tokenization
+    from one committed batch):
     per-doc positions are contiguous 0-based, so ``lead(r, step)``
     over (doc_id, pos order) IS the rank at pos+step.
 

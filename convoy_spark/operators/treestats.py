@@ -8,8 +8,7 @@ in-memory ``Tree`` (`3_create_tweet_stats_i.py:64-139,225-254`). That
 per-group client loop is the reference's scalability cliff (SURVEY
 §3.3).
 
-The Spark-first restatement keeps everything distributed and offers
-two physical strategies with identical semantics:
+The Spark-first restatement keeps everything distributed:
 
 1. **Pair expansion** (:func:`descendant_pairs` + :func:`tree_stats`)
    — materialize every (ancestor, descendant, depth) pair by
@@ -18,18 +17,16 @@ two physical strategies with identical semantics:
    n · avg-depth: the right default for social forests, whose depth is
    small and bounded (reply chains rarely exceed a few dozen hops).
    Exact distinct-author counts fall out of a plain
-   ``countDistinct`` — no set merging.
+   ``countDistinct`` — no set merging. This replaces the reference's
+   ordered fetch + ``lru_cache`` node interning
+   (`3_create_tweet_stats_i.py:226-240,360-361`): the set-based
+   formulation needs no ordering and no shared mutable state.
 
-2. **Level-synchronous fold** (:func:`tree_stats_fold`) — aggregate
-   children into parents one depth level at a time, deepest first,
-   carrying only per-node accumulators (no pair blowup). O(depth)
-   shuffles over ever-shrinking frontiers; the 100 TB escape hatch for
-   pathologically deep forests. Cross-checked against strategy 1 in
-   tests.
-
-Both replace the reference's ordered fetch + ``lru_cache`` node
-interning (`3_create_tweet_stats_i.py:226-240,360-361`): set-based
-formulations need no ordering and no shared mutable state.
+2. **Per-tree reference** (:func:`tree_stats_pandas`) — the
+   reference's per-tree DFS as a grouped ``applyInPandas`` map, one
+   tree per Python task. It backs the ``tree_stats_grouped`` query and
+   is the differential oracle for strategy 1 in tests, not a scale
+   path.
 
 Skew note (100 TB): viral roots make the groupBy key skewed; AQE skew
 handling splits oversized partitions, and the pair expansion never
@@ -269,12 +266,12 @@ def tree_stats_pandas(edges: DataFrame) -> DataFrame:
     (`3_create_tweet_stats_i.py:225-254`), but distributed per GROUP
     instead of serialized through one client.
 
-    Kept as a differential cross-check against the set-based
-    strategies (tests assert all three agree). Scale posture: right
-    for forests of many modest trees (one Arrow batch per tree, pure
-    pandas/python fold, no joins at all); wrong for viral mega-trees,
-    where one group = one task = the reference's original cliff — the
-    pair/fold strategies exist for exactly that case.
+    Kept as a differential cross-check against the pair expansion
+    (tests assert they agree). Scale posture: right for forests of
+    many modest trees (one Arrow batch per tree, pure pandas/python
+    fold, no joins at all); wrong for viral mega-trees, where one
+    group = one task = the reference's original cliff — the pair
+    expansion exists for exactly that case.
     """
     import pandas as pd
 
@@ -355,131 +352,3 @@ def tree_stats_pandas(edges: DataFrame) -> DataFrame:
 
     ensure_executor_imports(grouped.sparkSession)
     return grouped.groupBy("root_id").applyInPandas(fold, schema)
-
-
-def tree_stats_fold(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
-    """Level-synchronous bottom-up fold — the no-pair-blowup strategy.
-
-    Computes the purely structural statistics (descendants, leaf
-    descendants, max depth, sum/mean leaf depth, branching factor) by
-    aggregating each depth level into its parents, deepest first — the
-    distributed restatement of the reference's memoized DFS
-    (`3_create_tweet_stats_i.py:86-139`): every node is aggregated
-    exactly once, as in the ``descendants != -1`` early-reuse branch.
-
-    Carries O(n) state (one accumulator row per node), never the
-    O(n·depth) pair set — the escape hatch for forests too deep for
-    :func:`tree_stats`. Distinct-author sets are deliberately NOT
-    folded here (set union per level is the memory cliff this strategy
-    exists to avoid); combine with ``approx_count_distinct`` sketches
-    at scale instead.
-    """
-    children = child_edges(edges).localCheckpoint()
-
-    # Depth of every node from its root, by frontier descent from roots.
-    roots = edges.filter(F.col("parent_id").isNull()).select(
-        F.col("child_id").alias("node_id"), F.lit(0).alias("level")
-    )
-    frontier = roots.localCheckpoint()
-    level_frames = [frontier]
-    for _ in range(max_iterations):
-        frontier = (
-            frontier.join(children, F.col("node_id") == F.col("parent_id"))
-            .select(
-                F.col("child_id").alias("node_id"),
-                (F.col("level") + 1).alias("level"),
-            )
-            .localCheckpoint(eager=False)
-        )
-        if frontier.count() == 0:
-            break
-        level_frames.append(frontier)
-    else:
-        raise RuntimeError(f"forest deeper than {max_iterations} levels")
-    max_level = len(level_frames) - 1
-
-    levels = level_frames[0]
-    for lf in level_frames[1:]:
-        levels = levels.unionByName(lf)
-
-    is_leaf = leaf_nodes(edges).withColumn("is_leaf", F.lit(1))
-    acc = (
-        levels.join(is_leaf, "node_id", "left")
-        .select(
-            "node_id",
-            "level",
-            F.coalesce("is_leaf", F.lit(0)).alias("is_leaf"),
-            F.lit(0).cast("long").alias("n_descendants"),
-            F.lit(0).cast("long").alias("n_leaf_descendants"),
-            F.lit(0).cast("long").alias("max_depth"),
-            F.lit(0).cast("long").alias("sum_leaf_depth"),
-        )
-        .localCheckpoint()
-    )
-
-    parent_of = children.select(
-        F.col("child_id").alias("node_id"), F.col("parent_id").alias("parent")
-    )
-    for lvl in range(max_level, 0, -1):
-        cur = acc.filter(F.col("level") == lvl).join(parent_of, "node_id")
-        # Child contribution to its parent: itself + its subtree.
-        contrib = cur.groupBy(F.col("parent").alias("node_id")).agg(
-            F.sum(F.col("n_descendants") + 1).alias("c_desc"),
-            F.sum(
-                F.when(F.col("is_leaf") == 1, 1).otherwise(
-                    F.col("n_leaf_descendants")
-                )
-            ).alias("c_leaves"),
-            (F.max("max_depth") + 1).alias("c_depth"),
-            F.sum(
-                F.when(F.col("is_leaf") == 1, 1).otherwise(
-                    F.col("sum_leaf_depth") + F.col("n_leaf_descendants")
-                )
-            ).alias("c_sum_depth"),
-        )
-        upper = acc.filter(F.col("level") < lvl)
-        updated = (
-            upper.join(contrib, "node_id", "left")
-            .select(
-                "node_id",
-                "level",
-                "is_leaf",
-                (
-                    F.col("n_descendants") + F.coalesce("c_desc", F.lit(0))
-                ).alias("n_descendants"),
-                (
-                    F.col("n_leaf_descendants")
-                    + F.coalesce("c_leaves", F.lit(0))
-                ).alias("n_leaf_descendants"),
-                F.greatest(
-                    F.col("max_depth"), F.coalesce("c_depth", F.lit(0))
-                ).alias("max_depth"),
-                (
-                    F.col("sum_leaf_depth")
-                    + F.coalesce("c_sum_depth", F.lit(0))
-                ).alias("sum_leaf_depth"),
-            )
-        )
-        acc = updated.unionByName(
-            acc.filter(F.col("level") >= lvl)
-        ).localCheckpoint()
-
-    return acc.select(
-        "node_id",
-        "n_descendants",
-        "n_leaf_descendants",
-        "max_depth",
-        "sum_leaf_depth",
-        F.when(
-            F.col("n_leaf_descendants") > 0,
-            F.col("sum_leaf_depth") / F.col("n_leaf_descendants").cast("double"),
-        )
-        .otherwise(F.lit(0.0))
-        .alias("mean_leaf_depth"),
-        (
-            F.col("n_descendants").cast("double")
-            / (1 + F.col("n_descendants") - F.col("n_leaf_descendants")).cast(
-                "double"
-            )
-        ).alias("branching_factor"),
-    )

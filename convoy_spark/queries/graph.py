@@ -19,6 +19,7 @@ from convoy_spark.operators.graph import (
 )
 from convoy_spark.functions.numeric import dsum, sql_dsum
 from convoy_spark.queries.catalog import query
+from convoy_spark.queries.shared import session_cached, shared_build
 from convoy_spark.tables import load_table
 
 # Recursive climb to the root — the oracle twin of pointer jumping.
@@ -292,6 +293,11 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
 _LPA_LABELS_CACHE: dict = {}
 
 
+@shared_build(
+    "lpa_labels",
+    family="lpa",
+    consumers={"label_propagation_communities", "community_rollup"},
+)
 def _copurchase_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, label) — LPA communities over the co-purchase part graph,
     ONE label frame per (session, sf_dir): label_propagation already
@@ -299,7 +305,6 @@ def _copurchase_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     makes every consumer (the membership query, community_rollup)
     reuse the materialized labels instead of re-running the rounds —
     the shared_pq_index amortization pattern."""
-    from convoy_spark.queries.shared import session_cached_obj
 
     def _build() -> DataFrame:
         und = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
@@ -308,7 +313,7 @@ def _copurchase_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).union(und.select(F.col("q").alias("u"), F.col("p").alias("v")))
         return label_propagation(edges)
 
-    return session_cached_obj(_LPA_LABELS_CACHE, spark, sf_dir, _build)
+    return session_cached(_LPA_LABELS_CACHE, spark, sf_dir, _build)
 
 
 @query(

@@ -21,6 +21,7 @@ from convoy_spark.operators.similarity import (
     cosine_topk,
 )
 from convoy_spark.queries.catalog import query
+from convoy_spark.queries.shared import session_cached, shared_build
 from convoy_spark.tables import load_table
 
 from convoy_spark.operators.pca import (
@@ -777,15 +778,19 @@ KNNG_PROBE = 2
 _KNN_GRAPH_CACHE: dict = {}
 
 
+@shared_build(
+    "knn_graph",
+    family="knng",
+    consumers={"knn_graph_ivf", "semantic_communities", "community_text_profile"},
+)
 def shared_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE k-NN graph per (session, sf_dir) — the membership query and
     the communities query are both consumers (the shared_pq_index /
     _copurchase_labels amortization pattern); the N·k edge frame is
     lazily checkpointed so consumers reuse the materialized graph."""
     from convoy_spark.operators.similarity import knn_graph
-    from convoy_spark.queries.shared import session_cached_obj
 
-    return session_cached_obj(
+    return session_cached(
         _KNN_GRAPH_CACHE,
         spark,
         sf_dir,
@@ -904,6 +909,11 @@ def _semantic_communities_oracle() -> str:
 _KNNG_LABELS_CACHE: dict = {}
 
 
+@shared_build(
+    "knng_labels",
+    family="knng",
+    consumers={"semantic_communities", "community_text_profile"},
+)
 def _knng_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(id, label) — LPA over the symmetrized shared k-NN graph, ONE
     label frame per (session, sf_dir): semantic_communities and the
@@ -912,7 +922,6 @@ def _knng_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     already checkpoints its final frame, so caching the handle makes
     every consumer reuse the materialized labels)."""
     from convoy_spark.operators.graph import label_propagation
-    from convoy_spark.queries.shared import session_cached_obj
 
     def _build() -> DataFrame:
         g = shared_knn_graph(spark, sf_dir)
@@ -923,7 +932,7 @@ def _knng_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return label_propagation(edges)
 
-    return session_cached_obj(_KNNG_LABELS_CACHE, spark, sf_dir, _build)
+    return session_cached(_KNNG_LABELS_CACHE, spark, sf_dir, _build)
 
 
 @query("semantic_communities", oracle=_semantic_communities_oracle())
@@ -1057,7 +1066,6 @@ from convoy_spark.operators.pq import (  # noqa: E402
     ann_pq_adc_topk,
     pq_codebooks,
 )
-from convoy_spark.queries.shared import session_cached_obj  # noqa: E402
 
 # One PQ index (codebook + code table + exploded frame) and one IVF
 # coarse index per (session, sf_dir): the flat-ADC, re-rank and
@@ -1068,8 +1076,21 @@ _PQ_INDEX_CACHE: dict = {}
 _IVF_INDEX_CACHE: dict = {}
 
 
+@shared_build(
+    "pq_index",
+    family="pq",
+    consumers={
+        "pq_adc_topk",
+        "pq_rerank_topk",
+        "ann_ivfpq_topk",
+        "pq_recall_sweep",
+        "hard_negative_mine",
+        "pq_opq_compare",
+        "knn_adc_label_eval",
+    },
+)
 def shared_pq_index(spark: SparkSession, sf_dir: str):
-    return session_cached_obj(
+    return session_cached(
         _PQ_INDEX_CACHE,
         spark,
         sf_dir,
@@ -1077,10 +1098,13 @@ def shared_pq_index(spark: SparkSession, sf_dir: str):
     )
 
 
+@shared_build(
+    "ivf_index", family="ivf", consumers={"ann_ivfpq_topk", "pq_recall_sweep"}
+)
 def shared_ivf_index(spark: SparkSession, sf_dir: str):
     from convoy_spark.operators.similarity import ivf_index
 
-    return session_cached_obj(
+    return session_cached(
         _IVF_INDEX_CACHE,
         spark,
         sf_dir,

@@ -4,17 +4,21 @@ design note on why nothing stronger is exactly mergeable (the round-8
 verdict #8 deliverable; the OPQ measured-decline precedent applied to
 state design).
 
-**Why per-batch rank deltas do NOT merge.** The batch operator
+**Why per-batch class deltas do NOT merge.** The batch operator
 (operators/suffix.py) represents "these two corpus positions start
-the same ``window``-token sequence" as equality of a DENSE RANK built
-by prefix doubling. That rank is a global ordinal over the sorted
-distinct pair-key set — its VALUE is corpus-relative:
+the same ``window``-token sequence" as equality of a CLASS ID built
+by prefix doubling: the class's first corpus occurrence,
+``min(struct(doc_id, pos))`` over its positions. That id is
+corpus-relative:
 
-- inserting ONE new distinct key (any new batch almost surely does)
-  increments every higher rank — a Θ(distinct-keys) renumbering, not
-  a per-batch delta; and the renumbering cascades through all
-  log₂(window) doubling rounds, because round k+1's keys are PAIRS of
-  round-k ranks;
+- a batch holding an occurrence that sorts before a class's current
+  first occurrence (doc ids carry no arrival order) changes that
+  class's id, and the change cascades through all log₂(window)
+  doubling rounds, because round k+1's keys are PAIRS of round-k ids
+  — a corpus-wide re-keying, not a per-batch delta;
+- even where the ids happen to stay put, classing a new position
+  needs every round's (pair key → class id) table — log₂(window)
+  corpus-sized tables kept beside the store;
 - the only batch-local key that survives corpus growth is the window
   CONTENT itself (the ``window``-token sequence), which is
   Θ(window) tokens per position — a window-times blowup of the store.
@@ -62,7 +66,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from convoy_spark.operators.suffix import (
@@ -193,14 +197,21 @@ def suffix_repeat_over_store(
     marker in the SAME batch-<tag> dir — not merely a matching seq,
     which a second checkpoint lineage can collide on) contribute — a
     crash-torn positions partition without its own marker is excluded
-    until its replay commits it. Returns the same (doc_id, n_windows,
+    until its replay commits it, and each doc's positions come from
+    one committed batch. Returns the same (doc_id, n_windows,
     n_repeat_windows, n_crossdoc_windows) frame as the catalog query,
     bitwise."""
     deltas = os.path.join(state_dir, "deltas")
+    # The lead() pairing in operators.suffix needs unique (doc_id, pos),
+    # so a doc committed by more than one batch (two checkpoint
+    # lineages over the same landing files, or a re-landed doc) takes
+    # its positions from its first committed batch only.
+    tag = F.regexp_extract(F.input_file_name(), r"/batch-([^/]+)/positions/", 1)
     pos = (
-        _read_delta_kind(
-            spark, deltas, "positions", POS_SCHEMA, committed_only=True
-        )
+        _read_delta_kind(spark, deltas, "positions", POS_SCHEMA, committed_only=True)
+        .select("doc_id", "pos", "tok", F.struct("seq", tag).alias("batch"))
+        .withColumn("first", F.min("batch").over(Window.partitionBy("doc_id")))
+        .filter(F.col("batch") == F.col("first"))
         .select("doc_id", "pos", "tok")
         .localCheckpoint(eager=False)
     )

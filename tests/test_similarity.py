@@ -512,4 +512,3 @@ def test_knn_graph_recall_vs_exact(spark):
     want = {(r.query_id, r.corpus_id) for r in truth.collect()}
     recall = len(got & want) / len(want)
     assert recall >= 0.35, recall  # random corpus: cells are arbitrary
-

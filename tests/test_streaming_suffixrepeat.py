@@ -127,3 +127,21 @@ def test_torn_batch_seq_collision_across_lineages(spark, tmp_path):
     assert _rows(suffix_repeat_over_store(spark, state)) == _rows(
         crossdoc_repeat_profile(docs)
     )
+
+
+def test_two_lineages_over_same_landing_files(spark, tmp_path):
+    """Two checkpoint lineages draining the SAME landing files into one
+    store each commit every doc: the re-rank must read each doc's
+    positions from one committed batch, since the lead() rewrite needs
+    unique (doc_id, pos)."""
+    landing = str(tmp_path / "landing")
+    _docs(spark).coalesce(1).write.mode("overwrite").parquet(landing)
+    single = str(tmp_path / "state_single")
+    run_incremental_suffix_store(spark, landing, str(tmp_path / "ckpt_s"), single)
+    shared = str(tmp_path / "state_shared")
+    for lineage in ("a", "b"):
+        run_incremental_suffix_store(
+            spark, landing, str(tmp_path / f"ckpt_{lineage}"), shared
+        )
+    want = _rows(suffix_repeat_over_store(spark, single))
+    assert _rows(suffix_repeat_over_store(spark, shared)) == want

@@ -46,33 +46,12 @@ def main() -> int:
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
-    from pyspark.sql import SparkSession
-
-    from convoy_spark.tables import TABLE_NAMES, table_path
-
-    # Deliberately a VANILLA session — no repo confs. The real driver
-    # constructs its own unconfigured SparkSession, and round 1 proved
-    # that emulating with the tuned get_spark() session hides
-    # env-dependent bugs (the nanosAsLong conf lived only in
-    # session.py, so 15 queries passed locally and errored at the
-    # driver). Only the session timezone is pinned to UTC because the
-    # driver compares against DuckDB under UTC.
-    spark = (
-        SparkSession.builder.master("local[8]")
-        .appName("driver-emulator")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
+    spark = vanilla_spark("driver-emulator")
     edf = mod.entry(spark)
     smoke_rows = edf.count()
     print(f"SMOKE entry(): rows={smoke_rows} schema={[f.name for f in edf.schema.fields]}")
 
-    con = duckdb.connect()
-    for name in TABLE_NAMES:
-        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(sf_dir, name)}')")
+    con = oracle_con(sf_dir)
 
     queries = mod.queries()
     oracles = mod.oracle_sql()
@@ -109,6 +88,37 @@ def main() -> int:
     print(f"TOTAL pass={n_pass} fail={n_fail} rows_only={n_rows_only}")
     spark.stop()
     return 1 if n_fail else 0
+
+
+def vanilla_spark(app_name: str):
+    """Deliberately a VANILLA session — no repo confs. The real driver
+    constructs its own unconfigured SparkSession, and round 1 proved
+    that emulating with the tuned get_spark() session hides
+    env-dependent bugs (the nanosAsLong conf lived only in
+    session.py, so 15 queries passed locally and errored at the
+    driver). Only the session timezone is pinned to UTC because the
+    driver compares against DuckDB under UTC."""
+    from pyspark.sql import SparkSession
+
+    spark = (
+        SparkSession.builder.master("local[8]")
+        .appName(app_name)
+        .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.ui.enabled", "false")
+        .getOrCreate()
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def oracle_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of ``sf_dir``."""
+    from convoy_spark.tables import TABLE_NAMES, table_path
+
+    con = duckdb.connect()
+    for name in TABLE_NAMES:
+        con.execute(f"CREATE VIEW {name} AS SELECT * FROM read_parquet('{table_path(sf_dir, name)}')")
+    return con
 
 
 if __name__ == "__main__":

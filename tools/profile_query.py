@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import shlex
 import sys
 import time
 import uuid
@@ -34,35 +35,19 @@ def main() -> int:
     log_dir = f"/tmp/spark-events-{uuid.uuid4().hex[:8]}"
     os.makedirs(log_dir, exist_ok=True)
 
-    from pyspark.sql import SparkSession
-
-    # Build ONE session, with the eventLog confs set BEFORE the JVM
-    # launches — a throwaway pre-seed session would fix the JVM heap at
-    # its default and silently ignore spark.driver.memory below
-    # (round-10 ADVICE), so profiled runs would execute under different
-    # memory/GC conditions than the bench they diagnose.
-    from convoy_spark.session import _sized_shuffle_partitions, default_parallelism
-
-    n = default_parallelism()
-    shuffle_n = _sized_shuffle_partitions(sf_dir, n)
-    spark = (
-        SparkSession.builder.master(f"local[{n}]")
-        .appName("convoy-spark-profile")
-        .config("spark.sql.shuffle.partitions", str(shuffle_n))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.eventLog.enabled", "true")
-        .config("spark.eventLog.dir", log_dir)
-        .getOrCreate()
+    # The event-log confs go in at JVM launch, next to get_spark's own
+    # confs, so the profiled session runs under the bench's memory and
+    # shuffle settings.
+    os.environ["PYSPARK_SUBMIT_ARGS"] = shlex.join(
+        [
+            "--conf", "spark.eventLog.enabled=true",
+            "--conf", f"spark.eventLog.dir=file://{log_dir}",
+            "pyspark-shell",
+        ]
     )
-    spark.sparkContext.setLogLevel("WARN")
+    from convoy_spark.session import get_spark
+
+    spark = get_spark("convoy-spark-profile", data_dir=sf_dir)
     from convoy_spark.queries import QUERIES
 
     spark.range(1000).selectExpr("sum(id)").collect()
