@@ -253,10 +253,16 @@ def _assign(
 
 def _update(codes: DataFrame, ex: DataFrame) -> DataFrame:
     """(sub, cell, dsub, m) — per-subspace centroid means in the
-    floor-scaled-long discipline (similarity._cell_mean's rationale:
-    decimal casts of raw float32-derived x are a cross-engine
-    half-up/half-even rounding-tie hazard; floors have no tie). Cell
-    populations are corpus-proportional → scaled_sum_guard."""
+    floor-scaled LONG discipline: m = (Σ ⌊x·2⁴⁰⌋ as double) / 2⁴⁰ /
+    count. The long sum is exact, the long→double cast and the /2⁴⁰
+    are deterministic (the latter exact — power of two), and /count is
+    one rounded op — bit-identical across engines. A DECIMAL cast of
+    raw x would be a cross-engine TIE hazard: float32-derived values
+    are coarse dyadics whose decimal expansion can end exactly on a
+    half (e.g. 0.1871337890625), which Spark rounds HALF_UP and DuckDB
+    half-to-even (caught by the sf0.1 n_cells∝N SemDeDup parity test);
+    floors have no tie. Cell populations are corpus-proportional →
+    scaled_sum_guard."""
     from convoy_spark.operators.similarity import scaled_sum_guard
 
     term = F.floor(F.col("x") * F.lit(SCORE_SCALE))
@@ -283,42 +289,30 @@ def _update(codes: DataFrame, ex: DataFrame) -> DataFrame:
     )
 
 
-def pq_codebooks(
-    corpus: DataFrame,
-    n_sub: int = PQ_SUB,
-    ks: int = PQ_KS,
-    iters: int = PQ_ITERS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    dim_map: DataFrame | None = None,
-    raw_ex: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """Train the PQ index: ``iters`` Lloyd rounds per subspace (all
-    subspaces in one keyed dataflow), then one final assignment against
-    the final codebook. Seeds are the first ``ks`` vectors by id — the
-    same deterministic seeding as the IVF coarse quantizer.
+def lloyd(
+    ex: DataFrame, ids: DataFrame, ks: int, iters: int, wide: bool
+) -> tuple[DataFrame, DataFrame]:
+    """The one deterministic k-means (Lloyd) loop of the engine, over
+    the exploded (vec_id, sub, dsub, x) frame: every subspace trains in
+    the same keyed dataflow. Seeds are the first ``ks`` vectors of
+    ``ids`` (vec_id) by id; then ``iters`` rounds of
+    assign → update; then one final assignment against the last
+    codebook. The IVF coarse quantizer is this loop at ONE subspace
+    spanning all dimensions (sub = 0, dsub = d — see
+    operators/similarity.ivf_index).
 
-    Returns ``(codebook, codes, ex)``:
+    Returns ``(cent, codes)``: cent (sub, cell, dsub, m) is the codebook
+    the final assignment was made against; codes (vec_id, sub, code).
 
-    - codebook: (sub, cell, dsub, m) — exploded, broadcast-sized;
-    - codes: (vec_id, sub, code) — the compressed corpus;
-    - ex: the (vec_id, sub, dsub, x) exploded frame (checkpointed),
-      for callers that score queries against the same corpus.
-
-    Checkpoint discipline follows operators/similarity._ivf_loop: the
-    loop is a linear fixed-depth plan, so only the final frames are
-    checkpointed (one for the codebook every consumer broadcasts, one
-    for the code table the ADC scan reads).
-    """
-    dim = _infer_dim(corpus, vec_col)
-    ds = dim // n_sub
-    wide = corpus.count() >= PQ_WIDE_MIN_ROWS  # physical-shape choice
-    ex = _sub_exploded(
-        corpus, ds, vec_col, id_col, dim_map, raw_ex
-    ).localCheckpoint(eager=False)
+    Checkpoint discipline: ``ex`` is read every round, so the caller
+    passes it checkpointed. Each round's centroid frame (n_sub·ks·ds
+    rows) takes a lazy localCheckpoint that truncates the loop lineage
+    (the materialization it triggers is the round's own compute, paid
+    exactly once either way), and the final assignment takes one so
+    every consumer reads the materialized codes instead of re-running
+    the loop."""
     seeds = (
-        corpus.select(F.col(id_col).alias("vec_id"))
-        .orderBy("vec_id")
+        ids.orderBy("vec_id")
         .limit(ks)
         .select(
             "vec_id",
@@ -329,14 +323,43 @@ def pq_codebooks(
         "sub", "cell", "dsub", F.col("x").alias("m")
     )
     for _ in range(iters):
-        # Per-round checkpoint on the TINY centroid frame truncates
-        # the loop lineage (the materialization it triggers is the
-        # round's own compute, paid exactly once either way); the
-        # frame is n_sub*ks*ds rows.
         cent = _update(_assign(ex, cent, ks, wide), ex).localCheckpoint(
             eager=False
         )
     codes = _assign(ex, cent, ks, wide).localCheckpoint(eager=False)
+    return cent, codes
+
+
+def pq_codebooks(
+    corpus: DataFrame,
+    n_sub: int = PQ_SUB,
+    ks: int = PQ_KS,
+    iters: int = PQ_ITERS,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+    dim_map: DataFrame | None = None,
+    raw_ex: DataFrame | None = None,
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """Train the PQ index: :func:`lloyd` over all ``n_sub`` subspaces
+    at once (``iters`` rounds, then one final assignment against the
+    final codebook).
+
+    Returns ``(codebook, codes, ex)``:
+
+    - codebook: (sub, cell, dsub, m) — exploded, broadcast-sized;
+    - codes: (vec_id, sub, code) — the compressed corpus;
+    - ex: the (vec_id, sub, dsub, x) exploded frame (checkpointed),
+      for callers that score queries against the same corpus.
+    """
+    dim = _infer_dim(corpus, vec_col)
+    ds = dim // n_sub
+    wide = corpus.count() >= PQ_WIDE_MIN_ROWS  # physical-shape choice
+    ex = _sub_exploded(
+        corpus, ds, vec_col, id_col, dim_map, raw_ex
+    ).localCheckpoint(eager=False)
+    cent, codes = lloyd(
+        ex, corpus.select(F.col(id_col).alias("vec_id")), ks, iters, wide
+    )
     return cent, codes, ex
 
 
@@ -560,12 +583,13 @@ def ivfpq_candidates(
     :func:`ann_ivfpq_topk`, split out so the recall-vs-n_probe sweep
     harness (queries/similarity.py::pq_recall_sweep) measures exactly
     the candidate set the search runs on — shared-by-construction,
-    cannot drift.
+    cannot drift. It is also the probe stage of
+    operators/similarity.ann_ivf_topk.
 
-    Probe ranking is the exact decimal query→centroid distance with
-    the deterministic (d, cell) tiebreak (mirrors ann_ivf_topk's probe
-    stage); candidates come from one equi-join on cell — candidate
-    volume is n_probe/n_cells of the corpus, no Q×N anywhere."""
+    Probe ranking is the exact floor-scaled query→centroid distance
+    with the deterministic (d, cell) tiebreak; candidates come from one
+    equi-join on cell — candidate volume is n_probe/n_cells of the
+    corpus, no Q×N anywhere."""
     from convoy_spark.operators.similarity import _sq_dist, ivf_index
 
     centroids, assignment = coarse_index or ivf_index(
@@ -617,8 +641,8 @@ def ann_ivfpq_topk(
     ADC stage never touches float vectors — it joins the probed cells'
     code rows against the broadcast distance table.
 
-    Both index builds share ONE exploded scan discipline: the IVF loop
-    and the PQ loop each checkpoint their final frames only, and the
+    Both index builds run the one Lloyd loop (:func:`lloyd`: the IVF
+    coarse quantizer at one subspace, PQ at ``n_sub``), and the
     candidate pruning is an equi-join on cell — no Q×N anywhere.
     """
     codebook, codes, _ = pq_index or pq_codebooks(

@@ -302,7 +302,7 @@ def ivf_index(
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: deterministic k-means (first ``n_cells``
     vectors by id seed the centroids; ``iters`` Lloyd rounds with
-    decimal-exact elementwise means), returning
+    floor-scaled-long elementwise means), returning
 
     - centroids: (cell, centroid array<double>)
     - assignment: (vec_id, cell)
@@ -315,9 +315,7 @@ def ivf_index(
     ex = exploded_vectors(corpus, vec_col, id_col).localCheckpoint(
         eager=False
     )
-    cent, assignment = _ivf_loop(
-        ex, corpus.select(F.col(id_col).alias("vec_id")), n_cells, iters
-    )
+    cent, assignment = _coarse_kmeans(ex, corpus, id_col, n_cells, iters)
     centroids = cent.groupBy("cell").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("d", "m"))),
@@ -325,6 +323,32 @@ def ivf_index(
         ).alias("centroid")
     )
     return centroids, assignment
+
+
+def _coarse_kmeans(
+    ex: DataFrame, corpus: DataFrame, id_col: str, n_cells: int, iters: int
+) -> tuple[DataFrame, DataFrame]:
+    """(cent (cell, d, m), assignment (vec_id, cell)) over the
+    checkpointed (vec_id, d, x) frame: the PQ Lloyd loop
+    (operators/pq.lloyd) at ONE subspace spanning all dimensions
+    (sub = 0, dsub = d), in the row shape. The returned centroids are
+    the means of the FINAL assignment — one update past the codebook
+    that assignment was made against — which is what every IVF
+    consumer (priority distances, probe scoring) and the unrolled
+    oracle (queries/similarity.py _ivf_kmeans_ctes) read."""
+    from convoy_spark.operators.pq import _update, lloyd
+
+    one = ex.select(
+        "vec_id", F.lit(0).alias("sub"), F.col("d").alias("dsub"), "x"
+    )
+    _, codes = lloyd(
+        one, corpus.select(F.col(id_col).alias("vec_id")), n_cells, iters,
+        wide=False,
+    )
+    return (
+        _update(codes, one).select("cell", F.col("dsub").alias("d"), "m"),
+        codes.select("vec_id", F.col("code").alias("cell")),
+    )
 
 
 def scaled_sum_guard(n_col, mx_col, value, what: str):
@@ -355,104 +379,6 @@ def scaled_sum_guard(n_col, mx_col, value, what: str):
     )
 
 
-def _cell_mean(assignment: DataFrame, ex: DataFrame) -> DataFrame:
-    """(cell, d, m) — elementwise centroid means in the floor-scaled
-    LONG discipline: m = (Σ ⌊x·2⁴⁰⌋ as double) / 2⁴⁰ / count. The long
-    sum is exact, the long→double cast and the /2⁴⁰ are deterministic
-    (the latter exact — power of two), and /count is one rounded op —
-    bit-identical across engines. The previous DECIMAL(28,12) cast of
-    raw x was a cross-engine TIE hazard: float32-derived values are
-    coarse dyadics whose decimal expansion can end exactly on a half
-    (e.g. 0.1871337890625), and Spark rounds those HALF_UP while
-    DuckDB rounds half-to-even — caught by the sf0.1 n_cells∝N
-    SemDeDup parity test, round 8. Cell populations are
-    corpus-proportional, so the sum carries the scaled_sum_guard."""
-    term = F.floor(F.col("x") * F.lit(SCORE_SCALE))
-    g = (
-        assignment.join(ex, "vec_id")
-        .groupBy("cell", "d")
-        .agg(
-            F.sum(term).alias("_s"),
-            F.count("*").alias("_n"),
-            F.max(F.abs(term)).alias("_mx"),
-        )
-    )
-    return g.select(
-        "cell",
-        "d",
-        scaled_sum_guard(
-            F.col("_n"),
-            F.col("_mx"),
-            F.col("_s").cast("double") / F.lit(SCORE_SCALE) / F.col("_n"),
-            "_cell_mean",
-        ).alias("m"),
-    )
-
-
-def _ivf_loop(
-    ex: DataFrame, ids: DataFrame, n_cells: int, iters: int
-) -> tuple[DataFrame, DataFrame]:
-    """The k-means loop over the EXPLODED (vec_id, d, x) frame — which
-    is also the unrolled oracle's shape (queries/similarity.py
-    _ivf_kmeans_ctes), so it is value-identical to the original
-    per-row array fold by construction: per-element floor-scaled
-    (x−m)² long terms summed by groupBy are exact associative integer
-    sums (see _cell_mean for why floors, not decimal casts), while
-    running in whole-stage codegen with no array group keys shuffling
-    vectors and no per-iteration array re-assembly.
-
-    Returns (cent (cell, d, m) exploded, assignment (vec_id, cell)).
-
-    Checkpoint discipline (measured at sf0.01): the loop is a LINEAR
-    fixed-depth plan — each iteration's frames are consumed exactly
-    once by the next — so per-iteration localCheckpoints bought no
-    re-execution safety but charged a full physical-planning pass
-    each (3.5 + 1.3 + 0.7 s of driver time at 3 passes). One lazy
-    checkpoint on the FINAL assignment is the only one needed: every
-    downstream consumer (final centroids, priority distances, probe
-    scoring) reads the materialized assignment instead of re-running
-    the loop."""
-    seeds = (
-        ids.orderBy("vec_id")
-        .limit(n_cells)
-        .select(
-            "vec_id",
-            (F.row_number().over(Window.orderBy("vec_id")) - 1).alias(
-                "cell"
-            ),
-        )
-    )
-    cent = seeds.join(ex, "vec_id").select(
-        "cell", "d", F.col("x").alias("m")
-    )
-    assignment = None
-    for it in range(iters + 1):  # final pass re-assigns to final centroids
-        dist = (
-            ex.join(F.broadcast(cent), "d")
-            .groupBy("vec_id", "cell")
-            .agg(
-                # floor-scaled long sums — no decimal tie hazard (see
-                # _cell_mean); dd only feeds the (dd, cell) argmin
-                F.sum(
-                    F.floor(
-                        (F.col("x") - F.col("m"))
-                        * (F.col("x") - F.col("m"))
-                        * F.lit(SCORE_SCALE)
-                    )
-                ).alias("dd")
-            )
-        )
-        assignment = dist.groupBy("vec_id").agg(
-            F.min(F.struct(F.col("dd"), F.col("cell")))
-            .getField("cell")
-            .alias("cell")
-        )
-        if it < iters:
-            cent = _cell_mean(assignment, ex)
-    assignment = assignment.localCheckpoint(eager=False)
-    return _cell_mean(assignment, ex), assignment
-
-
 def ann_ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -466,32 +392,14 @@ def ann_ivf_topk(
     only vectors in the ``n_probe`` nearest cells. The probe knob
     trades recall for the fraction of the corpus touched
     (n_probe/n_cells here) — tested against the brute-force
-    baseline."""
-    centroids, assignment = ivf_index(corpus, n_cells, vec_col=vec_col, id_col=id_col)
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
-    )
-    probe_w = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("cell").asc()
-    )
-    probes = (
-        q.join(F.broadcast(centroids))
-        .select(
-            "query_id",
-            "cell",
-            _sq_dist(F.col("qv"), F.col("centroid")).alias("d"),
-        )
-        .withColumn("pr", F.row_number().over(probe_w))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "cell")
-    )
-    cand = (
-        probes.join(assignment, "cell")
-        .filter(F.col("query_id") != F.col("vec_id"))
-        .select("query_id", F.col("vec_id").alias("corpus_id"))
-        .distinct()
-    )
+    baseline. The probe stage is operators/pq.ivfpq_candidates, the
+    one shared with IVF-PQ search."""
+    from convoy_spark.operators.pq import ivfpq_candidates
+
+    # each vector sits in exactly one cell, so the pairs are distinct
+    cand = ivfpq_candidates(
+        queries, corpus, n_cells, n_probe, vec_col, id_col
+    ).withColumnRenamed("vec_id", "corpus_id")
     qv = with_norm(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
         "_qv",
@@ -662,7 +570,7 @@ def knn_graph(
     nearest cells — candidate volume ≈ N·n_probe·target_cell, LINEAR
     in the corpus by construction. Probe ranking is the exact
     floor-scaled centroid distance with the (dist, cell) tiebreak
-    (the ann_ivf_topk probe stage); scoring touches candidates only.
+    (ivfpq_candidates' probe ranking); scoring touches candidates only.
     A vector isolated from its probed cells' members (cell of size 1,
     no second probe) gets no out-edges; it can still appear as a dst.
 
@@ -823,15 +731,12 @@ def semantic_dedup(
     partitionings — full value-hash oracle in queries/similarity.py.
     """
     # ONE exploded frame feeds the k-means loop, the priority
-    # distances, the norms and the pair dots (the _ivf_loop docstring
-    # explains the single-checkpoint discipline); centroids come back
+    # distances, the norms and the pair dots; centroids come back
     # exploded, skipping the array assembly + re-explode round-trip.
     ex = exploded_vectors(corpus, vec_col, id_col).localCheckpoint(
         eager=False
     )
-    cent_ex, assignment = _ivf_loop(
-        ex, corpus.select(F.col(id_col).alias("vec_id")), n_cells, iters
-    )
+    cent_ex, assignment = _coarse_kmeans(ex, corpus, id_col, n_cells, iters)
     scaled = lambda c: (  # noqa: E731
         F.sum(F.floor(c * F.lit(SCORE_SCALE))).cast("double")
         / F.lit(SCORE_SCALE)

@@ -186,11 +186,14 @@ def normalize_users(pages: DataFrame) -> DataFrame:
 def error_rows(pages: DataFrame) -> DataFrame:
     """API-reported errors become first-class rows
     (`1_initial_load.py:153-155,326-329`): the id that failed plus
-    error/error_detail — never dropped."""
+    error/error_detail. An error whose id is not numeric (e.g. a
+    username-lookup error carrying the username in ``value``) has no
+    tweet id and is dropped — ``try_cast`` yields NULL instead of
+    raising CAST_INVALID_INPUT under ANSI mode and aborting the load."""
     e = pages.select(F.explode("errors").alias("e"))
     return e.select(
         F.coalesce(F.col("e.resource_id"), F.col("e.value"))
-        .cast("long")
+        .try_cast("long")
         .alias("tweet_id"),
         F.col("e.title").alias("error"),
         F.col("e.detail").alias("error_detail"),

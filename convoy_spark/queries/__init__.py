@@ -44,876 +44,64 @@ from convoy_spark.queries import (  # noqa: F401,E402
     windows,
 )
 
-# The first 50 entries = the driver's check window. Grouped by SURVEY
-# §2 family; every name here proves at least one operator/component
-# row that no earlier entry already proves.
-#
-# STANDING ROTATION RULE (round-4, after three rounds of window
-# starvation findings): new first-class components enter the window
-# THE ROUND THEY LAND, displacing entries whose operators remain
-# proven by another in-window entry. Round-4 rotation:
-#   IN : repetition_filter, tfidf_topterms, pii_scrub, corpus_funnel,
-#        substring_dup_pairs, bm25_search (new this round)
-#   OUT: session_window_agg  (§2.9 event-time proven by tumbling),
-#        embedding_neardup   (SRP-banded; proven by ann_srp_topk),
-#        pivot_matrix        (extension, no §2 row; 3 rounds green),
-#        ngram_jaccard_pairs (exact-Jaccard verify is exercised
-#                             inside minhash_lsh_neardup's in-window
-#                             sketch-then-verify stage, dedup.py:306),
-#        dataset_split       (the salted-hash split column is
-#                             exercised verbatim inside in-window
-#                             split_contamination, dedup.py:_split_col),
-#        fulltext_search     (§2.8 text-search surface proven by the
-#                             strictly stronger ranked bm25_search)
-# Round-5 rotation:
-#   IN : pca_topk_components (multi-component PCA via deflation),
-#        bm25_multi_query    (BM25 with a query TABLE),
-#        bpe_train_steps     (iterated BPE merge application)
-#   OUT: pca_top_component  (component 0 of the strictly stronger
-#                            in-window pca_topk_components; same
-#                            _centered/_power_iterate/exact-sum path),
-#        bm25_search        (single fixed-term form of the strictly
-#                            stronger in-window bm25_multi_query —
-#                            same scoring pipeline, §2.8 ranked
-#                            surface stays proven),
-#        window_funcs       (extension surface with no §2 row, four
-#                            rounds driver-green; the pivot_matrix
-#                            precedent — stays emulator-checked)
-# Round-5 late swap: bpe_train_vocab (the CLASSIC word-frequency
-# Sennrich trainer — one corpus pass + vocab-table rounds, the
-# scalable form) replaces bpe_train_steps in the window; the
-# corpus-stream variant stays emulator-checked (same merge-pick +
-# greedy-apply machinery, different symbol alphabet). Also
-# approx_percentile_rollup (mergeable quantile sketch, a NEW sketch
-# family) replaces percentile_stats, whose exact interpolated
-# percentiles ride along INSIDE the new query as its value-parity
-# twin columns — the exact surface stays driver-checked.
-# Round-6 rotation (the round-5 late components enter per the rule):
-#   IN : pca_project_topk   (subspace whitening over the deflation
-#                            basis — the PCA family's projection form),
-#        dedup_keep_best    (quality-aware cluster canonicalization),
-#        ngram_contamination (GPT-3-style exact 13-gram train/eval
-#                            overlap),
-#        split_vocab_shift  (TV distance between split token
-#                            distributions)
-#   OUT: ann_ivf_topk       (ANN surface proven by in-window
-#                            ann_srp_topk; IVF recall ≥0.9 pytest
-#                            vs the brute-force oracle stays),
-#        stratified_sample  (its salted-hash machinery is exercised
-#                            verbatim by in-window split_contamination
-#                            — the dataset_split precedent),
-#        tree_engagement    (A5 fold proven by in-window tree_stats —
-#                            same pairs build + keyed aggregation,
-#                            different metric columns; the plain/ur
-#                            duality pytest stays),
-#        top_k_ordered      (T1 sort/top-k proven by the in-window
-#                            ordered-limit tails of bm25_multi_query /
-#                            ann_srp_topk / tfidf_topterms)
-# Round-6 late addition: index_drift_profile (index-freshness drift —
-# the batch twin of streaming/indexdrift.py) enters the round it
-# lands; OUT multi_tweet_conversations (A3's HAVING count > 1 is the
-# complement predicate of in-window singleton_groups' HAVING count = 1
-# — same groupBy+filter plan, inverted comparison; stays
-# emulator-checked).
-# Round-6 loader-prep family (operators/loader.py): pack_sequences and
-# mixture_sample enter (epoch_shuffle stays past-window — it is the
-# same block-prefix-scan machinery as in-window pack_sequences plus
-# the salted-hash threshold split_contamination already proves).
-#   OUT: union_dedup    (T2 union+distinct is exercised inside the
-#                        in-window dedup pipelines — minhash's
-#                        candidate union-distinct, exact_dedup's hash
-#                        distinct; stays emulator-checked),
-#        explode_tokens (U1 array unnest is the same Generate operator
-#                        the in-window token pipelines run on every
-#                        query — tfidf_topterms, token_stats,
-#                        corpus_funnel; stays emulator-checked).
-# Round-6 late rotation (the remaining round-6 first-class components
-# enter the round they land, per the standing rule):
-#   IN : span_dedup           (C4-style duplicated-span removal with
-#                              per-doc reassembly),
-#        model_quality_filter (fastText-architecture hashed-n-gram
-#                              linear scorer),
-#        trigram_lm_score     (corpus-trained trigram LM quality
-#                              score, CCNet's LM filter),
-#        shard_assignment     (token-balanced training-shard plan)
-#   OUT: dedup_clusters    (its connected_components +
-#                           shared_lsh_pairs machinery runs verbatim
-#                           inside in-window dedup_keep_best,
-#                           queries/dedup.py — the cluster ids ARE
-#                           that query's partition keys),
-#        semi_join_filter   (J7 left-semi plan exercised in-window by
-#                           minhash_lsh_neardup's candidate pruning,
-#                           operators/dedup.py:128,303, and
-#                           bm25_multi_query's posting-pruned doclens,
-#                           operators/textops.py:660),
-#        left_join_wide     (J5 LeftOuter + broadcast dims proven by
-#                           in-window ur_enrichment (J4 LeftOuter +
-#                           COALESCE) and dedup_keep_best's left
-#                           joins; stays emulator-checked),
-#        case_analysis      (P2's CaseWhen projection machinery is
-#                           evaluated in-window by conditional_agg's
-#                           CASE-branch aggregates (A1/P11) over the
-#                           same scan shape json_extraction proves;
-#                           stays emulator-checked).
-# Round-6 late addition: semantic_dedup (SemDeDup — embedding-space
-# near-dup removal, the semantic leg of the dedup suite) enters the
-# round it lands; OUT approx_distinct_rollup (A4's multi-agg rollup
-# frame is proven in-window by flagship_conversation_rollup AND
-# approx_percentile_rollup over the same grouping; the HLL sketch
-# stays pinned by its exact-twin tolerance-boolean construction,
-# emulator + pytest — the percentile_stats displacement precedent).
-# Round-6 late addition: dsir_select (DSIR importance resampling —
-# target-vs-raw hashed-n-gram selection, the distribution-matching
-# member of the quality-filter family) enters the round it lands;
-# OUT tfidf_topterms (its postings → df → idf → per-doc score chain
-# is the same scoring machinery in-window bm25_multi_query runs,
-# operators/textops.py shared chain; stays emulator-checked).
-# Round-6 graph-algorithm additions (standing rule):
-#   IN : pagerank_scores      (fixed-point PageRank, iterated keyed
-#                              join+agg — new first-class machinery),
-#        triangle_part_counts (degree-oriented wedge enumeration),
-#        heavy_hitters        (Misra-Gries sketch-then-verify — the
-#                              no-full-vocab-shuffle frequency path)
-#   OUT: pca_project_topk     (projection aggs are the in-window
-#                              pca_topk_components deflation loop's
-#                              own, operators/pca.py:270),
-#        split_vocab_shift    (salted-hash split machinery proven by
-#                              in-window split_contamination; TV
-#                              distance stays emulator+pytest green),
-#        index_drift_profile  (stream==batch whole-table equality
-#                              pytest + the df/avgdl scoring chain is
-#                              in-window via bm25_multi_query).
-# Round-6 loader-family additions (standing rule):
-#   IN : weighted_sample      (DLT priority sampling — deterministic
-#                              weighted without-replacement draw),
-#        curriculum_order     (quality-binned round-robin interleave)
-#   OUT: shard_assignment     (its block-prefix-scan machinery is
-#                              in-window via pack_sequences; the
-#                              token-balance property stays pytest +
-#                              emulator green),
-#        ngram_contamination  (stop-gram-capped gram equi-join proven
-#                              in-window by substring_dup_pairs; the
-#                              eval-overlap variant stays emulator
-#                              green).
-# Round-6 layout addition (standing rule):
-#   IN : zorder_layout        (Morton clustering envelope — the
-#                              OPTIMIZE-ZORDER data-skipping layout,
-#                              integer-exact, SURVEY §4 made
-#                              first-class)
-#   OUT: dedup_first_wins     (S8 first-wins canonicalization is the
-#                              same operators/dedup.py:452 window the
-#                              in-window exact_dedup runs; the
-#                              idempotent-append semantics stay
-#                              emulator + warehouse-pytest green).
-# Round-6 analytics/entity-resolution additions (standing rule):
-#   IN : cohort_retention     (first-activity cohort × day-offset
-#                              retention matrix — integer day buckets,
-#                              one long/long division),
-#        fuzzy_name_pairs     (FastSS edit-distance-1 join: deletion-
-#                              variant equi-join candidates, exact
-#                              levenshtein verify; the oracle is the
-#                              all-pairs form, so the check proves
-#                              candidate COMPLETENESS)
-#   OUT: calendar_projection  (P7 calendar derivations run verbatim in
-#                              the driver's entry() flagship smoke and
-#                              stay emulator-green),
-#        coalesce_preference  (P3: the COALESCE-apply side is in-window
-#                              via ur_enrichment; the URL-unwind side
-#                              is U2 pytest, test_ingest entity edges;
-#                              stays emulator-green).
-# key_skew_profile (join-key skew diagnostic) deliberately registers
-# PAST-window: its machinery is two map-side-combined hash aggs — the
-# plan shape a dozen in-window entries already prove — so it takes no
-# proving slot (the pivot_matrix precedent); emulator-checked.
-# Round-6 temporal-warehouse additions (standing rule):
-#   IN : scd2_snapshot         (SCD type-2 validity intervals from the
-#                               event stream — CDC→dimension history),
-#        interval_merge        (overlap consolidation via keyed
-#                               cumulative max — the non-lag island
-#                               test),
-#        anomaly_zscore        (rolling 3σ flags, division-free exact
-#                               integer formulation),
-#        last_touch_attribution (IGNORE-NULLS last over the preceding
-#                               frame — the same-table as-of),
-#        column_profile        (ANALYZE stats via two-level unpivot
-#                               aggregate — exact NDV without per-
-#                               column reducer funnels)
-#   OUT: root_stats_fastpath  (A7's fast path shares the in-window
-#                              tree_stats forest build; its singleton
-#                              filter is the HAVING-count plan shape
-#                              singleton_groups proves; two rounds
-#                              driver-green, stays emulator-checked),
-#        self_join_parent_child (J1/J2 self-equi-join machinery runs
-#                              verbatim inside in-window
-#                              flagship_conversation_rollup's edge
-#                              build and closure_roots' O1 edge
-#                              derivation, pipeline/warehouse.py:39;
-#                              four rounds driver-green),
-#        filter_suite          (P9 IsNull/IsNotNull filter plans are
-#                              exercised in-window by interval_merge's
-#                              explicit null island test and
-#                              ur_enrichment's left-join null
-#                              handling; four rounds driver-green),
-#        token_stats           (the tokenize Generate+agg machinery
-#                              runs in-window in bpe_train_vocab,
-#                              trigram_lm_score, model_quality_filter
-#                              and heavy_hitters; four rounds green),
-#        text_quality          (the quality-score formula is computed
-#                              in-window INSIDE dedup_keep_best via
-#                              the shared quality_score_sql fragment —
-#                              shared-by-construction, cannot drift;
-#                              four rounds driver-green).
-# Round-6 retrieval/vector-index additions (standing rule):
-#   IN : pq_rerank_topk       (product quantization, the production
-#                              path: 16×32 codebooks trained as one
-#                              keyed Lloyd dataflow, ADC shortlist
-#                              over the compressed code table, exact
-#                              decimal L2 re-rank — sketch-then-
-#                              verify; recall@5 0.99 pytest-asserted),
-#        ann_ivfpq_topk       (the canonical billion-scale IVF-PQ
-#                              composition: coarse-cell prune + ADC),
-#        hybrid_rrf_topk      (reciprocal-rank fusion of the BM25
-#                              query-table leg and the exact-cosine
-#                              leg — the RAG lexical+semantic stack,
-#                              fused ranking fully hash-checked)
-#   OUT: weighted_sample      (the DLT priority draw's machinery —
-#                              one map + TakeOrderedAndProject — is
-#                              in-window via dsir_select's top-n
-#                              selection; the priority construction
-#                              stays pytest + emulator green),
-#        curriculum_order     (the global-rank block prefix scan is
-#                              in-window via pack_sequences — same
-#                              two-phase _blk window + broadcast
-#                              offsets, plan-asserted; interleave
-#                              arithmetic stays emulator green),
-#        cohort_retention     (keyed count-distinct rollup + broadcast
-#                              cohort sizes — the plan shapes are
-#                              in-window via flagship_conversation_
-#                              rollup and broadcast-dim machinery;
-#                              one round driver-green, stays
-#                              emulator + invariant-pytest green).
-# Round-6 final additions (standing rule):
-#   IN : setsim_prefix_join  (exact set-similarity self-join via
-#                             All-Pairs/PPJoin prefix filtering — the
-#                             scalable EXACT near-dup path; the oracle
-#                             is the all-pairs form, so the driver
-#                             check proves pruning losslessness),
-#        token_cooccurrence  (a-priori frequent-pair / collocation
-#                             mining — codegen array pair expansion,
-#                             no self-join; integer-exact lift test),
-#        fk_integrity_audit  (referential-integrity DQ audit over the
-#                             full FK graph — the one-pass left-join
-#                             orphan/null profile; puts an anti-join-
-#                             shaped plan back in the window)
-#   OUT: repetition_filter   (repetition_signals runs VERBATIM inside
-#                             in-window corpus_funnel via the shared
-#                             helper, operators/textops.py — shared-by-
-#                             construction, the text_quality precedent;
-#                             stays emulator-green),
-#        winnow_fingerprints (its Horner-gram content-defined sampling
-#                             is in-window via substring_dup_pairs'
-#                             gram hashing, and the per-doc sliding
-#                             min-window selection is the keyed
-#                             running-window plan anomaly_zscore
-#                             proves; differential pytest vs a pure-
-#                             Python winnower stays, emulator-green),
-#        simhash_neardup     (the pigeonhole block equi-join is the
-#                             banded candidate plan in-window
-#                             minhash_lsh_neardup proves — band key ≡
-#                             bit-block key; the signature fold has a
-#                             naive-reference differential pytest and
-#                             stays emulator-green).
-# kmv_distinct_rollup, pq_adc_topk and retrieval_metrics deliberately
-# register PAST-window: the KMV sketch's exact-twin +
-# tolerance-boolean construction is the in-window
-# approx_percentile_rollup pattern (and unlike the HLL entry it is
-# fully hash-checked in the emulator); pq_adc_topk is the raw-rank
-# subset of in-window pq_rerank_topk; retrieval_metrics' every plan
-# stage (the shared cosine_ranks_fast chain, rank-survivor joins,
-# dsum rollups) runs in-window inside hybrid_rrf_topk and the
-# aggregate suites — the metric arithmetic itself is
-# numpy-differential-tested and emulator-checked; classifier_eval's
-# prediction leg IS the in-window lang_id pipeline (shared
-# _LANGID_CHAIN_SQL oracle fragment) and its metric stage is
-# constant-size joins — separability + accounting pytests +
-# emulator-checked; snapshot_diff is one pk-keyed full outer join
-# (in-window via hybrid_rrf_topk's fusion join) + a keyed rollup —
-# accounting pytest + emulator-checked (the key_skew_profile
-# no-proving-slot precedent); column_histogram likewise (one keyed
-# ntile window + keyed agg — the window_funcs/percentile_stats
-# machinery, equi-depth invariants pytest).
-# Round-6 closing-session past-window registrations (each takes no
-# proving slot by the key_skew_profile / kmv precedents; sibling
-# proofs in the docstrings): event_funnel_conversion (user-keyed min
-# aggs + range-filtered keyed joins — flagship/asof/interval shapes),
-# sorted_neighborhood_pairs (rank-window DEFINITION oracle; the
-# range_rank exchange + per-partition window is pack_sequences' block
-# scan family; exact verify = fuzzy_name_pairs' levenshtein),
-# local_supplier_volume / shipping_priority (broadcast-dim star join +
-# TakeOrderedAndProject — broadcast_dim_rollup/top-k tails in-window),
-# count_min_freq (exact-twin + tolerance-boolean sketch construction
-# in-window via approx_percentile_rollup; keyed-agg/broadcast plans
-# throughout).
-# Round-7 rotation (the round-6 verdict's #2: clear the rotation debt —
-# ALL SIX displaced round-6 components re-enter; each OUT has its
-# operators proven by an in-window sibling, several by the exact
-# INVERSE of the round-6 displacement argument):
-#   IN : shard_assignment    (token-balanced shard plan),
-#        epoch_shuffle       (deterministic per-epoch permutation),
-#        ngram_contamination (GPT-3-style 13-gram train/eval overlap),
-#        split_vocab_shift   (TV distance between split token dists),
-#        pca_project_topk    (subspace projection/whitening — runs the
-#                             deflation loop via the SINGLE
-#                             _deflation_iterates definition,
-#                             operators/pca.py:181),
-#        index_drift_profile (index-freshness drift, batch twin of
-#                             streaming/indexdrift.py)
-#   OUT: pack_sequences      (its block-prefix-scan is the same
-#                             two-phase _blk window + broadcast offsets
-#                             now in-window TWICE via epoch_shuffle and
-#                             shard_assignment — the inverse of the
-#                             round-6 argument; packing arithmetic
-#                             stays pytest + emulator green),
-#        substring_dup_pairs (stop-gram-capped gram equi-join + verify
-#                             proven in-window by ngram_contamination —
-#                             the inverse of the round-6 displacement;
-#                             content-defined sampling stays pinned by
-#                             the winnow differential pytest, emulator
-#                             green),
-#        split_contamination (salted-hash split in-window via
-#                             split_vocab_shift — the inverse argument;
-#                             its banded LSH cross-split join is
-#                             in-window via minhash_lsh_neardup, the
-#                             same shared_lsh_pairs frame; stays
-#                             emulator green),
-#        pca_topk_components (the deflation loop is in-window INSIDE
-#                             pca_project_topk via _deflation_iterates
-#                             — the inverse of the round-6 argument;
-#                             component output stays emulator green),
-#        ann_ivfpq_topk      (PQ codebooks/ADC shortlist/re-rank
-#                             in-window via pq_rerank_topk; the IVF
-#                             coarse-cell prune is in-window via
-#                             semantic_dedup's IVF cells and pinned by
-#                             the IVF recall pytest; composition stays
-#                             emulator green),
-#        last_touch_attribution (keyed ordered-window machinery
-#                             in-window via anomaly_zscore's running
-#                             prefix frames and scd2_snapshot's
-#                             lead/validity windows; the IGNORE-NULLS
-#                             last semantics stay emulator green +
-#                             pytest).
-# Round-7 addition (standing rule — new first-class components enter
-# the round they land):
-#   IN : pq_recall_sweep     (recall-vs-n_probe operating curve for
-#                             the IVF-PQ index: per-point candidate
-#                             volume + coarse-prune ceiling
-#                             (cand_recall) + final ADC recall against
-#                             the exact scaled-long L2 truth — the
-#                             retrieval-quality harness of round-6
-#                             verdict #7; candidate stage shared with
-#                             ann_ivfpq_topk by construction via
-#                             operators/pq.py::ivfpq_candidates)
-#   OUT: fuzzy_name_pairs    (the all-pairs-completeness-oracle
-#                             pattern is in-window via
-#                             setsim_prefix_join, whose oracle is
-#                             likewise the naive all-pairs form; the
-#                             FastSS deletion-variant equi-join is a
-#                             keyed equi-join plan a dozen in-window
-#                             entries prove, and the exact levenshtein
-#                             verify stays pytest + emulator green).
-# Round-7 addition (standing rule):
-#   IN : lsh_band_sweep      (banding operating curve for the MinHash
-#                             sketch — per-r candidate volume, recall
-#                             and precision against the EXACT Jaccard
-#                             truth from the lossless prefix join; the
-#                             pq_recall_sweep pattern applied to the
-#                             dedup family)
-#   OUT: heavy_hitters       (the Arrow mapInPandas escape hatch —
-#                             §2.10 — is in-window via
-#                             media_decode_meta; the tokenize/explode
-#                             scan and the exact-recount semi join are
-#                             in-window via the token pipelines and
-#                             minhash's candidate pruning; the
-#                             Misra-Gries superset-exactness contract
-#                             stays pytest + emulator green).
-# Round-7 addition (standing rule):
-#   IN : pq_opq_compare      (OPQ-style variance-balanced subspace
-#                             permutation A/B — a SECOND independently
-#                             trained quantizer under a dimension
-#                             permutation, measured against the exact
-#                             L2 truth; recall 0.45→0.51 on this
-#                             corpus, so the harness detects real
-#                             anisotropy, not just parity)
-#   OUT: token_cooccurrence  (its codegen array pair expansion is the
-#                             in-window setsim_prefix_join verify
-#                             shape; the two map-side-combined keyed
-#                             aggs are the plan shape a dozen
-#                             in-window entries prove; the a-priori
-#                             lift test stays emulator + pytest
-#                             green).
-# Round-7 addition (standing rule):
-#   IN : stupid_backoff_score (Brants et al. 2007 Stupid Backoff —
-#                             the distributed-LM smoothing scheme:
-#                             trigram→bigram→unigram relative
-#                             frequencies with the α=0.4 multiplier,
-#                             counts trained on the salted TRAIN
-#                             split so eval docs genuinely back off;
-#                             all three levels fire on the corpus —
-#                             54 bigram-level docs, 1 unigram-floor —
-#                             and the branch arithmetic is pinned by
-#                             a constructed-corpus pytest)
-#   OUT: trigram_lm_score    (its plan shapes — trigram-keyed corpus
-#                             agg, posting-style equi-joins back to
-#                             the doc stream, doc-keyed mean — run
-#                             in-window inside the strictly richer
-#                             stupid_backoff_score; the decimal-mean
-#                             discipline is in-window via the davg
-#                             aggregate suites; stays emulator +
-#                             python-reference pytest green).
-# Round-7 late additions (standing rule — land, enter):
-#   IN : bloom_decontaminate (the broadcast-bitset decontamination
-#                             scale path: bit_or-aggregated 63-bit
-#                             words, map-side forall probes, exact
-#                             verify — the oracle rebuilds the bitset
-#                             bit-for-bit so the driver hash checks
-#                             the false-positive arithmetic itself)
-#   IN : linear_probe_train  (distributed TRAINING enters the window:
-#                             a one-vs-rest batch perceptron whose
-#                             scaled-long update recurrence is fully
-#                             unrolled in the oracle — weights,
-#                             margins, argmax and the held-out
-#                             confusion all value-hash-checked)
-#   OUT: dedup_keep_best     (driver-green r6; its keep-best rank
-#                             window is the per-key rank plan shape
-#                             in-window via hybrid_rrf_topk /
-#                             bm25_multi_query, and its cluster
-#                             machinery — connected_components over
-#                             the shared LSH pairs — stays in-window
-#                             via closure_roots (the same
-#                             pointer-jumping operator) +
-#                             minhash_lsh_neardup (the pair graph);
-#                             this also keeps the r6-late
-#                             dedup_clusters OUT-proof intact, which
-#                             pointed at dedup_keep_best; both stay
-#                             emulator-checked)
-#   OUT: split_vocab_shift   (driver-green r6; its salted split runs
-#                             in-window verbatim inside
-#                             ngram_contamination AND the new
-#                             bloom_decontaminate; the decimal-exact
-#                             TV-distance sum is the dsum discipline
-#                             proven across the in-window aggregate
-#                             suites; stays emulator-checked)
-#   IN : random_forest_train (ensemble CART as ONE keyed dataflow —
-#                             tree id widens every aggregate key, the
-#                             pq.py 16-codebooks precedent; salted
-#                             bagging + hash-ranked feature subsets
-#                             derandomize Breiman's two choices, so
-#                             all 5 trained trees are value-hash-
-#                             checked; completes the trainable-filter
-#                             pair with linear_probe_train. Its
-#                             single-tree special case
-#                             cart_quality_tree landed the same day
-#                             and rotates straight past-window — the
-#                             strictly-stronger precedent
-#                             (bm25_search/bpe_train_steps): both run
-#                             the SAME _grow/_best_splits dataflow
-#                             (operators/cart.py), the tree just
-#                             pins tree=0/no-bag/all-features; stays
-#                             emulator + planted-rule-pytest green)
-#   IN : isoforest_outliers  (derandomized isolation forest — the
-#                             content-side MULTIVARIATE outlier
-#                             detector, trees+routing+ranking all
-#                             value-hash-checked; enters per the
-#                             standing rule)
-#   OUT: anomaly_zscore      (driver-green r6; the temporal rolling
-#                             anomaly stays — its two-phase block
-#                             prefix-sum machinery is in-window
-#                             verbatim via pack_sequences
-#                             (block_prefix_sum is the shared
-#                             primitive) and the z-flag projection is
-#                             scan-side arithmetic; stays emulator-
-#                             checked, streaming scd/eventfunnel
-#                             pytests untouched)
-#   OUT: index_drift_profile (driver-green r6; its plan shapes each
-#                             stay in-window — the rational idf via
-#                             bm25_multi_query, cumulative windows
-#                             via anomaly_zscore's prefix sums and
-#                             now cart_quality_tree's cumulative
-#                             class counts, broadcast grid joins
-#                             across the sketch suites; the streaming
-#                             drift twin keeps its stream==batch
-#                             pytest; stays emulator-checked)
-# Round-8 rotation (standing rule + round-7 verdict #3's debt
-# schedule — three r7-OUT debt items return, and the two new round-8
-# components enter the round they land):
-#   IN : knn_adc_label_eval   (the PRODUCTION kNN composition: ADC
-#                              shortlist off the shared PQ index,
-#                              exact re-rank of train survivors, 5-NN
-#                              vote — the documented swap of
-#                              knn_label_eval, now value-hash-checked),
-#        semantic_dedup_scaled (SemDeDup under the paper's n_cells∝N
-#                              cost contract — the deploy shape,
-#                              dynamic-seed-LIMIT oracle),
-#        dedup_keep_best      (debt: quality-aware cluster
-#                              canonicalization, r6 driver-green),
-#        anomaly_zscore       (debt: rolling 3σ flags — restores the
-#                              keyed running-prefix window the r7-late
-#                              OUT argument pointed at pack_sequences
-#                              for, which itself rotated out),
-#        index_drift_profile  (debt: index-freshness drift, batch twin
-#                              of streaming/indexdrift.py)
-#   OUT: semantic_dedup       (the pinned-16-cells worst case: its
-#                              ENTIRE dataflow — ivf loop, priority
-#                              rank, per-pair dots, keep rule — runs
-#                              verbatim in-window via
-#                              semantic_dedup_scaled, which is
-#                              BIT-IDENTICAL at the driver's sf0.01
-#                              (the max(16, N//64) floor); stays
-#                              emulator + sf0.1-parity-pytest green),
-#        pq_rerank_topk       (its ADC scan + two-phase shortlist +
-#                              decimal exact re-rank run in-window
-#                              via the strictly richer
-#                              knn_adc_label_eval (same shared index,
-#                              same sketch-then-verify stages, plus
-#                              the vote/confusion tail) and the ADC
-#                              rank surface via pq_recall_sweep;
-#                              recall@5=0.99 pytest stays),
-#        ngram_contamination  (its capped 13-gram + split universe is
-#                              the _NGRAM13_CTES fragment bloom_
-#                              decontaminate runs IN-WINDOW by
-#                              construction — shared-fragment
-#                              precedent (text_quality); the
-#                              posting-style hash equi-join plan
-#                              shape is in-window via
-#                              minhash_lsh_neardup's banded join and
-#                              setsim_prefix_join's prefix postings;
-#                              stays emulator-green),
-#        epoch_shuffle        (its two-phase block-prefix scan — the
-#                              _blk window + broadcast offsets — runs
-#                              in-window via mixture_sample, and the
-#                              salted-hash permutation key is the
-#                              split/salt machinery in-window via
-#                              bloom_decontaminate's split and
-#                              linear_probe_train's salted split;
-#                              stays emulator-green),
-#        shard_assignment     (same block-prefix + broadcast-offset
-#                              machinery via in-window mixture_sample
-#                              — the r6-late precedent that then
-#                              cited pack_sequences; token counting
-#                              via the in-window corpus_funnel/lang_id
-#                              token pipelines; token-balance
-#                              property stays pytest + emulator
-#                              green).
-# Round-8 late addition (standing rule — new first-class machinery
-# enters the round it lands):
-#   IN : suffix_repeat_profile (EXACT cross-doc repeated-window audit
-#                              via distributed prefix doubling — the
-#                              Manber-Myers suffix ranking as log2(L)
-#                              rounds of range_rank + pair joins, the
-#                              exact completion of the sampled span
-#                              members; genuinely NEW machinery: the
-#                              iterated global dense rank)
-#   OUT: dsir_select          (driver-green r6-r7; its hashed-n-gram
-#                              bucket machinery is the in-window
-#                              model_quality_filter's scorer
-#                              architecture, its two-corpus count
-#                              ratio tables are the in-window
-#                              stupid_backoff_score's relative-
-#                              frequency tables, and its top-n
-#                              selection is the TakeOrderedAndProject
-#                              tail in-window via bm25_multi_query /
-#                              ann_srp_topk; stays emulator + pytest
-#                              green).
-# Round-9 rotation (standing rule + round-8 verdict #3's debt
-# schedule — the FOUR oldest debt items return, each re-verified
-# hash-green before entering, and the new round-9 composition enters
-# the round it lands):
-#   IN : fuzzy_name_pairs     (debt, OUT since r7: FastSS deletion-
-#                              variant join + exact levenshtein verify;
-#                              all-pairs completeness oracle),
-#        heavy_hitters        (debt, OUT since r7: Misra-Gries
-#                              sketch-then-exact-recount — restores the
-#                              Arrow mapInPandas §2.10 surface to TWO
-#                              in-window rows),
-#        token_cooccurrence   (debt, OUT since r7: a-priori collocation
-#                              mining, codegen pair expansion),
-#        last_touch_attribution (debt, OUT since r7: IGNORE-NULLS last
-#                              over the preceding frame — the same-table
-#                              as-of; restores the keyed ordered-window
-#                              row the anomaly_zscore OUT below leans
-#                              on),
-#        community_rollup     (NEW r9: LPA communities joined back to
-#                              the fact stream — per-community
-#                              size/volume/reach/revenue profile, the
-#                              consumer composition the LPA docstring
-#                              promised; full hash oracle via the
-#                              shared _LPA_CHAIN fragment)
-#   OUT: dedup_keep_best      (driver-green r6 AND r8; same sibling
-#                              proofs as its r7-late OUT: the keep-best
-#                              rank window via hybrid_rrf_topk /
-#                              bm25_multi_query's per-key ranks, the
-#                              cluster machinery via closure_roots +
-#                              minhash_lsh_neardup; stays
-#                              emulator-checked),
-#        anomaly_zscore       (driver-green r6 AND r8; its keyed
-#                              running-prefix windows are in-window via
-#                              the RETURNING last_touch_attribution's
-#                              preceding-frame window and
-#                              mixture_sample's block prefix scans; the
-#                              z-flag arithmetic is scan-side; stays
-#                              emulator-checked),
-#        index_drift_profile  (driver-green r6 AND r8; rational idf via
-#                              bm25_multi_query, validity/lead windows
-#                              via scd2_snapshot, delta-store
-#                              stream==batch pytest stays; stays
-#                              emulator-checked),
-#        pq_opq_compare       (driver-green r7 AND r8; both A/B legs
-#                              run the SAME pq_codebooks keyed-Lloyd
-#                              dataflow in-window via pq_recall_sweep's
-#                              shared index and knn_adc_label_eval's
-#                              ADC+re-rank; the measured-vs-truth
-#                              harness pattern stays in-window via
-#                              pq_recall_sweep itself; the balanced
-#                              permutation keeps its variance-ranking
-#                              pytest; stays emulator-checked),
-#        isoforest_outliers   (driver-green r7 AND r8; its derandomized
-#                              ensemble growth is operators/cart.py's
-#                              _grow keyed dataflow in-window via
-#                              random_forest_train — tree id in every
-#                              aggregate key — and its routing/ranking
-#                              windows are the per-key rank plan a
-#                              dozen in-window entries prove; stays
-#                              emulator + anomaly-separation pytest
-#                              green).
-# Round-9 late additions (standing rule — new first-class machinery
-# enters the round it lands):
-#   IN : knn_graph_ivf        (the k-NN GRAPH over embeddings:
-#                              IVF-cell candidates under the SemDeDup
-#                              n_cells∝N cost contract, exact
-#                              floor-scaled cosine verify, per-node
-#                              top-k — the curation asset semantic
-#                              clustering / graph dedup consume; full
-#                              hash oracle, hash-verified at sf0.01
-#                              AND sf0.1 before entering),
-#        semantic_communities (LPA over the symmetrized k-NN graph —
-#                              semantic clustering, the composition
-#                              the graph exists for; oracle = the
-#                              k-NN CTEs + the SAME unrolled LPA
-#                              chain the co-purchase queries share)
-#   OUT: semantic_dedup_scaled (driver-green r8; its scaled-cells
-#                              k-means unroll and cell-confined
-#                              floor-scaled pair-dot stage now run
-#                              in-window VERBATIM inside
-#                              knn_graph_ivf — the same
-#                              _SCALED_CELLS_SQL seed subquery and
-#                              the same pair-dot CTE shape, the
-#                              shared-fragment precedent; the
-#                              keep-the-outlier priority window is
-#                              the per-key rank plan a dozen
-#                              in-window entries prove; stays
-#                              emulator + sf0.1-parity-pytest green),
-#        pq_recall_sweep      (driver-green r7/r8; its candidate
-#                              stage is operators/pq.py::
-#                              ivfpq_candidates — the probe-rank +
-#                              cell-equi-join plan now in-window via
-#                              knn_graph_ivf's probe/candidate
-#                              stages; its ADC scoring surface is
-#                              in-window via knn_adc_label_eval (the
-#                              shared index's ADC + shortlist); the
-#                              sweep-the-operating-curve harness
-#                              pattern stays in-window via
-#                              lsh_band_sweep; emulator-checked).
-# Round-10 rotation (standing rule + round-9 verdict #3's debt
-# schedule — the FOUR oldest debt items return, each re-verified
-# hash-green at sf0.01 before entering, and the new round-10
-# composition enters the round it lands):
-#   IN : trigram_lm_score     (debt, OUT since r7: corpus-trained
-#                              trigram LM quality score — CCNet's LM
-#                              filter; its richer sibling
-#                              stupid_backoff_score KEEPS its own row,
-#                              so the LM family now has both forms
-#                              driver-checked),
-#        cart_quality_tree    (debt, landed r7-late straight
-#                              past-window — this is its FIRST driver
-#                              row: the single-tree CART special case
-#                              of in-window random_forest_train, same
-#                              _grow/_best_splits dataflow),
-#        split_vocab_shift    (debt, OUT since r7-late: TV distance
-#                              between split token distributions over
-#                              the salted-hash split),
-#        semantic_dedup       (debt, OUT since r8: SemDeDup in the
-#                              pinned-16-cells worst-case config; the
-#                              scaled form's fragments stay in-window
-#                              via knn_graph_ivf),
-#        community_text_profile (NEW r10: the knng composition the
-#                              round-9 verdict #6 asked for —
-#                              semantic-community LPA labels joined to
-#                              the documents table's token/quality
-#                              stats, two-level exact-mergeable
-#                              aggregation, corpus-mean broadcast,
-#                              flagged_flood template-farm signal;
-#                              ALSO restores quality_score_sql's
-#                              in-window carrier, which the r9
-#                              dedup_keep_best OUT had weakened;
-#                              hash-verified at sf0.01 AND sf0.1
-#                              before entry)
-#   OUT: pii_scrub            (driver-green r4–r9, six rounds — the
-#                              longest-tenured rotatable row: its plan
-#                              is scan-side chained regexp_replace
-#                              projections, the shape every in-window
-#                              text query runs (lang_id's regex
-#                              tokenize, scalar_surface's §2.8 string
-#                              surface); the PII pattern semantics
-#                              stay pytest (leftmost-ordering tests) +
-#                              emulator green),
-#        scd2_snapshot        (driver-green r6–r9; its lead/validity
-#                              keyed ordered windows are in-window via
-#                              last_touch_attribution's preceding-
-#                              frame window — NOTE this also replaces
-#                              scd2 as the named sibling in the r9
-#                              index_drift_profile OUT-proof; the CDC
-#                              interval semantics stay pytest +
-#                              streaming stream==batch green),
-#        interval_merge       (driver-green r6–r9; keyed cumulative-
-#                              max running window in-window via
-#                              last_touch_attribution + mixture_
-#                              sample's block prefix scans; its null
-#                              island test's filter shapes stay
-#                              in-window via ur_enrichment — the
-#                              filter_suite OUT-proof's other named
-#                              sibling; stays emulator green),
-#        column_profile       (driver-green r6–r9; two-level unpivot
-#                              aggregate — the stack projection is
-#                              scan-side, the exact-NDV key pre-agg is
-#                              the fk_integrity_audit in-window shape;
-#                              stays emulator green),
-#        zorder_layout        (driver-green r6–r9; Morton interleave
-#                              is scan-side integer bit arithmetic —
-#                              the codegen integer discipline
-#                              in-window via pagerank_scores' fixed-
-#                              point iterates — and its clustering
-#                              envelope is a range_rank + keyed
-#                              min/max agg, the block-scan family
-#                              in-window via mixture_sample; the
-#                              z-value correctness stays pinned by the
-#                              python-morton differential pytest,
-#                              emulator green).
-# Round-10 LATE rotation (standing rule: a new component enters the
-# round it lands):
-#   IN : pq_retrain_trigger   (NEW r10: the incremental PQ re-train
-#                              decision surface — epoch-sharded mean
-#                              quantization error under the frozen
-#                              epoch-0 codebook, drift ratio, fired
-#                              flag; the streaming twin
-#                              streaming/pqretrain.py shares the ONE
-#                              trigger_surface derivation and is
-#                              stream==batch bitwise-tested;
-#                              hash-verified at sf0.001 AND sf0.01
-#                              before entry)
-#   OUT: approx_percentile_rollup (driver-green r2–r9, one of the
-#                              longest-tenured rows: its A4 multi-agg
-#                              conversation-rollup surface keeps its
-#                              in-window carrier via
-#                              flagship_conversation_rollup — the
-#                              VERDICT coverage table already lists
-#                              both for A4 — and the SKETCH-family
-#                              surface (mergeable summaries + exact
-#                              cross-checks) keeps its in-window
-#                              carrier via heavy_hitters (this also
-#                              refreshes the count_min_freq OUT-proof,
-#                              whose round-6 note named approx_
-#                              percentile_rollup as the sibling); the
-#                              percentile mergeability semantics stay
-#                              pinned by pytest + emulator green).
+# The first 50 entries = the correctness pass's check window. Each entry proves
+# at least one operator/component row that no earlier entry proves.
+# Rotation rule: a new first-class component enters the window the
+# round it lands, displacing an entry whose operators another in-window
+# entry still proves; the displaced query stays callable, pytest- and
+# emulator-checked. The rotation history is in git.
 _CHECK_WINDOW = [
-    # §2.3/§2.8 aggregates + SQL front door (two_pass_mad is past the
-    # window: A6/P13 two-pass MAD is proven by tree_metric_mad)
-    "pricing_summary",
-    "flagship_conversation_rollup",
-    "conditional_agg",
-    "sql_interface",
-    # §2.9 event-time windows (session/sliding_window_agg are past
-    # the window: tumbling proves the event-time surface)
-    "tumbling_window_agg",
-    # time-series joins (range_bucket_join is past the window: asof
-    # proves the time-series-join surface; range join is an extension)
-    "asof_join",
-    # §2.5 graph / closure
-    "closure_roots",
-    "ur_enrichment",
-    # §2.3 A5–A8 tree statistics (the reference's crown jewel;
-    # tree_engagement / ur_tree_duality / root_stats_fastpath are past
-    # the window — the A5 fold is proven by tree_stats, the plain/ur
-    # duality by pytest, A7's singleton filter by singleton_groups)
-    "tree_stats",
-    "tree_metric_mad",
-    # §2.3 grouping/filter relational
-    "singleton_groups",
-    # §2.2 projections
-    "json_extraction",
-    "scalar_surface",
-    # §2.8 text search (ranked retrieval)
-    "bm25_multi_query",
-    # text analysis components
-    "lang_id",
-    # round-3 text/quality flagships (rotated in r4 per standing rule)
-    "trigram_lm_score",
-    "corpus_funnel",
-    "model_quality_filter",
-    "stupid_backoff_score",
-    # dedup + dataset-management components
-    "exact_dedup",
-    "minhash_lsh_neardup",
-    "setsim_prefix_join",
-    "span_dedup",
-    "suffix_repeat_profile",
-    "lsh_band_sweep",
-    "bloom_decontaminate",
-    "split_vocab_shift",
-    # similarity / embedding components (cosine_topk is past the
-    # window: it is the brute-force recall ORACLE for the ANN entries;
-    # ann_ivf_topk rotated out round 6 — the ANN surface is proven by
-    # ann_srp_topk and the IVF recall pytest; the PCA family is the
-    # embedding-decomposition capability, deflation + projection)
-    "ann_srp_topk",
-    "pca_project_topk",
-    "linear_probe_train",
-    # round-9 late: the k-NN graph + semantic clustering composition
-    "knn_graph_ivf",
-    "semantic_communities",
-    "semantic_dedup",
-    "community_text_profile",
-    # graph algorithms + frequency sketch (round-6 additions;
-    # community_rollup is the round-9 LPA composition)
-    "pagerank_scores",
-    "triangle_part_counts",
-    "community_rollup",
-    "heavy_hitters",
-    # multimodal plumbing
-    "media_decode_meta",
-    # tokenizer-training loop (classic word-frequency BPE trainer)
-    "bpe_train_vocab",
-    "random_forest_train",
-    "cart_quality_tree",
-    # loader-prep family: packing + target-mixture sampling +
-    # weighted draw + curriculum interleave
-    "mixture_sample",
-    # physical layout (SURVEY §4)
-    # warehouse data-quality audit (round-6 final)
-    "fk_integrity_audit",
-    # product quantization + hybrid retrieval (round-6 late;
-    # pq_retrain_trigger is the round-10 index-health composition)
-    "knn_adc_label_eval",
-    "pq_retrain_trigger",
-    "hybrid_rrf_topk",
-    # entity resolution + collocation mining (round-9 debt returns)
-    "fuzzy_name_pairs",
-    "token_cooccurrence",
-    # temporal-warehouse family (round-6 additions;
-    # last_touch_attribution is the round-9 debt return)
-    "last_touch_attribution",
+    "pricing_summary",  # §2.3/§2.8 grouped exact-decimal aggregates
+    "flagship_conversation_rollup",  # A4 multi-agg conversation rollup
+    "conditional_agg",  # A1/P11 CASE-branch aggregates
+    "sql_interface",  # the SQL front door over registered views
+    "tumbling_window_agg",  # §2.9 event-time windows
+    "asof_join",  # time-series as-of join
+    "closure_roots",  # §2.5 ur-conversation closure by pointer jumping
+    "ur_enrichment",  # J4 LeftOuter + COALESCE enrichment by closure roots
+    "tree_stats",  # A5 tree-statistics fold over the shared forest build
+    "tree_metric_mad",  # A6/P13 two-pass MAD per tree
+    "singleton_groups",  # A7 HAVING count = 1 grouping filter
+    "json_extraction",  # §2.2 JSON-path projections
+    "scalar_surface",  # §2.2 scalar function surface
+    "bm25_multi_query",  # §2.8 ranked text search with a query table
+    "lang_id",  # language identification
+    "trigram_lm_score",  # corpus-trained trigram LM quality score (CCNet)
+    "corpus_funnel",  # the staged quality-filter funnel
+    "model_quality_filter",  # fastText-style hashed-n-gram linear scorer
+    "stupid_backoff_score",  # Stupid Backoff distributed-LM smoothing
+    "exact_dedup",  # hash-exact dedup, S8 first-wins window
+    "minhash_lsh_neardup",  # MinHash-LSH sketch-then-verify near-dup
+    "setsim_prefix_join",  # exact set-similarity join by prefix filtering
+    "span_dedup",  # C4-style duplicated-span removal with reassembly
+    "suffix_repeat_profile",  # exact repeated-window audit by prefix doubling
+    "lsh_band_sweep",  # MinHash banding operating curve vs exact Jaccard
+    "bloom_decontaminate",  # broadcast-bitset train/eval decontamination
+    "split_vocab_shift",  # salted-hash splits + TV distance of vocabularies
+    "ann_srp_topk",  # banded SRP-LSH ANN; cosine_topk is its recall oracle
+    "pca_project_topk",  # PCA deflation basis + projection apply-step
+    "linear_probe_train",  # distributed training: one-vs-rest batch perceptron
+    "knn_graph_ivf",  # k-NN graph over IVF-cell candidates (the IVF index)
+    "semantic_communities",  # LPA over the k-NN graph
+    "semantic_dedup",  # SemDeDup: within-cell cosine near-dup removal
+    "community_text_profile",  # semantic clusters joined back to their text
+    "pagerank_scores",  # fixed-point PageRank
+    "triangle_part_counts",  # degree-oriented triangle counting
+    "community_rollup",  # LPA communities rolled up over the fact side
+    "heavy_hitters",  # Misra-Gries sketch-then-verify frequencies
+    "media_decode_meta",  # multimodal decode plumbing
+    "bpe_train_vocab",  # word-frequency BPE tokenizer training loop
+    "random_forest_train",  # ensemble CART as one keyed dataflow
+    "cart_quality_tree",  # single CART quality classifier
+    "mixture_sample",  # loader prep: salted-hash target-mixture sampling
+    "fk_integrity_audit",  # warehouse FK orphan/null audit
+    "knn_adc_label_eval",  # PQ ADC shortlist + exact re-rank + 5-NN labels
+    "pq_retrain_trigger",  # PQ index-health drift and re-train decision
+    "hybrid_rrf_topk",  # BM25 + exact-cosine reciprocal-rank fusion
+    "fuzzy_name_pairs",  # FastSS edit-distance-1 entity resolution
+    "token_cooccurrence",  # collocation mining
+    "last_touch_attribution",  # temporal warehouse: IGNORE-NULLS as-of window
 ]
-
 
 def _reorder() -> None:
     assert len(_CHECK_WINDOW) == 50, len(_CHECK_WINDOW)

@@ -233,7 +233,7 @@ def _ivf_kmeans_ctes(seed_limit: str | None = None) -> list[str]:
     for t in range(1, IVF_PASSES + 1):
         parts.append(f"""
     d{t} AS (
-      -- floor-scaled LONG sums (mirrors operators.similarity._ivf_loop):
+      -- floor-scaled LONG sums (mirrors operators.pq.lloyd/_assign):
       -- decimal casts of raw float32-derived values are a half-up vs
       -- half-even TIE hazard across engines (coarse dyadics like
       -- 0.1871337890625 round differently at DECIMAL(28,12)); floor
@@ -1165,7 +1165,7 @@ def _pq_kmeans_ctes(prefix: str = "", evs_body: str | None = None) -> list[str]:
       ) WHERE rk = 1
     ),
     {P}pc{t} AS (
-      -- floor-scaled mean (operators.similarity._cell_mean rationale:
+      -- floor-scaled mean (operators.pq._update rationale:
       -- DECIMAL casts of raw x are a cross-engine rounding-tie hazard)
       SELECT a.sub, a.cell, e.dsub,
              CAST(SUM(CAST(FLOOR(e.x * {_ADC_SCALE}) AS BIGINT)) AS DOUBLE)

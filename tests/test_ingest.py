@@ -75,6 +75,9 @@ def landing(spark, tmp_path_factory):
         "errors": [
             {"resource_id": "777", "title": "Not Found Error",
              "detail": "Could not find tweet with ids: [777]."},
+            # a username lookup: no tweet id, so no error row
+            {"value": "no_such_user", "title": "Not Found Error",
+             "detail": "Could not find user with usernames: [no_such_user]."},
         ],
     }
     lines = [json.dumps(page1), "{ this is not json !!!"]

@@ -54,6 +54,42 @@ def test_pq_codes_partitioning_independent(spark):
     assert c1 == c2
 
 
+def test_wide_and_row_shapes_agree(spark):
+    """The two physical shapes PQ_WIDE_MIN_ROWS selects between give
+    identical results; no fixture reaches the threshold, so both are
+    forced here. _assign at the PQ geometry and at one subspace with
+    16 cells (the IVF coarse quantizer's shape), also with a cell
+    missing from the codebook (the wide form's NULL-column sentinel);
+    _adc_scored batched and unbatched."""
+    from convoy_spark.operators.pq import (
+        _adc_scored,
+        _assign,
+        _sub_exploded,
+        adc_table,
+    )
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    for n_sub, ks in ((PQ_SUB, PQ_KS), (1, 16)):
+        cent, _, ex = pq_codebooks(emb, n_sub=n_sub, ks=ks)
+        for cb in (cent, cent.filter(F.col("cell") != 3)):
+            assert rows(_assign(ex, cb, ks, wide=True)) == rows(
+                _assign(ex, cb, ks, wide=False)
+            )
+    cent, codes, _ = pq_codebooks(emb)
+    ds = len(emb.first().embedding) // PQ_SUB
+    q_ex = _sub_exploded(
+        emb.filter(F.col("vec_id") < 8), ds, "embedding", "vec_id"
+    )
+    dtab = adc_table(q_ex, cent)
+    assert rows(_adc_scored(codes, dtab, batched=True)) == rows(
+        _adc_scored(codes, dtab, batched=False)
+    )
+
+
 def test_pq_rerank_parity(spark, duck):
     run_parity(spark, duck, "pq_rerank_topk")
 
