@@ -387,18 +387,21 @@ def ann_ivf_topk(
     n_probe: int = 4,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
+    coarse_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """IVF search: rank cells per query by centroid distance, score
     only vectors in the ``n_probe`` nearest cells. The probe knob
     trades recall for the fraction of the corpus touched
     (n_probe/n_cells here) — tested against the brute-force
     baseline. The probe stage is operators/pq.ivfpq_candidates, the
-    one shared with IVF-PQ search."""
+    one shared with IVF-PQ search; ``coarse_index`` is a prebuilt
+    :func:`ivf_index` of ``corpus`` (trained here when omitted)."""
     from convoy_spark.operators.pq import ivfpq_candidates
 
     # each vector sits in exactly one cell, so the pairs are distinct
     cand = ivfpq_candidates(
-        queries, corpus, n_cells, n_probe, vec_col, id_col
+        queries, corpus, n_cells, n_probe, vec_col, id_col,
+        coarse_index=coarse_index,
     ).withColumnRenamed("vec_id", "corpus_id")
     qv = with_norm(
         queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),

@@ -44,11 +44,10 @@ def _page_keyed(pages: DataFrame) -> DataFrame:
     )
 
 
-def _flatten_tweets(pages: DataFrame) -> DataFrame:
+def _flatten_tweets(keyed: DataFrame) -> DataFrame:
     """data[] ∪ includes.tweets[] with load-order priority for dedup
     (the reference inserts data first, so its PK wins —
     `1_initial_load.py:322-324`)."""
-    keyed = _page_keyed(pages)
     data = keyed.select(
         F.posexplode("data").alias("pos", "t"), F.lit(0).alias("prio"), "_page_key"
     )
@@ -60,9 +59,9 @@ def _flatten_tweets(pages: DataFrame) -> DataFrame:
     return data.unionByName(incl)
 
 
-def normalize_tweets(pages: DataFrame) -> DataFrame:
+def normalize_tweets(keyed: DataFrame) -> DataFrame:
     """The ``map_tweet`` transform (`1_initial_load.py:89-151`) as one
-    projection:
+    projection over the keyed page frame (:func:`_page_keyed`):
 
     - reference dispatch (P2): ``referenced_tweets[*].type`` →
       ``retweet_of`` / ``in_reply_to`` / ``quotes`` columns;
@@ -79,7 +78,7 @@ def normalize_tweets(pages: DataFrame) -> DataFrame:
       (priority, position) ordering — deterministic under any
       partitioning, unlike raw dropDuplicates.
     """
-    t = _flatten_tweets(pages)
+    t = _flatten_tweets(keyed)
     refs = F.col("t.referenced_tweets")
 
     def ref_of(kind):
@@ -147,11 +146,11 @@ def normalize_tweets(pages: DataFrame) -> DataFrame:
     )
 
 
-def normalize_users(pages: DataFrame) -> DataFrame:
-    """``map_user`` (`1_initial_load.py:245-278`): explode
-    includes.users, null-if-empty normalization (P5), first-wins
-    dedup."""
-    u = _page_keyed(pages).select(
+def normalize_users(keyed: DataFrame) -> DataFrame:
+    """``map_user`` (`1_initial_load.py:245-278`) over the keyed page
+    frame (:func:`_page_keyed`): explode includes.users, null-if-empty
+    normalization (P5), first-wins dedup."""
+    u = keyed.select(
         F.posexplode("includes.users").alias("pos", "u"), "_page_key"
     )
 
@@ -215,11 +214,25 @@ def entity_edges(tweets: DataFrame) -> dict[str, DataFrame]:
 
 
 def ingest(pages: DataFrame) -> dict[str, DataFrame]:
-    """The full load: one page scan fanned into the five output
-    tables + the corrupt-line quarantine. Callers write each with
+    """The full load: one page scan fanned into the tweet, user, error
+    and three entity-edge tables. Callers write each with
     ``df.write.parquet`` (S3's retry dance collapses into the atomic
-    write, SURVEY §2.1)."""
-    tweets = normalize_tweets(pages)
-    out = {"tweets": tweets, "users": normalize_users(pages), "errors": error_rows(pages)}
+    write, SURVEY §2.1).
+
+    Two frames have more than one reader, so each is materialized
+    once (``localCheckpoint``) and read from there:
+
+    - the keyed page frame — the JSON scan plus ``_page_key``, read by
+      both union branches of :func:`normalize_tweets`,
+      :func:`normalize_users` and :func:`error_rows`. Without it every
+      reader re-parses the JSONL and re-hashes every page;
+    - ``tweets`` — the window dedup's output, read by the three entity
+      edge tables here and, in the warehouse build, by the closure's
+      edge self-joins, the root enrichment and the tree statistics.
+      Without it every reader re-runs the scan, the explode and the
+      dedup shuffle."""
+    keyed = _page_keyed(pages).localCheckpoint()
+    tweets = normalize_tweets(keyed).localCheckpoint()
+    out = {"tweets": tweets, "users": normalize_users(keyed), "errors": error_rows(keyed)}
     out.update(entity_edges(tweets))
     return out

@@ -15,6 +15,17 @@ index dance (S4) has nothing to defer; the per-conversation client
 loop (§3.3's scalability cliff) is the distributed tree-stats
 operator.
 
+Every stage with more than one reader is materialized once
+(``localCheckpoint``) so no reader replays the lineage back to the
+JSONL scan. ``ingest`` holds two such points: the keyed page frame
+(read by the tweet, user and error normalizers) and the deduplicated
+``tweets`` (read by the closure's edge self-joins, the root
+enrichment, the tree statistics and the three entity-edge sinks).
+:func:`build_warehouse` holds the other two: ``tweets_wide`` (read by
+its own sink, the schema clone and both sides of the conversation
+rollup) and the conversation rollup (read by its sink and the id
+text sink).
+
 Sink surface covered here (SURVEY §2.1): S5 materialization
 (``write.parquet``, partitioned by the calendar column so date
 predicates prune partitions at read), S6 schema-only clone
@@ -159,8 +170,8 @@ def build_warehouse(
     tables = ingest(read_pages(spark, pages_path))
     tweets = enrich_ur_conversations(tables["tweets"])
     stats = tweet_stats(tweets)
-    wide = build_tweets_wide(tweets, stats)
-    convs = build_conversation_rollups(wide)
+    wide = build_tweets_wide(tweets, stats).localCheckpoint()
+    convs = build_conversation_rollups(wide).localCheckpoint()
 
     out: dict[str, str] = {}
 

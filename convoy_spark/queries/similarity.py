@@ -206,7 +206,7 @@ def ann_srp_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 IVF_CELLS = 16
 IVF_PROBE = 4
-IVF_PASSES = 3  # ivf_index iters=2 → range(iters+1) assign/update passes
+IVF_PASSES = 3  # ivf_index: iters=2 Lloyd rounds, then the final assignment and its means
 _SS = 1099511627776  # SCORE_SCALE = 2**40, the ann_srp_topk literal
 
 
@@ -267,12 +267,12 @@ def _ivf_oracle() -> str:
     """Unroll the deterministic k-means index into SQL CTEs.
 
     Every piece of the Spark IVF pipeline is order-insensitive by
-    construction — decimal-summed squared distances, (dist, cell)
-    argmin tiebreaks, decimal-exact centroid means — so the
-    'iterative' index is really a fixed-depth dataflow: 3 unrolled
-    assign/update passes, probe ranking, candidate scoring. This is
-    what upgrades ann_ivf_topk from the driver's weak rows-only check
-    to a full value-hash oracle."""
+    construction — floor-scaled long sums for squared distances and
+    centroid means (operators/pq.py::_update), (dist, cell) argmin
+    tiebreaks — so the 'iterative' index is really a fixed-depth
+    dataflow: 3 unrolled assign/update passes, probe ranking,
+    candidate scoring. This is what upgrades ann_ivf_topk from the
+    driver's weak rows-only check to a full value-hash oracle."""
     parts = _ivf_kmeans_ctes()
     parts.append(f"""
     qd AS (
@@ -312,15 +312,16 @@ def _ivf_oracle() -> str:
 @query("ann_ivf_topk", oracle=_ivf_oracle())
 def ann_ivf_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF approximate top-k: deterministic k-means coarse quantizer
-    ({IVF_CELLS} cells, 2 Lloyd rounds, decimal-exact centroid means
-    and distances), probe the {IVF_PROBE} nearest cells per query,
+    ({IVF_CELLS} cells, 2 Lloyd rounds, floor-scaled long centroid
+    means and distances), probe the {IVF_PROBE} nearest cells per query,
     exact-score only those candidates — the classic inverted-file ANN
     layout; search touches n_probe/n_cells of the corpus. Fully
     oracle-checked: the index is a fixed-depth deterministic dataflow,
     unrolled into SQL by :func:`_ivf_oracle` (round-1 judge asked for
-    an oracle-checkable decomposition of the default-quality ANN)."""
+    an oracle-checkable decomposition of the default-quality ANN).
+    The coarse index is the session's shared IVF build."""
     q, c = _queries_and_corpus(spark, sf_dir)
-    return ann_ivf_topk(q, c, k=TOP_K)
+    return ann_ivf_topk(q, c, k=TOP_K, coarse_index=shared_ivf_index(spark, sf_dir))
 
 
 @query(
@@ -1099,7 +1100,9 @@ def shared_pq_index(spark: SparkSession, sf_dir: str):
 
 
 @shared_build(
-    "ivf_index", family="ivf", consumers={"ann_ivfpq_topk", "pq_recall_sweep"}
+    "ivf_index",
+    family="ivf",
+    consumers={"ann_ivf_topk", "ann_ivfpq_topk", "pq_recall_sweep"},
 )
 def shared_ivf_index(spark: SparkSession, sf_dir: str):
     from convoy_spark.operators.similarity import ivf_index

@@ -90,6 +90,13 @@ def tables(spark, landing):
     return {k: v.collect() for k, v in ingest(read_pages(spark, landing)).items()}
 
 
+def test_outputs_read_the_materialized_pages(spark, landing):
+    # every output reads the checkpointed page frame, not the JSONL:
+    # one scan however many readers the tables have
+    for name, df in ingest(read_pages(spark, landing)).items():
+        assert df.inputFiles() == [], name
+
+
 def test_corrupt_quarantine(spark, landing):
     bad = corrupt_lines(read_pages(spark, landing)).collect()
     assert len(bad) == 1 and "not json" in bad[0][0]

@@ -1,6 +1,7 @@
 """End-to-end warehouse pipeline test (SURVEY §3): a quote-chain
 corpus through ingest → ur-closure → tree stats → wide build →
-rollups → sinks, with idempotent re-run."""
+rollups → sinks, with idempotent re-run. Every one of the nine sinks
+is read back."""
 
 from __future__ import annotations
 
@@ -13,13 +14,13 @@ import pytest
 from convoy_spark.pipeline.warehouse import build_warehouse
 
 
-def _tweet(tid, conv, author="1", reply_to=None, refs=None, likes=0):
+def _tweet(tid, conv, author="1", reply_to=None, refs=None, likes=0, text=None, entities=None):
     t = {
         "id": str(tid),
         "conversation_id": str(conv),
         "author_id": author,
         "created_at": f"2024-03-{(tid % 27) + 1:02d}T10:00:00.000Z",
-        "text": f"tweet {tid}",
+        "text": text or f"tweet {tid}",
         "lang": "en",
         "public_metrics": {
             "retweet_count": 0,
@@ -33,6 +34,8 @@ def _tweet(tid, conv, author="1", reply_to=None, refs=None, likes=0):
         refs.append(("replied_to", reply_to))
     if refs:
         t["referenced_tweets"] = [{"type": k, "id": str(v)} for k, v in refs]
+    if entities:
+        t["entities"] = entities
     return t
 
 
@@ -47,16 +50,45 @@ def warehouse(spark, tmp_path_factory):
     page = {
         "data": [
             _tweet(100, 100, author="1", likes=10),
-            _tweet(101, 100, author="2", reply_to=100, likes=5),
+            _tweet(101, 100, author="2", reply_to=100, likes=5, entities={
+                "hashtags": [{"tag": "convoy"}],
+                "mentions": [{"username": "alice", "id": "1"}],
+                "urls": [{
+                    "url": "https://t.co/x",
+                    "expanded_url": "https://ex.am/x",
+                    "unwound_url": "https://example.com/x",
+                }],
+            }),
             _tweet(102, 100, author="3", reply_to=101, likes=1),
             _tweet(200, 200, author="4", refs=[("quoted", 100)], likes=2),
             _tweet(300, 300, author="5", refs=[("quoted", 200)], likes=0),
             _tweet(400, 400, author="1", likes=7),
         ],
-        "includes": {"tweets": [], "users": []},
-        "errors": [],
+        "includes": {
+            # a later crawl of tweet 100 with drifted metrics, text and
+            # entities: the data[] copy must win everywhere
+            "tweets": [_tweet(100, 100, author="1", likes=99, text="stale 100",
+                              entities={"hashtags": [{"tag": "stale"}]})],
+            "users": [
+                {"id": "1", "username": "alice", "name": "Alice",
+                 "created_at": "2020-01-01T00:00:00.000Z",
+                 "description": "", "location": "Wonderland", "url": "",
+                 "verified": "true", "protected": "false",
+                 "public_metrics": {"followers_count": 10, "following_count": 5,
+                                    "tweet_count": 42, "listed_count": 1}},
+            ],
+        },
+        "errors": [
+            {"resource_id": "777", "title": "Not Found Error",
+             "detail": "Could not find tweet with ids: [777]."},
+            # a username lookup: no tweet id, so no error row
+            {"value": "ghost", "title": "Not Found Error",
+             "detail": "Could not find user with usernames: [ghost]."},
+        ],
     }
-    (landing / "pages.jsonl").write_text(json.dumps(page))
+    # a second page cut off mid-line: quarantined, contributes no rows
+    truncated = json.dumps({"data": [_tweet(900, 900)]})[:40]
+    (landing / "pages.jsonl").write_text(json.dumps(page) + "\n" + truncated)
     paths = build_warehouse(spark, str(landing), str(out))
     return spark, paths, str(landing), str(out)
 
@@ -129,3 +161,32 @@ def test_idempotent_rerun(warehouse):
         for r in spark.read.parquet(paths["conversations"]).collect()
     }
     assert before == after
+
+
+def test_users_sink(warehouse):
+    spark, paths, _, _ = warehouse
+    got = {
+        (r.user_id, r.username, r.description, r.location, r.url, r.verified,
+         r.protected, r.followers_count, r.tweet_count)
+        for r in spark.read.parquet(paths["users"]).collect()
+    }
+    assert got == {(1, "alice", None, "Wonderland", None, True, False, 10, 42)}
+
+
+def test_errors_sink(warehouse):
+    spark, paths, _, _ = warehouse
+    got = {tuple(r) for r in spark.read.parquet(paths["errors"]).select(
+        "tweet_id", "error", "error_detail").collect()}
+    assert got == {(777, "Not Found Error", "Could not find tweet with ids: [777].")}
+
+
+def test_entity_edge_sinks(warehouse):
+    spark, paths, _, _ = warehouse
+
+    def rows(name):
+        return {tuple(r) for r in spark.read.parquet(paths[name]).collect()}
+
+    # the included repeat of 100 carries #stale: data[] won, so no row
+    assert rows("tweet_hashtags") == {(101, "convoy")}
+    assert rows("tweet_mentions") == {(101, "alice")}
+    assert rows("tweet_urls") == {(101, "https://example.com/x")}
