@@ -89,7 +89,7 @@ def descendant_pairs(edges: DataFrame, max_iterations: int = 64) -> DataFrame:
         F.col("parent_id").alias("anc_id"),
         F.col("child_id").alias("node_id"),
         F.lit(1).alias("depth"),
-    ).localCheckpoint()
+    ).localCheckpoint(eager=False)
     prev_n = pairs.count()
 
     span = 1

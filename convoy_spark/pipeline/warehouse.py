@@ -15,6 +15,24 @@ index dance (S4) has nothing to defer; the per-conversation client
 loop (§3.3's scalability cliff) is the distributed tree-stats
 operator.
 
+Stage DAG of :func:`build_warehouse`, each branch on its own driver
+thread::
+
+    ingest ─┬─ enrich_ur_conversations (closure loop) ─┬─ wide ─ convs ─ 9 sinks
+            └─ tweet_stats (tree-stats loop) ──────────┘     (concurrent)
+
+The two loops are independent: ``tweet_stats`` reads only
+``tweet_id``, ``in_reply_to``, ``author_id`` and ``like_count``, none
+of which the closure writes, so both read ingest's ``tweets`` and run
+at once. Each loop round is a small, latency-bound job, and Spark
+schedules jobs from separate threads concurrently, so the two loops'
+round latencies overlap instead of adding up. ``wide`` is the one
+barrier: it joins both branches. Then all nine sinks are written
+together. The five ingest-only sinks (users, errors, the three entity
+edges) wait for that final batch although they could start during the
+loops: there they would compete with the loops' latency-bound rounds,
+and the build still ends with its last sink.
+
 Every stage with more than one reader is materialized once
 (``localCheckpoint``) so no reader replays the lineage back to the
 JSONL scan. ``ingest`` holds two such points: the keyed page frame
@@ -36,15 +54,22 @@ predicates prune partitions at read), S6 schema-only clone
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from functools import partial
+from typing import TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from convoy_spark.functions.numeric import dsum
 from convoy_spark.operators.closure import closure_roots, enrich_with_roots
 from convoy_spark.operators.treestats import tree_stats
 from convoy_spark.pipeline.ingest import ingest
 from convoy_spark.sources.jsonl import read_pages
+
+T = TypeVar("T")
 
 
 def conversation_edges(tweets: DataFrame) -> DataFrame:
@@ -156,6 +181,36 @@ def build_conversation_rollups(tweets_wide: DataFrame) -> DataFrame:
     return rollup.join(roots, "ur_conversation_id", "left")
 
 
+def _concurrently(spark: SparkSession, *calls: Callable[[], T]) -> list[T]:
+    """Run each call on its own driver thread; results in call order.
+
+    Spark schedules jobs submitted from separate threads concurrently,
+    so the calls' job latencies overlap instead of adding up. Each call
+    carries the caller's local properties (job group, description), so
+    none of its jobs escapes the caller's group. Each call gets its own
+    copy of them: ``inheritable_thread_target(spark)`` clones them once,
+    and a copy shared between threads would carry one branch's
+    ``setJobGroup`` into the other. A failing call's own exception is
+    re-raised once the calls still running have returned, so no pool
+    thread outlives the call."""
+    pool = ThreadPoolExecutor(max_workers=len(calls))
+    try:
+        futures = [pool.submit(inheritable_thread_target(spark)(call)) for call in calls]
+        return [f.result() for f in futures]
+    finally:
+        pool.shutdown(cancel_futures=True)
+
+
+def _parquet(df: DataFrame, partition_by: str | None = None) -> Callable[[str], None]:
+    def write(path: str) -> None:
+        w = df.write.mode("overwrite")
+        if partition_by:
+            w = w.partitionBy(partition_by)
+        w.parquet(path)
+
+    return write
+
+
 def build_warehouse(
     spark: SparkSession, pages_path: str, out_dir: str
 ) -> dict[str, str]:
@@ -166,41 +221,39 @@ def build_warehouse(
     predicates — the Spark answer to the reference's covering
     indexes); ``conversation_ids.txt`` as the S7 text sink; an empty
     ``tweets_wide_schema`` clone (S6). Deterministic outputs +
-    overwrite mode make re-runs idempotent (S8)."""
+    overwrite mode make re-runs idempotent (S8). The returned
+    ``{name: path}`` dict is in the fixed sink order below, whatever
+    order the writes complete in."""
     tables = ingest(read_pages(spark, pages_path))
-    tweets = enrich_ur_conversations(tables["tweets"])
-    stats = tweet_stats(tweets)
+    tweets, stats = _concurrently(
+        spark,
+        lambda: enrich_ur_conversations(tables["tweets"]),
+        lambda: tweet_stats(tables["tweets"]),
+    )
     wide = build_tweets_wide(tweets, stats).localCheckpoint()
     convs = build_conversation_rollups(wide).localCheckpoint()
 
-    out: dict[str, str] = {}
+    def ids_text(path: str) -> None:
+        # S7: one conversation id per line.
+        (
+            convs.select(F.col("ur_conversation_id").cast("string"))
+            .coalesce(1)
+            .write.mode("overwrite")
+            .text(path)
+        )
 
-    def write(df: DataFrame, name: str, partition_by: str | None = None) -> None:
-        path = os.path.join(out_dir, name)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(partition_by)
-        w.parquet(path)
-        out[name] = path
-
-    write(tables["users"], "users")
-    write(tables["errors"], "errors")
-    write(tables["tweet_hashtags"], "tweet_hashtags")
-    write(tables["tweet_mentions"], "tweet_mentions")
-    write(tables["tweet_urls"], "tweet_urls")
-    write(wide, "tweets_wide", partition_by="date_created_at")
-    write(convs, "conversations")
-
-    # S6: schema-only clone (CREATE TABLE ... WHERE 0).
-    write(wide.limit(0), "tweets_wide_schema")
-
-    # S7: one conversation id per line.
-    ids_path = os.path.join(out_dir, "conversation_ids")
-    (
-        convs.select(F.col("ur_conversation_id").cast("string"))
-        .coalesce(1)
-        .write.mode("overwrite")
-        .text(ids_path)
-    )
-    out["conversation_ids"] = ids_path
+    sinks = {
+        "users": _parquet(tables["users"]),
+        "errors": _parquet(tables["errors"]),
+        "tweet_hashtags": _parquet(tables["tweet_hashtags"]),
+        "tweet_mentions": _parquet(tables["tweet_mentions"]),
+        "tweet_urls": _parquet(tables["tweet_urls"]),
+        "tweets_wide": _parquet(wide, partition_by="date_created_at"),
+        "conversations": _parquet(convs),
+        # S6: schema-only clone (CREATE TABLE ... WHERE 0).
+        "tweets_wide_schema": _parquet(wide.limit(0)),
+        "conversation_ids": ids_text,
+    }
+    out = {name: os.path.join(out_dir, name) for name in sinks}
+    _concurrently(spark, *(partial(write, out[name]) for name, write in sinks.items()))
     return out

@@ -8,9 +8,11 @@ from __future__ import annotations
 import glob
 import json
 import os
+import threading
 
 import pytest
 
+from convoy_spark.pipeline import warehouse as wh
 from convoy_spark.pipeline.warehouse import build_warehouse
 
 
@@ -39,10 +41,7 @@ def _tweet(tid, conv, author="1", reply_to=None, refs=None, likes=0, text=None, 
     return t
 
 
-@pytest.fixture(scope="module")
-def warehouse(spark, tmp_path_factory):
-    landing = tmp_path_factory.mktemp("wh_landing")
-    out = tmp_path_factory.mktemp("wh_out")
+def _write_landing(landing) -> None:
     # Conversation 100: root(100) + replies 101,102; 102 child of 101.
     # Conversation 200: its root QUOTES 100 -> ur root = 100.
     # Conversation 300: its root QUOTES 200 -> chain, ur root = 100.
@@ -89,6 +88,13 @@ def warehouse(spark, tmp_path_factory):
     # a second page cut off mid-line: quarantined, contributes no rows
     truncated = json.dumps({"data": [_tweet(900, 900)]})[:40]
     (landing / "pages.jsonl").write_text(json.dumps(page) + "\n" + truncated)
+
+
+@pytest.fixture(scope="module")
+def warehouse(spark, tmp_path_factory):
+    landing = tmp_path_factory.mktemp("wh_landing")
+    out = tmp_path_factory.mktemp("wh_out")
+    _write_landing(landing)
     paths = build_warehouse(spark, str(landing), str(out))
     return spark, paths, str(landing), str(out)
 
@@ -190,3 +196,68 @@ def test_entity_edge_sinks(warehouse):
     assert rows("tweet_hashtags") == {(101, "convoy")}
     assert rows("tweet_mentions") == {(101, "alice")}
     assert rows("tweet_urls") == {(101, "https://example.com/x")}
+
+
+def test_sink_order_is_fixed(warehouse):
+    _, paths, _, out = warehouse
+    assert list(paths) == [
+        "users", "errors", "tweet_hashtags", "tweet_mentions", "tweet_urls",
+        "tweets_wide", "conversations", "tweets_wide_schema", "conversation_ids",
+    ]
+    assert all(p == os.path.join(out, name) for name, p in paths.items())
+
+
+def test_branch_failure_surfaces(spark, tmp_path, monkeypatch):
+    """A failing branch re-raises its own exception from the build, and
+    the build leaves no pool thread behind."""
+    _write_landing(tmp_path)
+    boom = RuntimeError("tree stats failed")
+
+    def failing_stats(tweets):
+        raise boom
+
+    monkeypatch.setattr(wh, "tweet_stats", failing_stats)
+    threads_before = threading.active_count()
+    with pytest.raises(RuntimeError) as err:
+        build_warehouse(spark, str(tmp_path), str(tmp_path / "out"))
+    assert err.value is boom
+    assert threading.active_count() == threads_before
+    assert not (tmp_path / "out").exists()  # no sink ran
+
+
+def test_branches_keep_their_own_local_properties(spark):
+    """A local property one branch sets is not seen by the other."""
+    sc = spark.sparkContext
+    both_set = threading.Barrier(2, timeout=30)
+
+    def branch(name):
+        def run():
+            sc.setLocalProperty("wh.branch", name)
+            both_set.wait()
+            return sc.getLocalProperty("wh.branch")
+
+        return run
+
+    assert wh._concurrently(spark, branch("a"), branch("b")) == ["a", "b"]
+    assert sc.getLocalProperty("wh.branch") is None
+
+
+def test_jobs_stay_in_caller_job_group(spark, tmp_path):
+    """Every job of the build, on whichever driver thread, carries the
+    caller's job group."""
+    _write_landing(tmp_path)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("wh-test", "warehouse build under a job group")
+    try:
+        grouped_before = set(tracker.getJobIdsForGroup("wh-test"))
+        build_warehouse(spark, str(tmp_path), str(tmp_path / "out"))
+        grouped = set(tracker.getJobIdsForGroup("wh-test")) - grouped_before
+        ungrouped = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+    assert grouped
+    assert not ungrouped, f"jobs outside the caller's group: {sorted(ungrouped)}"
