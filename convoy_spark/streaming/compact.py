@@ -1,7 +1,6 @@
-"""Offline compaction for the per-batch delta stores — the
-maintenance job the epoch-tagged state layouts
-(``streaming/embstats.py`` moments, ``streaming/mixture.py`` counts)
-promise: replace N batch-delta partitions with ONE summed partition of
+"""Offline compaction for the fragment stores (streaming/util.py) —
+the maintenance job the ``streaming/embstats.py`` moments and
+``streaming/mixture.py`` counts layouts promise: replace N batch-delta partitions with ONE summed partition of
 the same schema, so store reads stop growing with batch count while
 every derived quantity stays BIT-IDENTICAL (the deltas are integer /
 decimal partial sums — exact and associative, so summing them first
@@ -36,6 +35,8 @@ import shutil
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
+from convoy_spark.streaming.util import read_fragments
+
 
 def _swap_in(compacted_tmp: str, deltas_dir: str) -> None:
     """Atomically-enough replace ``deltas_dir`` with the single
@@ -58,11 +59,7 @@ def compact_embstats(spark: SparkSession, state_dir: str) -> int:
     deltas_dir = os.path.join(state_dir, "deltas")
     if not os.path.isdir(deltas_dir):
         return 0
-    deltas = (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(MOMENTS_SCHEMA)
-        .parquet(deltas_dir)
-    )
+    deltas = read_fragments(spark, deltas_dir, MOMENTS_SCHEMA)
     n = deltas.count()
     summed = deltas.groupBy("d").agg(
         F.sum("n").alias("n"),
@@ -83,11 +80,7 @@ def compact_mixture_counts(spark: SparkSession, state_dir: str) -> int:
     counts_dir = os.path.join(state_dir, "counts")
     if not os.path.isdir(counts_dir):
         return 0
-    deltas = (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(COUNTS_SCHEMA)
-        .parquet(counts_dir)
-    )
+    deltas = read_fragments(spark, counts_dir, COUNTS_SCHEMA)
     n = deltas.count()
     summed = deltas.groupBy("domain").agg(
         F.sum("n").cast("long").alias("n")
@@ -96,9 +89,6 @@ def compact_mixture_counts(spark: SparkSession, state_dir: str) -> int:
     summed.write.mode("overwrite").parquet(tmp)
     _swap_in(tmp, counts_dir)
     return n
-
-
-__all__ = ["compact_embstats", "compact_mixture_counts"]
 
 
 def compact_ivm_partials(spark: SparkSession, state_dir: str) -> int:
@@ -146,7 +136,6 @@ def compact_hardneg(spark: SparkSession, state_dir: str) -> int:
         HN_TRUTH_SCHEMA,
         K_SHORT,
         K_TRUTH,
-        _read_deltas,
         _rerank_top,
         compacted_k_bounds,
     )
@@ -160,7 +149,7 @@ def compact_hardneg(spark: SparkSession, state_dir: str) -> int:
         deltas_dir = os.path.join(state_dir, kind)
         if not os.path.isdir(deltas_dir):
             continue
-        rows = _read_deltas(spark, state_dir, kind, schema)
+        rows = read_fragments(spark, deltas_dir, schema).distinct()
         replaced += rows.count()
         top = _rerank_top(rows, order_col, k)
         tmp = os.path.join(state_dir, "_compact_tmp")
@@ -171,3 +160,11 @@ def compact_hardneg(spark: SparkSession, state_dir: str) -> int:
         with open(os.path.join(state_dir, COMPACT_MARKER), "w") as f:
             json.dump(bounds, f)
     return replaced
+
+
+__all__ = [
+    "compact_embstats",
+    "compact_hardneg",
+    "compact_ivm_partials",
+    "compact_mixture_counts",
+]

@@ -28,13 +28,13 @@ batches, so the online form probes UNCAPPED grams; its batch twin
 (:func:`batch_funnel`) computes the same uncapped form, which is what
 the stream==batch equality is stated against.
 
-State layout (the pqencode discipline):
+State layout:
 - ``eval_grams/`` — the frozen distinct eval 13-gram hashes, written
   once by :func:`freeze_eval_filter` (the bitset is re-derived from
   it per batch — eval suites are tiny, and re-deriving shares every
   bit of arithmetic with the catalog operator);
-- ``funnel/batch-<tag>`` — per-batch delta partitions, replay
-  overwrites its own path idempotently.
+- ``funnel/batch-<tag>`` — a fragment store (the streaming/util.py
+  contract).
 
 100 TB posture: per batch — one Generate over the batch's docs, k
 broadcast filter-leg joins, one doc-keyed agg; batch-proportional,
@@ -49,6 +49,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from convoy_spark.operators.dedup import bloom_decontaminate, shingle_hashes
+from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
 
 FUNNEL_SCHEMA = (
     "train_doc long, n_grams long, n_bloom_candidates long,"
@@ -84,7 +91,7 @@ def apply_decontam_batch(
         shingle_hashes(batch_docs, n=DECONTAM_N), ev
     )
     funnel.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "funnel", f"batch-{batch_tag}")
+        fragment_path(state_dir, "funnel", batch_tag)
     )
 
 
@@ -96,25 +103,11 @@ def run_incremental_decontam(
 ) -> None:
     """Drain all document files present into the funnel store; stop
     when caught up (availableNow)."""
-    import hashlib
-
-    from convoy_spark.streaming.dedup import stream_docs
-
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    q = (
-        stream_docs(spark, landing_dir)
-        .writeStream.foreachBatch(
-            lambda b, eid: apply_decontam_batch(
-                spark, b, state_dir, f"{ck_tag}-{eid}"
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_decontam_batch(spark, b, state_dir, tag),
     )
-    q.awaitTermination()
 
 
 def decontam_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -122,15 +115,9 @@ def decontam_funnel(spark: SparkSession, state_dir: str) -> DataFrame:
     collapses cross-drain re-deliveries (rows are pure functions of
     doc + frozen filter, so duplicates are byte-identical). An absent
     store yields zero rows."""
-    path = os.path.join(state_dir, "funnel")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], FUNNEL_SCHEMA)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(FUNNEL_SCHEMA)
-        .parquet(path)
-        .distinct()
-    )
+    return read_fragments(
+        spark, os.path.join(state_dir, "funnel"), FUNNEL_SCHEMA
+    ).distinct()
 
 
 def batch_funnel(

@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from convoy_spark.functions.hashing import hash60
+from convoy_spark.streaming.util import drain, stream_parquet
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -41,14 +42,6 @@ DOC_STREAM_SCHEMA = StructType(
 )
 
 SEEN_SCHEMA = "content_hash long, canonical_id long"
-
-
-def stream_docs(spark: SparkSession, landing_dir: str) -> DataFrame:
-    return (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
-    )
 
 
 def load_seen(spark: SparkSession, seen_path: str) -> DataFrame:
@@ -99,16 +92,11 @@ def run_incremental_dedup(
     """Drain all document files present, deduping each batch against
     the persisted seen-hash map; stop when caught up. Re-running with
     the same checkpoint processes only new files."""
-    docs = stream_docs(spark, landing_dir)
-    q = (
-        docs.writeStream.foreachBatch(
-            lambda b, _id: apply_doc_batch(spark, b, seen_path, kept_sink)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, _tag: apply_doc_batch(spark, b, seen_path, kept_sink),
     )
-    q.awaitTermination()
 
 
 __all__ = [
@@ -116,5 +104,4 @@ __all__ = [
     "apply_doc_batch",
     "load_seen",
     "run_incremental_dedup",
-    "stream_docs",
 ]

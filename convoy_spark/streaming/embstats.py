@@ -13,14 +13,12 @@ in any order yields BIT-IDENTICAL moments to one batch pass (tested),
 and the derived mean/variance are single deterministic double
 expressions over equal integers.
 
-State layout: per-batch DELTA partitions (``deltas/batch-<epoch>``,
-written with dynamic overwrite of that one path) rather than a
-mutable running total — a replayed epoch (foreachBatch is
-at-least-once, streaming/util.py contract) overwrites ITS OWN delta
-idempotently instead of double-adding into a total. The store read
-aggregates all deltas: dim-count × batches rows of integers, trivial
-at any scale, and compactable offline by replacing deltas with their
-sum (same schema).
+State layout: a fragment store ``deltas/batch-<tag>`` (the
+streaming/util.py contract) rather than a mutable running total — a
+replayed epoch overwrites ITS OWN delta instead of double-adding into
+a total. The store read aggregates all deltas: dim-count × batches
+rows of integers, trivial at any scale, and compactable offline by
+replacing deltas with their sum (same schema).
 
 100 TB posture: the per-batch delta is dim rows (one narrow
 map-side-combined aggregation over the batch); the query-side
@@ -42,6 +40,12 @@ from pyspark.sql.types import (
 )
 
 from convoy_spark.operators.pca import PSCALE
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
 
 EMB_STREAM_SCHEMA = StructType(
     [
@@ -77,14 +81,10 @@ def apply_embstats_batch(
 ) -> None:
     """Fold one micro-batch of (vec_id, embedding): write its
     per-dimension delta to the batch's own partition (idempotent
-    under replay — the replayed batch overwrites itself).
-    ``batch_tag`` must be unique per logical batch ACROSS drains —
-    the runner namespaces the epoch id by a checkpoint-dir hash,
-    since Structured Streaming restarts epoch numbering per
-    checkpoint and two drains sharing a state dir would otherwise
-    overwrite each other's batch-0."""
-    path = os.path.join(state_dir, "deltas", f"batch-{batch_tag}")
-    _dim_deltas(batch).write.mode("overwrite").parquet(path)
+    under replay — the replayed batch overwrites itself)."""
+    _dim_deltas(batch).write.mode("overwrite").parquet(
+        fragment_path(state_dir, "deltas", batch_tag)
+    )
 
 
 def run_incremental_embstats(
@@ -96,31 +96,11 @@ def run_incremental_embstats(
     """Drain all embedding files present into the moments store; stop
     when caught up. Re-running with the same checkpoint processes
     only new files."""
-    # Not streaming/util.py::drain: that helper hardcodes the
-    # (doc_id, text) document source and drops the epoch id, both of
-    # which this store needs differently (embedding schema; epoch-
-    # tagged delta paths).
-    stream = (
-        spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
+    drain(
+        stream_parquet(spark, landing_dir, EMB_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_embstats_batch(b, state_dir, tag),
     )
-    import hashlib
-
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: apply_embstats_batch(
-                b, state_dir, f"{ck_tag}-{eid}"
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def _moments_from_sums(agg: DataFrame) -> DataFrame:
@@ -137,17 +117,10 @@ def _moments_from_sums(agg: DataFrame) -> DataFrame:
 
 def embedding_moments(spark: SparkSession, state_dir: str) -> DataFrame:
     """(d, n, mean, variance) from the persisted delta store alone;
-    an absent store (fresh deployment, state wipe) yields zero rows,
-    the same guard as streaming/util.py::load_store."""
-    path = os.path.join(state_dir, "deltas")
-    if not os.path.isdir(path):
-        deltas = spark.createDataFrame([], MOMENTS_SCHEMA)
-    else:
-        deltas = (
-            spark.read.option("recursiveFileLookup", "true")
-            .schema(MOMENTS_SCHEMA)
-            .parquet(path)
-        )
+    an absent store (fresh deployment, state wipe) yields zero rows."""
+    deltas = read_fragments(
+        spark, os.path.join(state_dir, "deltas"), MOMENTS_SCHEMA
+    )
     return _moments_from_sums(
         deltas.groupBy("d").agg(
             F.sum("n").alias("n"),

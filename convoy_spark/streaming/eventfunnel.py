@@ -16,12 +16,9 @@ types persist, the store is funnel-activity-proportional, never
 full-stream-proportional) makes every answer exact at any arrival
 order, the ``streaming/index.py`` append-only-store contract.
 
-State layout (the ``embstats`` pattern): per-batch DELTA partitions
-``steps/batch-<tag>``, each written with overwrite of its own path —
-foreachBatch's at-least-once replay overwrites ITS OWN partition
-idempotently instead of double-inserting (tested). ``batch_tag`` is
-namespaced by a checkpoint-dir hash so two drains sharing a state
-dir cannot collide on epoch 0.
+State layout: a fragment store ``steps/batch-<tag>`` (the
+streaming/util.py contract) — a replayed batch overwrites ITS OWN
+partition instead of double-inserting (tested).
 
 100 TB posture: per batch one filtered append (no shuffle); the
 query-side chain is k user-keyed aggregations + joins over the
@@ -33,7 +30,6 @@ here.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -48,6 +44,12 @@ from pyspark.sql.types import (
 )
 
 from convoy_spark.queries.eventwin import FUNNEL_STEPS, funnel_rollup
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
 
 EVENT_STREAM_SCHEMA = StructType(
     [
@@ -67,12 +69,11 @@ def apply_funnel_batch(
 ) -> None:
     """Persist one micro-batch's funnel-step events into the batch's
     own delta partition (idempotent under replay)."""
-    path = os.path.join(state_dir, "steps", f"batch-{batch_tag}")
     (
         batch.select("user_id", "event_type", "ts")
         .filter(F.col("event_type").isin(list(FUNNEL_STEPS)))
         .write.mode("overwrite")
-        .parquet(path)
+        .parquet(fragment_path(state_dir, "steps", batch_tag))
     )
 
 
@@ -85,35 +86,18 @@ def run_incremental_funnel(
     """Drain all event files present into the step store; stop when
     caught up. Re-running with the same checkpoint processes only new
     files."""
-    stream = (
-        spark.readStream.schema(EVENT_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
+    drain(
+        stream_parquet(spark, landing_dir, EVENT_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_funnel_batch(b, state_dir, tag),
     )
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: apply_funnel_batch(b, state_dir, f"{ck_tag}-{eid}")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def load_step_store(spark: SparkSession, state_dir: str) -> DataFrame:
     """The accumulated funnel-step events; absent store → zero rows
-    (fresh deployment / state wipe), the streaming/util guard."""
-    path = os.path.join(state_dir, "steps")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], STEPS_SCHEMA)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(STEPS_SCHEMA)
-        .parquet(path)
+    (fresh deployment / state wipe)."""
+    return read_fragments(
+        spark, os.path.join(state_dir, "steps"), STEPS_SCHEMA
     )
 
 

@@ -40,6 +40,7 @@ from convoy_spark.operators.textops import repetition_signals, text_quality
 from convoy_spark.queries.dedup import _split_col
 from convoy_spark.queries.funnel import FUNNEL_LANG
 from convoy_spark.streaming.dedup import apply_doc_batch
+from convoy_spark.streaming.util import drain, stream_parquet
 
 FUNNEL_STREAM_SCHEMA = StructType(
     [
@@ -103,22 +104,11 @@ def run_streaming_funnel(
     """Drain all document files present through the funnel; stop when
     caught up. Re-running with the same checkpoint processes only new
     files."""
-    docs = (
-        spark.readStream.schema(FUNNEL_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
+    drain(
+        stream_parquet(spark, landing_dir, FUNNEL_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, _tag: apply_funnel_batch(spark, b, seen_path, kept_sink, lang),
     )
-    q = (
-        docs.writeStream.foreachBatch(
-            lambda b, _id: apply_funnel_batch(
-                spark, b, seen_path, kept_sink, lang
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 __all__ = [

@@ -17,9 +17,9 @@ pattern; on a real deployment the parquet map becomes a Delta/Iceberg
 table and the overwrite a MERGE (see COVERAGE.md S8 note), but the
 dataflow — and this module's tests — are identical.
 
-``trigger(availableNow=True)`` + ``checkpointLocation`` give the
-reference's "catch up, then stop, resume later without reprocessing"
-protocol for free, exactly like ``streaming/incremental.py``.
+``streaming/util.py::drain`` (``trigger(availableNow=True)`` +
+``checkpointLocation``) gives the reference's "catch up, then stop,
+resume later without reprocessing" protocol for free.
 """
 
 from __future__ import annotations
@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import LongType, StructField, StructType
 
 from convoy_spark.operators.closure import incremental_closure_update
+from convoy_spark.streaming.util import drain, stream_parquet
 
 EDGE_STREAM_SCHEMA = StructType(
     [
@@ -39,15 +40,6 @@ EDGE_STREAM_SCHEMA = StructType(
 )
 
 MAP_SCHEMA = "node_id long, root_id long"
-
-
-def stream_edges(spark: SparkSession, landing_dir: str) -> DataFrame:
-    """File-stream of (child_id, parent_id) parquet drops."""
-    return (
-        spark.readStream.schema(EDGE_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
-    )
 
 
 def load_closure_map(spark: SparkSession, map_path: str) -> DataFrame:
@@ -82,16 +74,11 @@ def run_incremental_closure(
     map, then stop. Re-running with the same checkpoint processes only
     files that arrived since — the reference's resumable crawl
     protocol applied to graph enrichment."""
-    edges = stream_edges(spark, landing_dir)
-    q = (
-        edges.writeStream.foreachBatch(
-            lambda batch, _id: apply_edge_batch(spark, batch, map_path)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream_parquet(spark, landing_dir, EDGE_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda batch, _tag: apply_edge_batch(spark, batch, map_path),
     )
-    q.awaitTermination()
 
 
 def closure_map_as_df(spark: SparkSession, map_path: str) -> DataFrame:
@@ -106,5 +93,4 @@ __all__ = [
     "closure_map_as_df",
     "load_closure_map",
     "run_incremental_closure",
-    "stream_edges",
 ]

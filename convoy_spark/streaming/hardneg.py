@@ -9,8 +9,7 @@ every stored code) and the QUERY set is frozen alongside it (the
 probe set a negative refresh serves is fixed between encoder
 updates).
 
-State layout (the embstats/pqencode delta discipline — per-batch
-partitions, replay overwrites itself):
+State layout (fragment stores — the streaming/util.py contract):
 
 - ``hn_queries/`` — the frozen (vec_id, embedding) query table,
   written once by :func:`freeze_queries`;
@@ -19,7 +18,7 @@ partitions, replay overwrites itself):
   adist);
 - ``hn_truth/batch-<tag>`` — this batch's local exact-L2
   top-``k_truth`` per query: (query_id, corpus_id, dnum). Written
-  LAST: the batch's commit marker (indexdrift contract).
+  LAST: the batch's commit marker.
 
 Mergeability: a global top-k under a deterministic TOTAL order
 ((adist, corpus_id) / (dnum, corpus_id) — both exact: floor-scaled
@@ -51,7 +50,14 @@ from convoy_spark.operators.pq import (
     ann_pq_adc_topk,
     exact_l2_topk,
 )
+from convoy_spark.streaming.embstats import EMB_STREAM_SCHEMA
 from convoy_spark.streaming.pqencode import _load_codebook
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
 
 HN_SHORT_SCHEMA = "query_id long, corpus_id long, adist double"
 HN_TRUTH_SCHEMA = "query_id long, corpus_id long, dnum long"
@@ -96,11 +102,12 @@ def apply_hardneg_batch(
     truth = exact_l2_topk(queries, batch, k=k_truth).select(
         "query_id", "corpus_id", "dnum"
     )
-    base = os.path.join(state_dir, "hn_short", f"batch-{batch_tag}")
-    short.write.mode("overwrite").parquet(base)
+    short.write.mode("overwrite").parquet(
+        fragment_path(state_dir, "hn_short", batch_tag)
+    )
     # truth last — the batch's commit marker
     truth.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "hn_truth", f"batch-{batch_tag}")
+        fragment_path(state_dir, "hn_truth", batch_tag)
     )
 
 
@@ -112,42 +119,10 @@ def run_incremental_hardneg(
 ) -> None:
     """Drain all embedding files present into the negative-mining
     store; stop when caught up (availableNow)."""
-    import hashlib
-
-    from convoy_spark.streaming.embstats import EMB_STREAM_SCHEMA
-
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    stream = (
-        spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
-    )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: apply_hardneg_batch(
-                spark, b, state_dir, f"{ck_tag}-{eid}"
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
-def _read_deltas(
-    spark: SparkSession, state_dir: str, kind: str, schema: str
-) -> DataFrame:
-    path = os.path.join(state_dir, kind)
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(schema)
-        .parquet(path)
-        .distinct()
+    drain(
+        stream_parquet(spark, landing_dir, EMB_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_hardneg_batch(spark, b, state_dir, tag),
     )
 
 
@@ -225,12 +200,16 @@ def mined_negatives(
                 "Re-mine from the landing data for a larger k."
             )
     short = _rerank_top(
-        _read_deltas(spark, state_dir, "hn_short", HN_SHORT_SCHEMA),
+        read_fragments(
+            spark, os.path.join(state_dir, "hn_short"), HN_SHORT_SCHEMA
+        ).distinct(),
         "adist",
         k_short,
     )
     truth = _rerank_top(
-        _read_deltas(spark, state_dir, "hn_truth", HN_TRUTH_SCHEMA),
+        read_fragments(
+            spark, os.path.join(state_dir, "hn_truth"), HN_TRUTH_SCHEMA
+        ).distinct(),
         "dnum",
         k_truth,
     )

@@ -20,9 +20,8 @@ instead of pretending exactness):
 - rows with c_lower·K > N are GUARANTEED heavy (c_lower ≤ true freq)
   — the certain/candidate split downstream consumers filter on.
 
-State layout (the ``streaming/embstats.py`` pattern): one delta
-partition ``summaries/batch-<tag>`` per batch, overwrite-of-own-path
-so at-least-once replay is idempotent; data rows (token, c, 0, 0)
+State layout: a fragment store ``summaries/batch-<tag>`` (the
+streaming/util.py contract); data rows (token, c, 0, 0)
 plus one marker row per batch partition (NULL, 0, n_p, d_p) carrying
 the token total and shrink mass. Store size is partitions × (m+1)
 rows per batch — compactable offline (streaming/compact.py pattern);
@@ -42,29 +41,18 @@ from collections.abc import Iterator
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from convoy_spark.functions.hashing import WS_SPLIT
 from convoy_spark.operators.heavyhitters import HH_K, HH_SUMMARY
-
-DOC_STREAM_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("text", StringType()),
-    ]
+from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
 )
 
 SUMMARY_SCHEMA = "token string, c long, n long, d long"
-
-
-def _read_deltas(spark: SparkSession, path: str) -> DataFrame:
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], SUMMARY_SCHEMA)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(SUMMARY_SCHEMA)
-        .parquet(path)
-    )
 
 
 def _mg_summary_partition(m: int):
@@ -118,7 +106,7 @@ def apply_hh_batch(
         _mg_summary_partition(summary_size), SUMMARY_SCHEMA
     )
     summary.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "summaries", f"batch-{batch_tag}")
+        fragment_path(state_dir, "summaries", batch_tag)
     )
 
 
@@ -131,29 +119,12 @@ def run_incremental_hh(
 ) -> None:
     """Drain all document files present through the summary fold;
     stop when caught up. Re-running with the same checkpoint processes
-    only new files (batch tags namespaced per checkpoint — the
-    embstats contract)."""
-    import hashlib
-
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
+    only new files."""
+    drain(
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_hh_batch(b, state_dir, tag, summary_size),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: apply_hh_batch(
-                b, state_dir, f"{ck_tag}-{eid}", summary_size
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def heavy_hitters_over_stream(
@@ -164,7 +135,9 @@ def heavy_hitters_over_stream(
     of the stream's true heavy hitters, with ``guaranteed`` marking
     the rows whose LOWER bound already clears it. All threshold
     comparisons are integer (freq·K vs N) — exact on both engines."""
-    st = _read_deltas(spark, os.path.join(state_dir, "summaries"))
+    st = read_fragments(
+        spark, os.path.join(state_dir, "summaries"), SUMMARY_SCHEMA
+    )
     tot = st.where(F.col("token").isNull()).agg(
         F.sum("n").alias("n_total"), F.sum("d").alias("d_total")
     )

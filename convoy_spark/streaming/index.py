@@ -45,7 +45,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from convoy_spark.operators.dedup import doc_tokens
-from convoy_spark.streaming.util import append_store, drain, load_store
+from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
+from convoy_spark.streaming.util import (
+    append_store,
+    drain,
+    load_store,
+    stream_parquet,
+)
 
 POSTINGS_SCHEMA = "token string, doc_id long, tf long"
 DOCLENS_SCHEMA = "doc_id long, dl long"
@@ -116,10 +122,9 @@ def run_incremental_index(
     when caught up. Re-running with the same checkpoint processes
     only new files."""
     drain(
-        spark,
-        landing_dir,
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
         checkpoint_dir,
-        lambda b: apply_index_batch(spark, b, state_dir, layout=layout),
+        lambda b, _tag: apply_index_batch(spark, b, state_dir, layout=layout),
     )
 
 

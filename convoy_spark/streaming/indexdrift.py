@@ -8,9 +8,9 @@ see retrieval drift (a crawl source flooding one topic, shrinking
 docs, a vocabulary shift) as a per-epoch idf/avgdl delta table —
 BEFORE it shows up as silently different top-k results.
 
-State: per-batch DELTA partitions (the `streaming/embstats.py`
-epoch-tagging pattern — a replayed batch overwrites ITS OWN delta
-idempotently, never double-adds):
+State: a fragment store (the streaming/util.py contract — a replayed
+batch overwrites ITS OWN delta, never double-adds), two files per
+batch:
 
 - ``deltas/batch-<tag>/tokens``: (seq, token, df) — this batch's
   per-token distinct-doc counts (postings-proportional, the same
@@ -53,6 +53,13 @@ from pyspark.sql import functions as F
 
 from convoy_spark.functions.hashing import WS_SPLIT
 from convoy_spark.operators.dedup import doc_tokens
+from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragment_kind,
+    stream_parquet,
+)
 
 TOKENS_SCHEMA = "seq long, token string, df long"
 CORPUS_SCHEMA = "seq long, n_docs long, len_sum long"
@@ -85,7 +92,7 @@ def apply_index_drift_batch(
 ) -> None:
     """Fold one micro-batch of (doc_id, text): write its df/corpus
     deltas to the batch's own partition (idempotent under replay)."""
-    base = os.path.join(state_dir, "deltas", f"batch-{batch_tag}")
+    base = fragment_path(state_dir, "deltas", batch_tag)
     corpus_path = os.path.join(base, "corpus")
     tokens_path = os.path.join(base, "tokens")
 
@@ -100,7 +107,7 @@ def apply_index_drift_batch(
             seq = None if row is None else row.seq
     if seq is None:
         prev = (
-            _read_delta_kind(
+            read_fragment_kind(
                 spark, os.path.join(state_dir, "deltas"), "corpus",
                 CORPUS_SCHEMA,
             )
@@ -128,25 +135,11 @@ def run_incremental_index_drift(
     """Drain all document files present into the drift store; stop
     when caught up. Re-running with the same checkpoint processes
     only new files."""
-    import hashlib
-
-    from convoy_spark.streaming.dedup import stream_docs
-
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    q = (
-        stream_docs(spark, landing_dir)
-        .writeStream.foreachBatch(
-            lambda b, eid: apply_index_drift_batch(
-                spark, b, state_dir, f"{ck_tag}-{eid}"
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_index_drift_batch(spark, b, state_dir, tag),
     )
-    q.awaitTermination()
 
 
 def _drift_from_deltas(
@@ -212,28 +205,12 @@ def index_drift_snapshots(
     """(epoch, token, df, idf, n_docs, avgdl, idf_delta) per probe
     term per committed batch, from the persisted delta store alone."""
     base = os.path.join(state_dir, "deltas")
-    tok = _read_delta_kind(spark, base, "tokens", TOKENS_SCHEMA)
-    corpus = _read_delta_kind(spark, base, "corpus", CORPUS_SCHEMA)
+    tok = read_fragment_kind(spark, base, "tokens", TOKENS_SCHEMA)
+    corpus = read_fragment_kind(spark, base, "corpus", CORPUS_SCHEMA)
     probe = spark.createDataFrame(
         [(t.lower(),) for t in probe_terms], "token string"
     ).distinct()
     return _drift_from_deltas(tok, corpus, probe)
-
-
-def _read_delta_kind(
-    spark: SparkSession, base: str, kind: str, schema: str
-) -> DataFrame:
-    """Read every batch partition's ``kind`` subdir as one frame."""
-    if not os.path.isdir(base):
-        return spark.createDataFrame([], schema)
-    paths = [
-        os.path.join(base, d, kind)
-        for d in sorted(os.listdir(base))
-        if os.path.isdir(os.path.join(base, d, kind))
-    ]
-    if not paths:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*paths)
 
 
 def index_drift_profile(

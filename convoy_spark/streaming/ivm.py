@@ -10,10 +10,9 @@ BIT-IDENTICAL to the one-pass batch rollup (tested) — the property
 the batch module's strict pytests established (double-typed partials
 re-summed at merge time drift by 1 ulp).
 
-State layout (the embstats/eventfunnel pattern): per-batch DELTA
-partitions ``partials/batch-<tag>`` written with overwrite of that
-one path — foreachBatch's at-least-once replay overwrites ITS OWN
-delta idempotently (tested). Deltas are compactable offline by
+State layout: a fragment store ``partials/batch-<tag>`` (the
+streaming/util.py contract — a replayed batch overwrites ITS OWN
+delta, tested). Deltas are compactable offline by
 replacing any subset with its merge (same schema — associativity is
 pytest-proven in tests/test_ivm.py).
 
@@ -25,7 +24,6 @@ fact row is ever re-scanned.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -42,6 +40,12 @@ from pyspark.sql.types import (
 
 from convoy_spark.functions.numeric import DEC_MERGED
 from convoy_spark.queries.relational import rollup_partials
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
 
 LINEITEM_STREAM_SCHEMA = StructType(
     [
@@ -68,8 +72,9 @@ PARTIALS_SCHEMA = (
 def apply_ivm_batch(batch: DataFrame, state_dir: str, batch_tag: str) -> None:
     """Fold one micro-batch of fact rows into the batch's own delta
     partition of view partials (idempotent under replay)."""
-    path = os.path.join(state_dir, "partials", f"batch-{batch_tag}")
-    rollup_partials(batch).write.mode("overwrite").parquet(path)
+    rollup_partials(batch).write.mode("overwrite").parquet(
+        fragment_path(state_dir, "partials", batch_tag)
+    )
 
 
 def run_incremental_ivm(
@@ -81,33 +86,16 @@ def run_incremental_ivm(
     """Drain all fact files present into the partials store; stop when
     caught up. Re-running with the same checkpoint processes only new
     files."""
-    stream = (
-        spark.readStream.schema(LINEITEM_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
+    drain(
+        stream_parquet(spark, landing_dir, LINEITEM_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_ivm_batch(b, state_dir, tag),
     )
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: apply_ivm_batch(b, state_dir, f"{ck_tag}-{eid}")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def load_partials_store(spark: SparkSession, state_dir: str) -> DataFrame:
-    path = os.path.join(state_dir, "partials")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], PARTIALS_SCHEMA)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(PARTIALS_SCHEMA)
-        .parquet(path)
+    return read_fragments(
+        spark, os.path.join(state_dir, "partials"), PARTIALS_SCHEMA
     )
 
 

@@ -25,14 +25,12 @@ first batch the clamp is inactive and the rule reduces to the shared
 rate-targeting expression, so the single-batch drain == batch-operator
 twin holds for BOTH variants (tested).
 
-State layout (the ``streaming/embstats.py`` pattern): per-batch DELTA
-partitions for both stores — ``counts/batch-<tag>`` (domain, n) and
-``decisions/batch-<tag>`` (doc rows) — each written with overwrite of
-its own path, so foreachBatch's at-least-once replay overwrites ITS
-OWN partitions idempotently instead of double-adding (crash between
-the two writes: the replay recomputes rates from the same counts —
-the counts delta is already its own — and rewrites identical
-decisions; convergent, tested).
+State layout: two fragment stores (the streaming/util.py contract) —
+``counts/batch-<tag>`` (domain, n) and ``decisions/batch-<tag>`` (doc
+rows) — so a replayed batch overwrites ITS OWN partitions instead of
+double-adding (crash between the two writes: the replay recomputes
+rates from the same counts — the counts delta is already its own —
+and rewrites identical decisions; convergent, tested).
 
 100 TB posture: per batch, one keyed count aggregation over the batch
 (map-side combined), a read of domains × batches count rows (tiny,
@@ -53,6 +51,12 @@ from convoy_spark.operators.loader import (
     mixture_rates,
     mixture_rates_feedback,
 )
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
 
 DOC_STREAM_SCHEMA = StructType(
     [
@@ -67,16 +71,6 @@ DECISIONS_SCHEMA = (
     " accept_rate double, sampled boolean"
 )
 ACC_SCHEMA = "batch_tag string, domain string, n_acc long"
-
-
-def _read_deltas(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(schema)
-        .parquet(path)
-    )
 
 
 def apply_mixture_batch(
@@ -106,15 +100,15 @@ def apply_mixture_batch(
     b = batch.select("doc_id", F.col("source").alias("domain"))
     bcounts = b.groupBy("domain").agg(F.count("*").cast("long").alias("n"))
     bcounts.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "counts", f"batch-{batch_tag}")
+        fragment_path(state_dir, "counts", batch_tag)
     )
     counts = (
-        _read_deltas(spark, os.path.join(state_dir, "counts"), COUNTS_SCHEMA)
+        read_fragments(spark, os.path.join(state_dir, "counts"), COUNTS_SCHEMA)
         .groupBy("domain")
         .agg(F.sum("n").alias("n_d"))
     )
     if feedback:
-        prior_acc = _read_deltas(
+        prior_acc = read_fragments(
             spark, os.path.join(state_dir, "acc"), ACC_SCHEMA
         ).filter(F.col("batch_tag") != batch_tag)
         rates = mixture_rates_feedback(
@@ -128,13 +122,13 @@ def apply_mixture_batch(
     dec = mixture_decide(b, rates, salt)
     dec.select(F.lit(batch_tag).alias("batch_tag"), "*").write.mode(
         "overwrite"
-    ).parquet(os.path.join(state_dir, "decisions", f"batch-{batch_tag}"))
+    ).parquet(fragment_path(state_dir, "decisions", batch_tag))
     if feedback:
         dec.filter("sampled").groupBy("domain").agg(
             F.count("*").cast("long").alias("n_acc")
         ).select(F.lit(batch_tag).alias("batch_tag"), "domain", "n_acc").write.mode(
             "overwrite"
-        ).parquet(os.path.join(state_dir, "acc", f"batch-{batch_tag}"))
+        ).parquet(fragment_path(state_dir, "acc", batch_tag))
 
 
 def run_incremental_mixture(
@@ -148,36 +142,20 @@ def run_incremental_mixture(
 ) -> None:
     """Drain all document files present through the quota sampler;
     stop when caught up. Re-running with the same checkpoint processes
-    only new files. Batch tags are namespaced by a checkpoint-dir hash
-    (Structured Streaming restarts epoch numbering per checkpoint —
-    the embstats contract)."""
-    import hashlib
-
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    stream = (
-        spark.readStream.schema(DOC_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
+    only new files."""
+    drain(
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_mixture_batch(
+            b, state_dir, tag, targets, salt, feedback
+        ),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: apply_mixture_batch(
-                b, state_dir, f"{ck_tag}-{eid}", targets, salt, feedback
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def mixture_decisions(spark: SparkSession, state_dir: str) -> DataFrame:
     """(batch_tag, doc_id, domain, accept_rate, sampled) — the full
     persisted training manifest; empty frame if no state yet."""
-    return _read_deltas(
+    return read_fragments(
         spark, os.path.join(state_dir, "decisions"), DECISIONS_SCHEMA
     )
 

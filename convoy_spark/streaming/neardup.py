@@ -62,8 +62,13 @@ from convoy_spark.operators.dedup import (
     minhash_signatures_wide,
     shingle_hashes,
 )
-from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA  # noqa: F401 (re-export)
-from convoy_spark.streaming.util import append_store, drain, load_store
+from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
+from convoy_spark.streaming.util import (
+    append_store,
+    drain,
+    load_store,
+    stream_parquet,
+)
 
 BANDS_SCHEMA = "doc_id long, band int, key string"
 SHINGLES_SCHEMA = "doc_id long, h long"
@@ -230,10 +235,9 @@ def run_incremental_neardup(
     against the persisted sketch stores; stop when caught up.
     Re-running with the same checkpoint processes only new files."""
     drain(
-        spark,
-        landing_dir,
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
         checkpoint_dir,
-        lambda b: apply_neardup_batch(
+        lambda b, _tag: apply_neardup_batch(
             spark, b, state_dir, pairs_sink, min_jaccard, layout=layout
         ),
     )

@@ -12,7 +12,7 @@ manifest is bit-identical to the batch operator over the union
 (tested); out-of-order arrival produces the arrival-order stream —
 documented, still offset-exact and gapless.
 
-State: an ``offsets/batch-<tag>`` partition per batch holding
+State: an ``offsets/batch-<tag>`` fragment per batch holding
 (batch_tag, seq, total_tokens) — a LOGICAL CLOCK row (seq) plus the
 batch's token total. A batch's base offset is the sum of totals of
 all batches with smaller seq: reading the store is batches-count
@@ -20,8 +20,7 @@ rows, nothing corpus-proportional. Replay (foreachBatch is
 at-least-once) reuses its OWN persisted seq if present, else
 max(seq)+1 — both writes overwrite the batch's own partitions, so a
 crash between the manifest write and the offsets write converges on
-replay to identical rows (tested; the streaming/embstats.py
-contract).
+replay to identical rows (tested; the streaming/util.py contract).
 
 100 TB posture: per batch, one keyed block-prefix window over the
 batch (the shared two-phase scan) + a batches-count store read —
@@ -37,22 +36,19 @@ from pyspark.sql import functions as F
 
 from convoy_spark.operators.loader import block_prefix_sum
 from convoy_spark.functions.hashing import WS_SPLIT
+from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
 
 OFFSETS_SCHEMA = "batch_tag string, seq long, total_tokens long"
 PACKED_SCHEMA = (
     "batch_tag string, seq long, doc_id long, n_tokens long,"
     " start_offset long, pack_id long, crosses_boundary boolean"
 )
-
-
-def _read_deltas(spark: SparkSession, path: str, schema: str) -> DataFrame:
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], schema)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(schema)
-        .parquet(path)
-    )
 
 
 def apply_pack_batch(
@@ -66,7 +62,7 @@ def apply_pack_batch(
     block prefix scan, persist the manifest rows and the batch's
     offsets row (each overwriting its own partition)."""
     spark = batch.sparkSession
-    off = _read_deltas(
+    off = read_fragments(
         spark, os.path.join(state_dir, "offsets"), OFFSETS_SCHEMA
     )
     own = off.filter(F.col("batch_tag") == batch_tag).select("seq").first()
@@ -108,7 +104,7 @@ def apply_pack_batch(
         " ELSE FALSE END AS crosses_boundary",
     )
     packed.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "packed", f"batch-{batch_tag}")
+        fragment_path(state_dir, "packed", batch_tag)
     )
     total = (
         counted.agg(F.coalesce(F.sum("n_tokens"), F.lit(0)).alias("t"))
@@ -118,7 +114,7 @@ def apply_pack_batch(
     spark.createDataFrame(
         [(batch_tag, seq, total)], OFFSETS_SCHEMA
     ).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "offsets", f"batch-{batch_tag}")
+        fragment_path(state_dir, "offsets", batch_tag)
     )
 
 
@@ -130,34 +126,19 @@ def run_incremental_pack(
     seq_len: int = 1024,
 ) -> None:
     """Drain all document files present through the packer; stop when
-    caught up. Batch tags namespaced by a checkpoint-dir hash (the
-    embstats contract)."""
-    import hashlib
-
-    from convoy_spark.streaming.dedup import stream_docs
-
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    q = (
-        stream_docs(spark, landing_dir)
-        .writeStream.foreachBatch(
-            lambda b, eid: apply_pack_batch(
-                b, state_dir, f"{ck_tag}-{eid}", seq_len
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    caught up."""
+    drain(
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_pack_batch(b, state_dir, tag, seq_len),
     )
-    q.awaitTermination()
 
 
 def packed_manifest(spark: SparkSession, state_dir: str) -> DataFrame:
     """(doc_id, n_tokens, start_offset, pack_id, crosses_boundary) —
     the full streamed packing manifest (batch bookkeeping columns
     dropped; empty frame if no state yet)."""
-    return _read_deltas(
+    return read_fragments(
         spark, os.path.join(state_dir, "packed"), PACKED_SCHEMA
     ).select("doc_id", "n_tokens", "start_offset", "pack_id", "crosses_boundary")
 

@@ -14,14 +14,13 @@ BIT-IDENTICAL to the one-pass batch encode (tested), and re-delivered
 vectors produce byte-identical duplicate rows that the store read
 drops with one DISTINCT.
 
-State layout (the embstats/delta discipline, streaming/embstats.py):
+State layout:
 
 - ``codebook/`` — the frozen (sub, cell, dsub, m) table, written once
   by :func:`freeze_codebook`;
-- ``codes/batch-<tag>`` — per-batch delta partitions, each written
-  with dynamic overwrite of its OWN path so an at-least-once replay
-  (streaming/util.py contract) overwrites itself idempotently instead
-  of appending duplicates.
+- ``codes/batch-<tag>`` — a fragment store (the streaming/util.py
+  contract): a replay overwrites its own partition instead of
+  appending duplicates.
 
 100 TB posture: the per-batch cost is one broadcast join (the
 codebook is n_sub·ks·ds doubles — always broadcast) plus two keyed
@@ -47,6 +46,12 @@ from convoy_spark.operators.pq import (
     pq_codebooks,
 )
 from convoy_spark.streaming.embstats import EMB_STREAM_SCHEMA
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
 
 CODES_SCHEMA = "vec_id long, sub int, code int"
 
@@ -80,16 +85,14 @@ def apply_pqencode_batch(
 ) -> None:
     """Encode one micro-batch of (vec_id, embedding) against the
     frozen codebook; write its codes to the batch's own delta
-    partition (idempotent under replay). ``batch_tag`` must be unique
-    per logical batch ACROSS drains — the runner namespaces the epoch
-    id by a checkpoint-dir hash (streaming/embstats.py contract)."""
+    partition (idempotent under replay)."""
     spark = batch.sparkSession
     cb, ds, ks = _load_codebook(spark, state_dir)
     codes = _assign(_sub_exploded(batch, ds, "embedding", "vec_id"), cb, ks)
     codes.select(
         "vec_id", F.col("sub").cast("int"), F.col("code").cast("int")
     ).write.mode("overwrite").parquet(
-        os.path.join(state_dir, "codes", f"batch-{batch_tag}")
+        fragment_path(state_dir, "codes", batch_tag)
     )
 
 
@@ -102,25 +105,11 @@ def run_incremental_pqencode(
     """Drain all embedding files present into the code store; stop
     when caught up. Re-running with the same checkpoint processes
     only new files."""
-    import hashlib
-
-    stream = (
-        spark.readStream.schema(EMB_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
+    drain(
+        stream_parquet(spark, landing_dir, EMB_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_pqencode_batch(b, state_dir, tag),
     )
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: apply_pqencode_batch(b, state_dir, f"{ck_tag}-{eid}")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def encoded_codes(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -128,15 +117,9 @@ def encoded_codes(spark: SparkSession, state_dir: str) -> DataFrame:
     store alone. DISTINCT collapses cross-drain re-deliveries (codes
     are pure functions of the frozen codebook, so duplicates are
     byte-identical rows). An absent store yields zero rows."""
-    path = os.path.join(state_dir, "codes")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], CODES_SCHEMA)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(CODES_SCHEMA)
-        .parquet(path)
-        .distinct()
-    )
+    return read_fragments(
+        spark, os.path.join(state_dir, "codes"), CODES_SCHEMA
+    ).distinct()
 
 
 def batch_codes(

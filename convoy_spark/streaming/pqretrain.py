@@ -24,7 +24,8 @@ never move the decision variable).
 State layout (the pqencode ``codes/`` discipline, shared state_dir):
 
 - ``codebook/`` — the frozen quantizer (pqencode.freeze_codebook);
-- ``errors/batch-<tag>/`` — per-batch PER-VECTOR error rows
+- ``errors/batch-<tag>/`` — a fragment store (the streaming/util.py
+  contract) of per-batch PER-VECTOR error rows
   (vec_id, epoch, err). Deliberately NOT pre-aggregated: err is a
   pure deterministic function of (vector, frozen codebook), so a
   replayed batch overwrites its own partition with byte-identical
@@ -63,6 +64,12 @@ from convoy_spark.operators.pq import (
 )
 from convoy_spark.streaming.embstats import EMB_STREAM_SCHEMA
 from convoy_spark.streaming.pqencode import _load_codebook
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
 
 # Trigger policy (shared with the hash-checked catalog query
 # queries/similarity.py::pq_retrain_trigger, which imports these):
@@ -101,13 +108,11 @@ def apply_pqretrain_batch(
     batch: DataFrame, state_dir: str, batch_tag: str
 ) -> None:
     """Score one micro-batch and write its error rows to the batch's
-    own partition (idempotent overwrite under at-least-once replay —
-    the streaming/util.py contract)."""
+    own partition (idempotent overwrite under replay)."""
     spark = batch.sparkSession
     cb, ds, ks = _load_codebook(spark, state_dir)
-    out = os.path.join(state_dir, "errors", f"batch-{batch_tag}")
     batch_vector_errors(batch, cb, ds, ks).write.mode("overwrite").parquet(
-        out
+        fragment_path(state_dir, "errors", batch_tag)
     )
 
 
@@ -120,27 +125,11 @@ def run_incremental_pqretrain(
     """Drain all embedding files present into the error store; stop
     when caught up (availableNow). Re-running with the same
     checkpoint processes only new files."""
-    import hashlib
-
-    stream = (
-        spark.readStream.schema(EMB_LABEL_STREAM_SCHEMA)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(landing_dir)
+    drain(
+        stream_parquet(spark, landing_dir, EMB_LABEL_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_pqretrain_batch(b, state_dir, tag),
     )
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: apply_pqretrain_batch(
-                b, state_dir, f"{ck_tag}-{eid}"
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def stored_errors(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -148,15 +137,9 @@ def stored_errors(spark: SparkSession, state_dir: str) -> DataFrame:
     collapses cross-drain re-deliveries (rows are pure functions of
     the frozen codebook — duplicates are byte-identical). An absent
     store yields zero rows."""
-    path = os.path.join(state_dir, "errors")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], ERR_SCHEMA)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(ERR_SCHEMA)
-        .parquet(path)
-        .distinct()
-    )
+    return read_fragments(
+        spark, os.path.join(state_dir, "errors"), ERR_SCHEMA
+    ).distinct()
 
 
 def trigger_surface(errors: DataFrame) -> DataFrame:

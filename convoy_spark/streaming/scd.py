@@ -29,10 +29,10 @@ divergence case). Under the contract the streamed history is
 bit-identical to ``scd2_snapshot`` over the union (tested: ordered,
 out-of-order, chunk-boundary-splitting-a-run, replay).
 
-Replay/crash: one store, one ``overwrite``-mode write per batch into
-the batch's own partition — at-least-once redelivery converges to
-identical bytes (the streaming/embstats.py contract; no fence needed
-because there is a single store).
+Replay/crash: one fragment store (the streaming/util.py contract),
+one write per batch into the batch's own partition — at-least-once
+redelivery converges to identical bytes (no fence needed because
+there is a single store).
 
 100 TB posture: per batch one keyed window over the BATCH plus an
 append; the history view is one keyed window over the fragment store
@@ -51,6 +51,13 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragments,
+    stream_parquet,
+)
+
 FRAG_SCHEMA = (
     "batch_tag string, user_id long, event_type string,"
     " frag_start_us long, frag_end_us long, n_events long,"
@@ -60,17 +67,6 @@ FRAG_SCHEMA = (
 EVENT_CHUNK_SCHEMA = (
     "event_id long, ts_us long, user_id long, event_type string"
 )
-
-
-def _read_frags(spark: SparkSession, state_dir: str) -> DataFrame:
-    path = os.path.join(state_dir, "frags")
-    if not os.path.isdir(path):
-        return spark.createDataFrame([], FRAG_SCHEMA)
-    return (
-        spark.read.option("recursiveFileLookup", "true")
-        .schema(FRAG_SCHEMA)
-        .parquet(path)
-    )
 
 
 def batch_fragments(batch: DataFrame) -> DataFrame:
@@ -111,7 +107,7 @@ def apply_scd_batch(
         "first_event_id",
     )
     frags.write.mode("overwrite").parquet(
-        os.path.join(state_dir, "frags", f"batch-{batch_tag}")
+        fragment_path(state_dir, "frags", batch_tag)
     )
 
 
@@ -121,7 +117,7 @@ def scd_history(spark: SparkSession, state_dir: str) -> DataFrame:
     under the delivery contract), then chain ``valid_to`` via lead.
     Output schema matches ``scd2_snapshot``: (user_id, run_id,
     event_type, valid_from, valid_to, n_events)."""
-    frags = _read_frags(spark, state_dir)
+    frags = read_fragments(spark, os.path.join(state_dir, "frags"), FRAG_SCHEMA)
     w = Window.partitionBy("user_id").orderBy(
         "frag_start_us", "first_event_id"
     )
@@ -159,25 +155,12 @@ def run_incremental_scd(
     state_dir: str,
 ) -> None:
     """Drain all event-chunk files present through the SCD maintainer;
-    stop when caught up. Batch tags namespaced by a checkpoint-dir
-    hash (the embstats contract)."""
-    import hashlib
-
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    stream = spark.readStream.schema(EVENT_CHUNK_SCHEMA).parquet(
-        landing_dir
+    stop when caught up."""
+    drain(
+        stream_parquet(spark, landing_dir, EVENT_CHUNK_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_scd_batch(b, state_dir, tag),
     )
-    q = (
-        stream.writeStream.foreachBatch(
-            lambda b, eid: apply_scd_batch(b, state_dir, f"{ck_tag}-{eid}")
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 __all__ = [

@@ -66,7 +66,8 @@ from pyspark.sql.streaming.stateful_processor import (
     StatefulProcessorHandle,
 )
 
-from convoy_spark.streaming.graph import stream_edges
+from convoy_spark.streaming.graph import EDGE_STREAM_SCHEMA
+from convoy_spark.streaming.util import stream_parquet
 
 UPSERT_SCHEMA = "node_id long, root_id long"
 
@@ -172,7 +173,9 @@ def run_stateful_closure(
     from convoy_spark.session import ensure_executor_imports
 
     ensure_executor_imports(spark)
-    upserts = closure_upserts(stream_edges(spark, landing_dir))
+    upserts = closure_upserts(
+        stream_parquet(spark, landing_dir, EDGE_STREAM_SCHEMA)
+    )
     q = (
         upserts.writeStream.foreachBatch(sink)
         .option("checkpointLocation", checkpoint_dir)

@@ -63,7 +63,13 @@ from convoy_spark.operators.dedup import (
     SUBSTR_MOD,
     sampled_gram_hashes,
 )
-from convoy_spark.streaming.util import append_store, drain, load_store
+from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
+from convoy_spark.streaming.util import (
+    append_store,
+    drain,
+    load_store,
+    stream_parquet,
+)
 
 GRAMS_SCHEMA = "doc_id long, gh long"
 DEAD_SCHEMA = "gh long"
@@ -188,10 +194,9 @@ def run_incremental_substrdup(
     Pass ``layout="bucketed"`` through ``kw`` for the bucketed store
     layout."""
     drain(
-        spark,
-        landing_dir,
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
         checkpoint_dir,
-        lambda b: apply_substrdup_batch(
+        lambda b, _tag: apply_substrdup_batch(
             spark, b, state_dir, pairs_sink, **kw
         ),
     )

@@ -44,8 +44,8 @@ information-theoretic floor), and each re-rank is the full
 prefix-doubling run over it; the streaming win is confined to the
 tokenize amortization and the landing-file bookkeeping.
 
-State layout (the indexdrift delta-partition pattern — a replayed
-batch overwrites ITS OWN partition idempotently, never double-adds):
+State layout (a fragment store, the streaming/util.py contract — a
+replayed batch overwrites ITS OWN partition, never double-adds):
 
 - ``deltas/batch-<tag>/positions``: (seq, doc_id, pos, tok) — the
   batch's token positions; written FIRST;
@@ -74,35 +74,16 @@ from convoy_spark.operators.suffix import (
     crossdoc_repeat_profile,
     token_positions,
 )
+from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
+from convoy_spark.streaming.util import (
+    drain,
+    fragment_path,
+    read_fragment_kind,
+    stream_parquet,
+)
 
 POS_SCHEMA = "seq long, doc_id long, pos int, tok string"
 DOCS_SCHEMA = "seq long, doc_id long, n_toks long"
-
-
-def _read_delta_kind(
-    spark: SparkSession,
-    deltas_dir: str,
-    kind: str,
-    schema: str,
-    committed_only: bool = False,
-) -> DataFrame:
-    """Read one kind across batch partitions. With ``committed_only``,
-    a partition contributes only when its SIBLING ``docs`` marker (same
-    batch-<tag> dir) exists — seq values are NOT commit evidence, since
-    two checkpoint lineages into one store can compute the same seq and
-    one's marker must not commit the other's torn positions."""
-    parts = []
-    if os.path.isdir(deltas_dir):
-        for b in sorted(os.listdir(deltas_dir)):
-            p = os.path.join(deltas_dir, b, kind)
-            if os.path.isdir(p) and (
-                not committed_only
-                or os.path.isdir(os.path.join(deltas_dir, b, "docs"))
-            ):
-                parts.append(p)
-    if not parts:
-        return spark.createDataFrame([], schema)
-    return spark.read.schema(schema).parquet(*parts)
 
 
 def apply_suffix_batch(
@@ -115,7 +96,7 @@ def apply_suffix_batch(
     the batch's positions + doc universe to its own delta partition
     (idempotent under replay — the indexdrift seq/commit-marker
     discipline)."""
-    base = os.path.join(state_dir, "deltas", f"batch-{batch_tag}")
+    base = fragment_path(state_dir, "deltas", batch_tag)
     pos_path = os.path.join(base, "positions")
     docs_path = os.path.join(base, "docs")
 
@@ -126,7 +107,7 @@ def apply_suffix_batch(
             seq = None if row is None else row.seq
     if seq is None:
         prev = (
-            _read_delta_kind(
+            read_fragment_kind(
                 spark, os.path.join(state_dir, "deltas"), "docs", DOCS_SCHEMA
             )
             .agg(F.max("seq").alias("m"))
@@ -168,25 +149,11 @@ def run_incremental_suffix_store(
     """Drain all document files present into the position store; stop
     when caught up. Re-running with the same checkpoint processes only
     new files."""
-    import hashlib
-
-    from convoy_spark.streaming.dedup import stream_docs
-
-    ck_tag = hashlib.blake2s(
-        os.path.abspath(checkpoint_dir).encode(), digest_size=8
-    ).hexdigest()
-    q = (
-        stream_docs(spark, landing_dir)
-        .writeStream.foreachBatch(
-            lambda b, eid: apply_suffix_batch(
-                spark, b, state_dir, f"{ck_tag}-{eid}"
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    drain(
+        stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
+        checkpoint_dir,
+        lambda b, tag: apply_suffix_batch(spark, b, state_dir, tag),
     )
-    q.awaitTermination()
 
 
 def suffix_repeat_over_store(
@@ -208,7 +175,7 @@ def suffix_repeat_over_store(
     # its positions from its first committed batch only.
     tag = F.regexp_extract(F.input_file_name(), r"/batch-([^/]+)/positions/", 1)
     pos = (
-        _read_delta_kind(spark, deltas, "positions", POS_SCHEMA, committed_only=True)
+        read_fragment_kind(spark, deltas, "positions", POS_SCHEMA, commit="docs")
         .select("doc_id", "pos", "tok", F.struct("seq", tag).alias("batch"))
         .withColumn("first", F.min("batch").over(Window.partitionBy("doc_id")))
         .filter(F.col("batch") == F.col("first"))
@@ -216,7 +183,7 @@ def suffix_repeat_over_store(
         .localCheckpoint(eager=False)
     )
     universe = (
-        _read_delta_kind(spark, deltas, "docs", DOCS_SCHEMA)
+        read_fragment_kind(spark, deltas, "docs", DOCS_SCHEMA)
         .select("doc_id")
         .distinct()
     )

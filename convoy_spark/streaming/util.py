@@ -1,24 +1,46 @@
-"""Shared helpers for the incremental streaming stores.
+"""Shared helpers for the incremental streaming stores: the drain
+protocol, the tagged-fragment layout and the store read/append layouts.
 
 Crash-consistency contract (applies to every store module here):
 ``foreachBatch`` gives AT-LEAST-ONCE execution of the batch function —
 the checkpoint fences re-processing of already-committed files, but a
-crash mid-batch replays the whole batch on restart. Therefore each
-module (a) fences every store APPEND on that same store's own
-doc-membership (a replay re-appends only what its crash lost — stores
-converge to exactly one row-set per doc no matter where the crash
-landed), and (b) documents its pair/result emission as at-least-once
-under mid-batch crash (exactly-once per delivered FILE in normal
-operation); sinks that need stronger semantics deduplicate on the
-emitted key, which every emitter here makes deterministic.
+crash mid-batch replays the whole batch on restart. Two store shapes
+make that replay safe:
+
+- FRAGMENT stores write each micro-batch to its own partition,
+  ``<state_dir>/<kind>/batch-<tag>`` (:func:`fragment_path`), with
+  overwrite of that one path, and read every partition back at once
+  (:func:`read_fragments`). A store that writes several files per
+  batch puts them inside the partition (``batch-<tag>/<file>``, read
+  by :func:`read_fragment_kind`) and writes its commit file last. A
+  replayed batch overwrites only its own partition, never double-adds.
+  :func:`drain` hands each batch its tag,
+  ``f"{blake2s(abspath(checkpoint_dir), digest_size=8)}-{epoch_id}"``:
+  Structured Streaming restarts epoch numbering per checkpoint, so the
+  checkpoint-dir hash keeps two drains into one state dir from
+  overwriting each other's ``batch-0``. Stores already on disk are
+  keyed by this exact format; changing it would turn the replay of an
+  old epoch into a second partition, which is a double count.
+- KEYED stores (dedup, funnel, graph, index, neardup, substrdup)
+  ignore the tag and fence every write on that same store's own keys
+  (content hashes, node ids, doc ids): a replay re-writes only what its
+  crash lost, so each store converges to exactly one row-set per key
+  no matter where the crash landed.
+
+Pair/result emission is at-least-once under a mid-batch crash
+(exactly-once per delivered FILE in normal operation); sinks that need
+stronger semantics deduplicate on the emitted key, which every emitter
+here makes deterministic.
 """
 
 from __future__ import annotations
 
 import hashlib
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Default bucket count for the bucketed store layout. Local testing
 # value; on a cluster size it so each bucket's history fits one task
@@ -123,20 +145,41 @@ def append_store(
     )
 
 
-def drain(
-    spark: SparkSession,
-    landing_dir: str,
-    checkpoint_dir: str,
-    batch_fn,
-) -> None:
-    """Drain all document files present through ``batch_fn(batch_df)``;
-    stop when caught up. Re-running with the same checkpoint processes
-    only new files."""
-    from convoy_spark.streaming.dedup import stream_docs
+def stream_parquet(
+    spark: SparkSession, landing_dir: str, schema: StructType | str
+) -> DataFrame:
+    """File-stream of the ``*.parquet`` drops in ``landing_dir``; any
+    other file there (a manifest, an editor's temp file) is skipped."""
+    return (
+        spark.readStream.schema(schema)
+        .option("pathGlobFilter", "*.parquet")
+        .parquet(landing_dir)
+    )
 
+
+def batch_tag(checkpoint_dir: str, epoch_id: int) -> str:
+    """The fragment tag of epoch ``epoch_id`` of the drain
+    checkpointed at ``checkpoint_dir`` (format: module docstring)."""
+    ck = hashlib.blake2s(
+        os.path.abspath(checkpoint_dir).encode(), digest_size=8
+    ).hexdigest()
+    return f"{ck}-{epoch_id}"
+
+
+# The memory-sink drivers (incremental.py, stateful_graph.py's
+# run_stateful_closure) stay off drain: their output mode and sink differ.
+def drain(
+    source: DataFrame,
+    checkpoint_dir: str,
+    batch_fn: Callable[[DataFrame, str], None],
+) -> None:
+    """Drain every file present in the streaming ``source`` through
+    ``batch_fn(batch_df, tag)``; stop when caught up. Re-running with
+    the same checkpoint processes only new files."""
     q = (
-        stream_docs(spark, landing_dir)
-        .writeStream.foreachBatch(lambda b, _id: batch_fn(b))
+        source.writeStream.foreachBatch(
+            lambda b, eid: batch_fn(b, batch_tag(checkpoint_dir, eid))
+        )
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
@@ -144,4 +187,55 @@ def drain(
     q.awaitTermination()
 
 
-__all__ = ["STORE_BUCKETS", "append_store", "drain", "load_store"]
+def fragment_path(state_dir: str, kind: str, tag: str) -> str:
+    """The partition one batch of a fragment store writes."""
+    return os.path.join(state_dir, kind, f"batch-{tag}")
+
+
+def read_fragments(
+    spark: SparkSession, path: str, schema: str
+) -> DataFrame:
+    """Every fragment under ``path`` as one frame, or an empty typed
+    frame if the store does not exist yet."""
+    if not os.path.isdir(path):
+        return spark.createDataFrame([], schema)
+    return (
+        spark.read.option("recursiveFileLookup", "true")
+        .schema(schema)
+        .parquet(path)
+    )
+
+
+def read_fragment_kind(
+    spark: SparkSession,
+    path: str,
+    kind: str,
+    schema: str,
+    commit: str | None = None,
+) -> DataFrame:
+    """The ``kind`` file of every fragment under ``path``, for stores
+    that write several files per batch (``batch-<tag>/<kind>``), or an
+    empty typed frame. With ``commit``, a fragment counts only once its
+    sibling ``commit`` file (the batch's last write) exists."""
+    parts = [
+        os.path.join(path, b, kind)
+        for b in (sorted(os.listdir(path)) if os.path.isdir(path) else [])
+        if os.path.isdir(os.path.join(path, b, kind))
+        and (commit is None or os.path.isdir(os.path.join(path, b, commit)))
+    ]
+    if not parts:
+        return spark.createDataFrame([], schema)
+    return spark.read.schema(schema).parquet(*parts)
+
+
+__all__ = [
+    "STORE_BUCKETS",
+    "append_store",
+    "batch_tag",
+    "drain",
+    "fragment_path",
+    "load_store",
+    "read_fragment_kind",
+    "read_fragments",
+    "stream_parquet",
+]

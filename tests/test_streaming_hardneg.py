@@ -7,6 +7,8 @@ shortlist-proportional, never corpus-proportional."""
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import functions as F
 
 from convoy_spark.streaming.hardneg import (
@@ -101,19 +103,21 @@ def test_compaction_preserves_and_composes(spark, tmp_path):
     exactly: mine 2 batches -> compact -> mine a 3rd -> equals the
     one-pass batch twin over all 3."""
     from convoy_spark.streaming.compact import compact_hardneg
-    from convoy_spark.streaming.hardneg import _read_deltas, HN_SHORT_SCHEMA
+    from convoy_spark.streaming.hardneg import HN_SHORT_SCHEMA
+    from convoy_spark.streaming.util import read_fragments
 
     emb, state = _state(spark, tmp_path, "state_cp")
+    hn_short = os.path.join(state, "hn_short")
     b0 = emb.filter("vec_id < 150")
     b1 = emb.filter("vec_id >= 150 AND vec_id < 300")
     b2 = emb.filter("vec_id >= 300")
     apply_hardneg_batch(spark, b0, state, "t-0")
     apply_hardneg_batch(spark, b1, state, "t-1")
     before = _rows(mined_negatives(spark, state))
-    n_before = _read_deltas(spark, state, "hn_short", HN_SHORT_SCHEMA).count()
+    n_before = read_fragments(spark, hn_short, HN_SHORT_SCHEMA).distinct().count()
     replaced = compact_hardneg(spark, state)
     assert replaced > 0
-    n_after = _read_deltas(spark, state, "hn_short", HN_SHORT_SCHEMA).count()
+    n_after = read_fragments(spark, hn_short, HN_SHORT_SCHEMA).distinct().count()
     assert n_after < n_before
     assert _rows(mined_negatives(spark, state)) == before
     apply_hardneg_batch(spark, b2, state, "t-2")

@@ -76,6 +76,20 @@ def test_replay_idempotent(spark, tmp_path):
     assert _rows(scd_history(spark, state)) == once
 
 
+def test_stray_landing_file_is_skipped(spark, tmp_path):
+    """A non-parquet file in the landing dir (a manifest beside the
+    chunk files) is not a batch: the drain reads only ``*.parquet``."""
+    ev = _chunks(spark)[0]
+    land = tmp_path / "land"
+    ev.coalesce(1).write.parquet(str(land))
+    (land / "MANIFEST.txt").write_text("chunk 0 of 3\n")
+    state = str(tmp_path / "state-stray")
+    run_incremental_scd(spark, str(land), str(tmp_path / "ck-stray"), state)
+    ref = str(tmp_path / "state-ref")
+    apply_scd_batch(ev, ref, "t-0")
+    assert _rows(scd_history(spark, state)) == _rows(scd_history(spark, ref))
+
+
 def test_interleaved_timeline_diverges_as_documented(spark, tmp_path):
     # user 1: X@t1, Y@t2, X@t3 split as {t1,t3} then {t2} — the
     # fragment store cannot re-split batch A's X-run, so the streamed
