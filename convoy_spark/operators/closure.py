@@ -46,9 +46,11 @@ def closure_roots(
     ----------
     edges:
         One row per node: ``(child_id, parent_id)``; ``parent_id`` is
-        NULL for roots. (Multiple parents would make this a DAG — the
-        reference's data model guarantees a forest, and the first
-        parent wins there via INSERT IGNORE; callers must pre-dedup.)
+        NULL for roots. A parent that has no row of its own is a root
+        too, so callers need not add root rows. (Multiple parents
+        would make this a DAG — the reference's data model guarantees
+        a forest, and the first parent wins there via INSERT IGNORE;
+        callers must pre-dedup.)
     max_iterations:
         Bound on doubling iterations — 50 covers depth 2^50; on a
         true forest the loop always exits long before this.
@@ -304,13 +306,8 @@ def incremental_closure_update(
     return healed.unionByName(new_rows)
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iterations: int = 30,
-) -> DataFrame:
-    """(node_id, component_id) over an UNDIRECTED pair list;
+def connected_components(pairs: DataFrame, max_iterations: int = 30) -> DataFrame:
+    """(node_id, component_id) over an UNDIRECTED (doc_a, doc_b) pair list;
     ``component_id`` = the minimum node id in the component —
     deterministic under any partitioning.
 
@@ -331,9 +328,9 @@ def connected_components(
     O(diameter). Each round is two equi-joins + a min-agg, all keyed
     shuffles, one count job via the lazy-checkpoint pattern."""
     sym = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
+        F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")
     ).unionByName(
-        pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
+        pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst"))
     )
     labels = (
         sym.select(F.col("src").alias("node_id"))

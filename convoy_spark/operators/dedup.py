@@ -56,7 +56,7 @@ SIMHASH_BITS = 60
 SIMHASH_BLOCKS = 5  # pigeonhole: finds all pairs with hamming <= 4
 
 
-def doc_tokens(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def doc_tokens(docs: DataFrame) -> DataFrame:
     """(id, token) — lowercased whitespace tokens, one row each.
 
     The input is widened first: a single-row-group parquet file scans
@@ -65,17 +65,12 @@ def doc_tokens(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") 
     from convoy_spark.operators.scale import widen_narrow_scan
 
     return widen_narrow_scan(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(F.split(F.lower(F.col(text_col)), TOKEN_SPLIT)).alias("token"),
+        "doc_id",
+        F.explode(F.split(F.lower(F.col("text")), TOKEN_SPLIT)).alias("token"),
     ).filter(F.col("token") != "")
 
 
-def doc_shingles(
-    docs: DataFrame,
-    n: int = 3,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, shingle) — distinct word n-grams. Built with array
     built-ins (transform/sequence/slice/array_join): whole-stage
     codegen, no Python in the loop, zero shuffle before the distinct.
@@ -87,8 +82,7 @@ def doc_shingles(
     from convoy_spark.operators.scale import widen_narrow_scan
 
     tokens = widen_narrow_scan(docs).select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.lower(F.col(text_col)), TOKEN_SPLIT).alias("toks"),
+        "doc_id", F.split(F.lower(F.col("text")), TOKEN_SPLIT).alias("toks")
     )
     shingle_expr = F.when(
         F.size("toks") >= n,
@@ -107,9 +101,9 @@ def doc_shingles(
     )
 
 
-def shingle_hashes(docs: DataFrame, n: int = 3, **kw) -> DataFrame:
+def shingle_hashes(docs: DataFrame, n: int = 3) -> DataFrame:
     """(doc_id, h) — 60-bit hash per distinct shingle."""
-    return doc_shingles(docs, n, **kw).select(
+    return doc_shingles(docs, n).select(
         "doc_id", hash60(F.col("shingle")).alias("h")
     )
 
@@ -458,8 +452,6 @@ def minhash_lsh_neardup(
 def simhash_signature(
     docs: DataFrame,
     bits: int = SIMHASH_BITS,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, simhash) — frequency-weighted SimHash over unigram
     tokens: bit j of the fingerprint is the sign of
@@ -505,7 +497,7 @@ def simhash_signature(
             packed = packed + f_
         packed_sums.append(F.sum(packed).alias(f"p{k}"))
     per_doc = (
-        doc_tokens(docs, text_col, id_col)
+        doc_tokens(docs)
         .select("doc_id", hash60(F.col("token")).alias("h"))
         .groupBy("doc_id")
         .agg(F.count("*").alias("n"), *packed_sums)
@@ -578,9 +570,7 @@ def simhash_neardup(
     )
 
 
-def exact_dedup_map(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def exact_dedup_map(df: DataFrame) -> DataFrame:
     """(doc_id, content_hash, canonical_id) — exact content dedup by
     hash group; the lowest id in each group is canonical (deterministic
     first-wins, unlike partition-order-dependent dropDuplicates —
@@ -592,9 +582,7 @@ def exact_dedup_map(
     join); measured 0.59 → 0.24 s at sf1.0. Groups are dup clusters
     (tiny), so the window's per-group buffering is bounded; a
     pathological everyone-identical corpus skews ONE task either way."""
-    hashed = df.select(
-        F.col(id_col).alias("doc_id"), hash60(F.col(text_col)).alias("content_hash")
-    )
+    hashed = df.select("doc_id", hash60(F.col("text")).alias("content_hash"))
     w = Window.partitionBy("content_hash")
     return hashed.select(
         "doc_id",
@@ -709,12 +697,7 @@ def substring_dup_pairs(
 SPAN_K = 8  # span unit, in whitespace tokens
 
 
-def span_dedup(
-    docs: DataFrame,
-    k: int = SPAN_K,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
+def span_dedup(docs: DataFrame, k: int = SPAN_K) -> DataFrame:
     """(doc_id, clean_text, spans_kept, spans_dropped) — corpus-wide
     duplicated-span removal: the token stream of each document is cut
     into consecutive ``k``-token spans; every span that textually
@@ -741,12 +724,9 @@ def span_dedup(
     count), so every row of a window partition shares it — the
     CASE-wrapped rank stays consistent within a partition."""
     toks = F.filter(
-        F.split(F.col(text_col), TOKEN_SPLIT), lambda t: t != F.lit("")
+        F.split(F.col("text"), TOKEN_SPLIT), lambda t: t != F.lit("")
     )
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        toks.alias("_toks"),
-    ).select(
+    base = docs.select("doc_id", toks.alias("_toks")).select(
         "doc_id",
         "_toks",
         F.size("_toks").alias("_n"),
@@ -788,7 +768,7 @@ def span_dedup(
     )
 
 
-def fuzzy_pairs_dist1(names: DataFrame, name_col: str = "name") -> DataFrame:
+def fuzzy_pairs_dist1(names: DataFrame) -> DataFrame:
     """(name_a, name_b): all distinct unordered pairs at Levenshtein
     distance EXACTLY 1 — FastSS (Bocek et al. 2007) restated as
     equi-joins: index every name under itself plus each single-
@@ -806,7 +786,7 @@ def fuzzy_pairs_dist1(names: DataFrame, name_col: str = "name") -> DataFrame:
     deletion apart) is real skew the verify join handles via AQE
     skew-split, not a shortcut.
     """
-    base = names.select(F.col(name_col).alias("n")).where(
+    base = names.select(F.col("name").alias("n")).where(
         F.col("n").isNotNull()
     ).distinct()
     variants = F.expr(
@@ -840,7 +820,6 @@ SNM_WINDOW = 4  # sorted-neighborhood window (rank distance < SNM_WINDOW)
 
 def sorted_neighborhood_pairs(
     names: DataFrame,
-    name_col: str = "name",
     window: int = SNM_WINDOW,
     checkpoint: bool = True,
 ) -> DataFrame:
@@ -867,7 +846,7 @@ def sorted_neighborhood_pairs(
     from convoy_spark.operators.scale import range_rank
 
     base = (
-        names.select(F.col(name_col).alias("n"))
+        names.select(F.col("name").alias("n"))
         .where(F.col("n").isNotNull())
         .distinct()
     )

@@ -46,9 +46,9 @@ HH_K = 2000
 HH_SUMMARY = 8192  # m+1 >= K with 4x slack for fewer shrink passes
 
 
-def _tokens_exploded(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def _tokens_exploded(docs: DataFrame) -> DataFrame:
     toks = F.filter(
-        F.split(F.lower(F.col(text_col)), WS_SPLIT), lambda t: t != F.lit("")
+        F.split(F.lower(F.col("text")), WS_SPLIT), lambda t: t != F.lit("")
     )
     return docs.select(F.explode(toks).alias("token"))
 
@@ -96,7 +96,6 @@ def heavy_hitters(
     docs: DataFrame,
     k_inv: int = HH_K,
     summary_size: int = HH_SUMMARY,
-    text_col: str = "text",
     checkpoint: bool = True,
 ) -> DataFrame:
     """(token, freq) for every token with freq * k_inv > N, exactly.
@@ -107,7 +106,7 @@ def heavy_hitters(
     superset guarantee the exactness rests on.
     """
     assert summary_size + 1 >= k_inv, "MG summary too small for threshold"
-    tokens = _tokens_exploded(docs, text_col)
+    tokens = _tokens_exploded(docs)
     hashed = tokens.select(F.xxhash64("token").alias("th"))
     sketch = hashed.mapInPandas(_mg_partition(summary_size), "th long, n long")
     if checkpoint:
@@ -141,7 +140,7 @@ CM_DEPTH = 4
 CM_WIDTH = 1024
 
 
-def count_min_cells(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def count_min_cells(docs: DataFrame) -> DataFrame:
     """(row, bucket, c) — the Count-Min sketch (Cormode &
     Muthukrishnan 2005) of the corpus token stream: for each token
     OCCURRENCE, row i increments bucket ``perm_hash_i(hash60(token))
@@ -160,7 +159,7 @@ def count_min_cells(docs: DataFrame, text_col: str = "text") -> DataFrame:
     DuckDB oracle."""
     from convoy_spark.functions.hashing import minhash_params, perm_hash
 
-    toks = _tokens_exploded(docs, text_col).select(
+    toks = _tokens_exploded(docs).select(
         hash60(F.col("token")).alias("h")
     )
     cells = F.array(
@@ -182,7 +181,7 @@ def count_min_cells(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def count_min_estimates(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def count_min_estimates(docs: DataFrame) -> DataFrame:
     """(token, exact, cm_estimate, overestimate, within_bound) — every
     distinct token's exact occurrence count next to its Count-Min
     point estimate (min over the d rows of the token's cells), plus
@@ -200,9 +199,9 @@ def count_min_estimates(docs: DataFrame, text_col: str = "text") -> DataFrame:
     # per-depth broadcast legs below (round-6 ADVICE #3: without this
     # the full tokenize+explode+agg pipeline re-executed CM_DEPTH
     # times — the setsim/minhash shared-frame pattern applies here too)
-    sketch = count_min_cells(docs, text_col).localCheckpoint(eager=False)
+    sketch = count_min_cells(docs).localCheckpoint(eager=False)
     exact = (
-        _tokens_exploded(docs, text_col)
+        _tokens_exploded(docs)
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("exact"))
     )

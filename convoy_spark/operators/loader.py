@@ -83,9 +83,7 @@ def block_prefix_sum(
     )
 
 
-def pack_sequences(
-    docs: DataFrame, seq_len: int = 1024, text_col: str = "text"
-) -> DataFrame:
+def pack_sequences(docs: DataFrame, seq_len: int = 1024) -> DataFrame:
     """(doc_id, n_tokens, start_offset, pack_id, crosses_boundary) —
     GPT-style concatenate-and-chunk packing: documents are laid out in
     doc_id order as one token stream and cut into fixed ``seq_len``
@@ -101,7 +99,7 @@ def pack_sequences(
     per-block window) + one broadcast — no single-task scan."""
     n_tok = F.size(
         F.filter(
-            F.split(F.lower(F.col(text_col)), WS_SPLIT),
+            F.split(F.lower(F.col("text")), WS_SPLIT),
             lambda t: t != F.lit(""),
         )
     ).cast("long")
@@ -125,8 +123,6 @@ def chunk_documents(
     docs: DataFrame,
     chunk_size: int = 64,
     stride: int = 48,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, chunk_id, start_token, n_chunk_tokens, chunk_text) —
     RAG-style overlapping token-window chunking: each document's
@@ -149,10 +145,10 @@ def chunk_documents(
     if not (0 < stride <= chunk_size):
         raise ValueError("need 0 < stride <= chunk_size")
     toks = F.filter(
-        F.split(F.col(text_col), WS_SPLIT), lambda t: t != F.lit("")
+        F.split(F.col("text"), WS_SPLIT), lambda t: t != F.lit("")
     )
     base = (
-        docs.select(F.col(id_col).alias("doc_id"), toks.alias("_toks"))
+        docs.select("doc_id", toks.alias("_toks"))
         .withColumn("n_tokens", F.size("_toks").cast("long"))
         .filter(F.col("n_tokens") > 0)
     )
@@ -187,9 +183,7 @@ def chunk_documents(
     )
 
 
-def epoch_shuffle(
-    docs: DataFrame, epoch: int, id_col: str = "doc_id"
-) -> DataFrame:
+def epoch_shuffle(docs: DataFrame, epoch: int) -> DataFrame:
     """(doc_id, shuffle_key, shuffle_pos) — the deterministic global
     shuffle a training loader applies per epoch: order by
     ``hash60(epoch || ':' || doc_id)`` (a new pseudorandom permutation
@@ -200,8 +194,8 @@ def epoch_shuffle(
     two-phase scan as packing, never a single-task global
     row_number."""
     keyed = docs.select(
-        F.col(id_col).alias("doc_id"),
-        hash60(F.concat(F.lit(f"ep{epoch}:"), F.col(id_col).cast("string")))
+        "doc_id",
+        hash60(F.concat(F.lit(f"ep{epoch}:"), F.col("doc_id").cast("string")))
         .alias("shuffle_key"),
     )
     # hash60 is uniform over [0, 2^60); scale blocks accordingly.
@@ -226,8 +220,6 @@ def shard_assignment(
     docs: DataFrame,
     epoch: int = 0,
     shard_tokens: int = 1 << 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """(doc_id, shuffle_pos, n_tokens, shard_id) — the write plan for
     training shards: documents in deterministic per-epoch shuffle
@@ -243,16 +235,14 @@ def shard_assignment(
     two-phase keyed scans; the only new shuffle is re-keying by rank
     block. Deterministic, so the full assignment is oracle-checkable.
     """
-    shuffled = epoch_shuffle(docs, epoch, id_col=id_col)
+    shuffled = epoch_shuffle(docs, epoch)
     n_tok = F.size(
         F.filter(
-            F.split(F.lower(F.col(text_col)), WS_SPLIT),
+            F.split(F.lower(F.col("text")), WS_SPLIT),
             lambda t: t != F.lit(""),
         )
     ).cast("long")
-    counted = docs.select(
-        F.col(id_col).alias("doc_id"), n_tok.alias("n_tokens")
-    )
+    counted = docs.select("doc_id", n_tok.alias("n_tokens"))
     ordered = shuffled.join(counted, "doc_id")
     cum = block_prefix_sum(ordered, "shuffle_pos", "n_tokens", out_col="_cum")
     return cum.selectExpr(
@@ -269,8 +259,6 @@ def write_training_shards(
     out_dir: str,
     epoch: int = 0,
     shard_tokens: int = 1 << 20,
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Materialize the :func:`shard_assignment` manifest as the actual
     training-shard layout: one ``shard_id=<k>`` parquet directory per
@@ -282,13 +270,8 @@ def write_training_shards(
     unit a data-loader worker maps. Returns the manifest (the write is
     the side effect); overwrite mode keeps re-runs idempotent (the S8
     contract)."""
-    manifest = shard_assignment(
-        docs, epoch=epoch, shard_tokens=shard_tokens,
-        text_col=text_col, id_col=id_col,
-    )
-    rows = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).join(manifest, "doc_id")
+    manifest = shard_assignment(docs, epoch=epoch, shard_tokens=shard_tokens)
+    rows = docs.select("doc_id", "text").join(manifest, "doc_id")
     (
         rows.repartition(F.col("shard_id"))
         .sortWithinPartitions("shard_id", "shuffle_pos")
@@ -351,7 +334,6 @@ def mixture_decide(
 def mixture_sample(
     docs: DataFrame,
     targets: dict[str, float],
-    domain_col: str = "source",
     salt: str = "mix0",
 ) -> DataFrame:
     """(doc_id, domain, accept_rate, sampled) — sample the corpus to a
@@ -365,9 +347,7 @@ def mixture_sample(
     engine-independent, and exactly the split/sample machinery the
     dedup family already proves. Domains absent from ``targets`` get
     rate 0. Counts ride one keyed aggregation; rates broadcast."""
-    base = docs.select(
-        "doc_id", F.col(domain_col).alias("domain")
-    )
+    base = docs.select("doc_id", F.col("source").alias("domain"))
     counts = base.groupBy("domain").agg(F.count("*").alias("n_d"))
     return mixture_decide(base, mixture_rates(counts, targets), salt)
 
@@ -439,8 +419,7 @@ PRIORITY_SALT = "ps1"
 
 
 def priority_sample(
-    docs: DataFrame, n: int, salt: str = PRIORITY_SALT,
-    text_col: str = "text", id_col: str = "doc_id"
+    docs: DataFrame, n: int, salt: str = PRIORITY_SALT
 ) -> DataFrame:
     """(doc_id, weight, priority): Duffield-Lund-Thorup priority
     sampling — weighted sampling WITHOUT replacement of ``n`` docs
@@ -462,16 +441,14 @@ def priority_sample(
     corpus. This is the whole point vs. ORDER BY random() LIMIT n.
     """
     toks = F.filter(
-        F.split(F.lower(F.col(text_col)), WS_SPLIT), lambda t: t != F.lit("")
+        F.split(F.lower(F.col("text")), WS_SPLIT), lambda t: t != F.lit("")
     )
     w = F.size(toks).cast("long")
-    u = hash60(F.concat(F.lit(f"{salt}:"), F.col(id_col).cast("string"))) + 1
+    u = hash60(F.concat(F.lit(f"{salt}:"), F.col("doc_id").cast("string"))) + 1
     q = w.cast("double") / u.cast("double")
     return (
-        docs.select(
-            F.col(id_col), w.alias("weight"), q.alias("priority")
-        )
-        .orderBy(F.desc("priority"), F.col(id_col))
+        docs.select("doc_id", w.alias("weight"), q.alias("priority"))
+        .orderBy(F.desc("priority"), F.col("doc_id"))
         .limit(n)
     )
 

@@ -53,8 +53,7 @@ BLOWUP_MIN_PARTITIONS = 64
 # that exchange at sf0.1 on every floored path (_shared_lpa_labels
 # 8.1 → 13.1 s, knng 9.4 → 11.2 s) for zero safety benefit; the sfg10
 # decade that NEEDS the floor has a 1.09 GB lineitem, far above the
-# gate. SPARK_GRAFT_BLOWUP_PARTITIONS forces the floor on at any size
-# (the A/B knob).
+# gate.
 BLOWUP_ENGAGE_BYTES = 64 << 20
 # For LARGE inputs the floor must be INPUT-proportional, not
 # session-proportional: one partition per ~2 MB of the frame's source
@@ -86,7 +85,7 @@ def _input_bytes(df: DataFrame) -> int:
     return total
 
 
-def blowup_partitions(df: DataFrame, factor: int = BLOWUP_FACTOR) -> int:
+def blowup_partitions(df: DataFrame) -> int:
     """Partition count for an input-multiple intermediate: the larger
     of (a) the session's shuffle partitioning scaled by the blow-up
     allowance — clamped to the actual execution parallelism first, so
@@ -95,13 +94,10 @@ def blowup_partitions(df: DataFrame, factor: int = BLOWUP_FACTOR) -> int:
     per-task deserialized state bounded no matter how large the
     source grows (the sfg10 lesson: the session signal saturates at
     core count, but the blow-up keeps growing with the data)."""
-    override = os.environ.get("SPARK_GRAFT_BLOWUP_PARTITIONS")
-    if override:
-        return int(override)
     spark = df.sparkSession
     base = int(spark.conf.get("spark.sql.shuffle.partitions"))
     par = spark.sparkContext.defaultParallelism
-    session_scaled = max(BLOWUP_MIN_PARTITIONS, min(base, par) * factor)
+    session_scaled = max(BLOWUP_MIN_PARTITIONS, min(base, par) * BLOWUP_FACTOR)
     return max(
         session_scaled, _input_bytes(df) // BLOWUP_BYTES_PER_PARTITION
     )
@@ -144,12 +140,10 @@ def blowup_checkpoint(df: DataFrame, *keys: str) -> DataFrame:
 
 def blowup_engaged(df: DataFrame) -> bool:
     """Whether the floor should engage for a frame derived from
-    ``df``: yes when forced via SPARK_GRAFT_BLOWUP_PARTITIONS, or when
-    the frame's source parquet exceeds ``BLOWUP_ENGAGE_BYTES`` (the
-    only regime where an input-multiple unroll can actually threaten
-    the executor — see the gate note above)."""
-    if os.environ.get("SPARK_GRAFT_BLOWUP_PARTITIONS"):
-        return True
+    ``df``: yes when the frame's source parquet exceeds
+    ``BLOWUP_ENGAGE_BYTES`` (the only regime where an input-multiple
+    unroll can actually threaten the executor — see the gate note
+    above)."""
     return _input_bytes(df) > BLOWUP_ENGAGE_BYTES
 
 

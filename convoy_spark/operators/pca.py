@@ -91,13 +91,11 @@ def sql_xsum(expr: str) -> str:
     )
 
 
-def _centered(vectors: DataFrame, vec_col: str, id_col: str):
+def _centered(vectors: DataFrame):
     """(centered, mu): the checkpointed mean-centered exploded frame
     (vec_id, d, y) and the per-dimension mean frame (reused as the
     dim list for the v seed — no extra shuffle)."""
-    ex = exploded_vectors(vectors, vec_col, id_col).localCheckpoint(
-        eager=False
-    )
+    ex = exploded_vectors(vectors).localCheckpoint(eager=False)
     mu = ex.groupBy("d").agg(
         (_xsum(F.col("x")) / F.count("*")).alias("mu")
     )
@@ -154,14 +152,12 @@ def _power_iterate(centered: DataFrame, dims: DataFrame, n_iterations: int):
 def pca_top_component(
     vectors: DataFrame,
     n_iterations: int = PCA_ITERATIONS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(d, loading, eigenvalue, explained_variance_ratio) — one row
     per dimension; ``loading`` is the unit top eigenvector of the
     scatter matrix, ``eigenvalue`` its ‖S·v‖ estimate, and the ratio
     is eigenvalue / trace(S) (fraction of total variance captured)."""
-    centered, mu = _centered(vectors, vec_col, id_col)
+    centered, mu = _centered(vectors)
     v, nrm = _power_iterate(centered, mu, n_iterations)
     trace = centered.agg(_xsum(F.col("y") * F.col("y")).alias("trace"))
     return (
@@ -214,8 +210,6 @@ def pca_topk_components(
     vectors: DataFrame,
     k: int = 3,
     n_iterations: int = PCA_ITERATIONS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(component, d, loading, eigenvalue, explained_variance_ratio)
     — the top-``k`` principal components by power iteration with
@@ -240,7 +234,7 @@ def pca_topk_components(
     a fixed budget t they approach the true top-k eigenvectors at the
     power method's (λ_{i+1}/λ_i)^t rate, exactly as k=1 does.
     """
-    centered, mu = _centered(vectors, vec_col, id_col)
+    centered, mu = _centered(vectors)
     trace = centered.agg(_xsum(F.col("y") * F.col("y")).alias("trace"))
     outs = [
         v.crossJoin(F.broadcast(nrm)).select(
@@ -271,8 +265,6 @@ def pca_project_topk(
     vectors: DataFrame,
     k: int = 3,
     n_iterations: int = PCA_ITERATIONS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(vec_id, component, score, whitened) — every vector's
     coordinates in the k-component deflation basis of
@@ -288,7 +280,7 @@ def pca_project_topk(
     exactness chain as the component extraction (the oracle appends
     one sc CTE per component to the same unrolled deflation chain).
     """
-    centered, mu = _centered(vectors, vec_col, id_col)
+    centered, mu = _centered(vectors)
     outs = [
         s.crossJoin(F.broadcast(nrm)).select(
             "vec_id",
@@ -311,8 +303,6 @@ def pca_project_topk(
 def pca_project(
     vectors: DataFrame,
     n_iterations: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(vec_id, score, whitened) — every vector's projection onto the
     ``n_iterations``-step top-component iterate, and the
@@ -333,7 +323,7 @@ def pca_project(
     λ̂ = ‖S·v‖ of the final step; ``whitened`` guards the degenerate
     zero-variance corpus to 0.0 on both engines.
     """
-    centered, mu = _centered(vectors, vec_col, id_col)
+    centered, mu = _centered(vectors)
     v, nrm = _power_iterate(centered, mu, n_iterations)
     score = (
         centered.join(F.broadcast(v), "d")

@@ -80,8 +80,6 @@ PQ_RERANK = 10  # ADC shortlist size = PQ_RERANK * k for the re-ranked path
 def _sub_exploded(
     vectors: DataFrame,
     ds: int,
-    vec_col: str,
-    id_col: str,
     dim_map: DataFrame | None = None,
     raw_ex: DataFrame | None = None,
 ) -> DataFrame:
@@ -95,11 +93,7 @@ def _sub_exploded(
     skip the corpus explode entirely (the shared-frame amortization:
     two quantizers trained on the same corpus pay the explode
     once)."""
-    ex = (
-        raw_ex
-        if raw_ex is not None
-        else exploded_vectors(vectors, vec_col, id_col)
-    )
+    ex = raw_ex if raw_ex is not None else exploded_vectors(vectors)
     if dim_map is not None:
         return ex.join(F.broadcast(dim_map), "d").select(
             "vec_id", "sub", "dsub", "x"
@@ -115,8 +109,6 @@ def _sub_exploded(
 def balanced_dim_map(
     corpus: DataFrame,
     n_sub: int | None = None,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     ex: DataFrame | None = None,
 ) -> DataFrame:
     """(d, sub, dsub) — variance-balanced dimension permutation, the
@@ -141,7 +133,7 @@ def balanced_dim_map(
     frame — to skip the corpus explode (shared-frame amortization)."""
     n_sub = n_sub or PQ_SUB
     if ex is None:
-        ex = exploded_vectors(corpus, vec_col, id_col)
+        ex = exploded_vectors(corpus)
     stats = ex.groupBy("d").agg(
         F.count(F.lit(1)).cast("decimal(38,0)").alias("n"),
         F.sum(
@@ -335,8 +327,6 @@ def pq_codebooks(
     n_sub: int = PQ_SUB,
     ks: int = PQ_KS,
     iters: int = PQ_ITERS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     dim_map: DataFrame | None = None,
     raw_ex: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -351,29 +341,23 @@ def pq_codebooks(
     - ex: the (vec_id, sub, dsub, x) exploded frame (checkpointed),
       for callers that score queries against the same corpus.
     """
-    dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus)
     ds = dim // n_sub
     wide = corpus.count() >= PQ_WIDE_MIN_ROWS  # physical-shape choice
-    ex = _sub_exploded(
-        corpus, ds, vec_col, id_col, dim_map, raw_ex
-    ).localCheckpoint(eager=False)
-    cent, codes = lloyd(
-        ex, corpus.select(F.col(id_col).alias("vec_id")), ks, iters, wide
-    )
+    ex = _sub_exploded(corpus, ds, dim_map, raw_ex).localCheckpoint(eager=False)
+    cent, codes = lloyd(ex, corpus.select("vec_id"), ks, iters, wide)
     return cent, codes, ex
 
 
-def adc_table(
-    queries_ex: DataFrame, codebook: DataFrame, query_col: str = "query_id"
-) -> DataFrame:
+def adc_table(queries_ex: DataFrame, codebook: DataFrame) -> DataFrame:
     """(query_id, sub, cell, dd) — the per-query asymmetric distance
     table: exact squared distance from each query subvector to every
     codebook centroid. Q·n_sub·ks rows — broadcast-sized for any sane
     query batch."""
     return (
-        queries_ex.withColumnRenamed("vec_id", query_col)
+        queries_ex.withColumnRenamed("vec_id", "query_id")
         .join(F.broadcast(codebook), ["sub", "dsub"])
-        .groupBy(query_col, "sub", "cell")
+        .groupBy("query_id", "sub", "cell")
         .agg(
             (
                 F.sum(
@@ -543,8 +527,6 @@ def ann_pq_adc_topk(
     n_sub: int = PQ_SUB,
     ks: int = PQ_KS,
     iters: int = PQ_ITERS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     dim_map: DataFrame | None = None,
 ) -> DataFrame:
@@ -559,10 +541,10 @@ def ann_pq_adc_topk(
     self-pairs are excluded.
     """
     codebook, codes, _ = index or pq_codebooks(
-        corpus, n_sub, ks, iters, vec_col, id_col, dim_map=dim_map
+        corpus, n_sub, ks, iters, dim_map=dim_map
     )
-    dim = _infer_dim(corpus, vec_col)
-    q_ex = _sub_exploded(queries, dim // n_sub, vec_col, id_col, dim_map)
+    dim = _infer_dim(corpus)
+    q_ex = _sub_exploded(queries, dim // n_sub, dim_map)
     dtab = adc_table(q_ex, codebook)
     batched = corpus.count() >= PQ_WIDE_MIN_ROWS  # physical-shape choice
     return _topk_by_adist(_adc_scored(codes, dtab, n_sub, batched), k)
@@ -573,8 +555,6 @@ def ivfpq_candidates(
     corpus: DataFrame,
     n_cells: int = 16,
     n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     coarse_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """(query_id, vec_id) — the IVF-pruned candidate pairs: for each
@@ -592,12 +572,10 @@ def ivfpq_candidates(
     corpus, no Q×N anywhere."""
     from convoy_spark.operators.similarity import _sq_dist, ivf_index
 
-    centroids, assignment = coarse_index or ivf_index(
-        corpus, n_cells=n_cells, vec_col=vec_col, id_col=id_col
-    )
+    centroids, assignment = coarse_index or ivf_index(corpus, n_cells=n_cells)
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("qv"),
+        F.col("vec_id").alias("query_id"),
+        F.transform("embedding", lambda x: x.cast("double")).alias("qv"),
     )
     probe_w = Window.partitionBy("query_id").orderBy(
         F.col("d").asc(), F.col("cell").asc()
@@ -627,8 +605,6 @@ def ann_ivfpq_topk(
     n_sub: int = PQ_SUB,
     ks: int = PQ_KS,
     iters: int = PQ_ITERS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     pq_index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     coarse_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
@@ -645,19 +621,15 @@ def ann_ivfpq_topk(
     coarse quantizer at one subspace, PQ at ``n_sub``), and the
     candidate pruning is an equi-join on cell — no Q×N anywhere.
     """
-    codebook, codes, _ = pq_index or pq_codebooks(
-        corpus, n_sub, ks, iters, vec_col, id_col
-    )
-    dim = _infer_dim(corpus, vec_col)
-    q_ex = _sub_exploded(queries, dim // n_sub, vec_col, id_col)
+    codebook, codes, _ = pq_index or pq_codebooks(corpus, n_sub, ks, iters)
+    dim = _infer_dim(corpus)
+    q_ex = _sub_exploded(queries, dim // n_sub)
     dtab = adc_table(q_ex, codebook)
     cand_codes = ivfpq_candidates(
         queries,
         corpus,
         n_cells=n_cells,
         n_probe=n_probe,
-        vec_col=vec_col,
-        id_col=id_col,
         coarse_index=coarse_index,
     ).join(codes, "vec_id")
     dt = dtab.select(
@@ -692,8 +664,6 @@ def ann_pq_rerank_topk(
     n_sub: int = PQ_SUB,
     ks: int = PQ_KS,
     iters: int = PQ_ITERS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """The production PQ pipeline: ADC over the compressed code table
@@ -709,11 +679,9 @@ def ann_pq_rerank_topk(
     makes PQ usable, not the raw code ranks). Exactness: the re-rank
     distance is the decimal-exact squared L2 over the exploded frame,
     so the final ranks carry a full value-hash oracle."""
-    codebook, codes, ex = index or pq_codebooks(
-        corpus, n_sub, ks, iters, vec_col, id_col
-    )
-    dim = _infer_dim(corpus, vec_col)
-    q_ex = _sub_exploded(queries, dim // n_sub, vec_col, id_col)
+    codebook, codes, ex = index or pq_codebooks(corpus, n_sub, ks, iters)
+    dim = _infer_dim(corpus)
+    q_ex = _sub_exploded(queries, dim // n_sub)
     dtab = adc_table(q_ex, codebook)
     batched = corpus.count() >= PQ_WIDE_MIN_ROWS  # physical-shape choice
     short = _topk_by_adist(
@@ -765,13 +733,7 @@ ASSIGN_STORE_SCHEMA = "vec_id long, cell int"
 PQ_INDEX_BUCKET = ("vec_id",)
 
 
-def exact_l2_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def exact_l2_topk(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
     """(query_id, corpus_id, dnum, rank) — exact squared-L2 top-k,
     the ground truth every PQ/IVF-PQ recall number is stated against
     (PQ approximates L2, so the truth metric is L2, not cosine).
@@ -785,10 +747,10 @@ def exact_l2_topk(
     parallel, never all-pairs over the corpus alone."""
     from convoy_spark.operators.similarity import exploded_vectors
 
-    q_ex = exploded_vectors(queries, vec_col, id_col).select(
+    q_ex = exploded_vectors(queries).select(
         F.col("vec_id").alias("query_id"), "d", F.col("x").alias("xq")
     )
-    c_ex = exploded_vectors(corpus, vec_col, id_col)
+    c_ex = exploded_vectors(corpus)
     dist = (
         c_ex.join(F.broadcast(q_ex), "d")
         .filter(F.col("query_id") != F.col("vec_id"))
@@ -820,8 +782,6 @@ def write_pq_index(
     n_sub: int = PQ_SUB,
     ks: int = PQ_KS,
     iters: int = PQ_ITERS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> None:
     """Build and persist the full IVF-PQ index: PQ codebook + bucketed
     code table + coarse centroids + bucketed cell assignment.
@@ -833,10 +793,8 @@ def write_pq_index(
     from convoy_spark.operators.similarity import ivf_index
     from convoy_spark.streaming.util import append_store
 
-    codebook, codes, _ = pq_codebooks(corpus, n_sub, ks, iters, vec_col, id_col)
-    centroids, assignment = ivf_index(
-        corpus, n_cells=n_cells, vec_col=vec_col, id_col=id_col
-    )
+    codebook, codes, _ = pq_codebooks(corpus, n_sub, ks, iters)
+    centroids, assignment = ivf_index(corpus, n_cells=n_cells)
     for sub in ("codes", "assignment"):
         p = os.path.join(base_path, sub)
         if os.path.isdir(p):
@@ -928,8 +886,6 @@ def opq_rotation_train(
     n_sub: int = PQ_SUB,
     ks: int = PQ_KS,
     lloyd_iters: int = PQ_ITERS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Learned OPQ rotation, non-parametric alternation (Ge et al.,
     "Optimized Product Quantization", CVPR 2013 §4): starting from the
@@ -963,20 +919,17 @@ def opq_rotation_train(
     from convoy_spark.operators.similarity import SCORE_SCALE
 
     spark = corpus.sparkSession
-    dim = _infer_dim(corpus, vec_col)
+    dim = _infer_dim(corpus)
     ds = dim // n_sub
-    raw = exploded_vectors(corpus, vec_col, id_col).localCheckpoint(
-        eager=False
-    )
+    raw = exploded_vectors(corpus).localCheckpoint(eager=False)
     adc_batched = corpus.count() >= PQ_WIDE_MIN_ROWS
     truth = exact_l2_topk(
-        corpus.filter(F.col(id_col) < n_queries), corpus, k=k,
-        vec_col=vec_col, id_col=id_col,
+        corpus.filter(F.col("vec_id") < n_queries), corpus, k=k
     ).select("query_id", "corpus_id").localCheckpoint(eager=False)
     denom = float(n_queries * k)
 
     # R0 = the balanced permutation as a matrix: slot(d) = sub·ds + dsub
-    dm = balanced_dim_map(corpus, n_sub, vec_col, id_col, ex=raw)
+    dm = balanced_dim_map(corpus, n_sub, ex=raw)
     rot = dm.select(
         (F.col("sub") * ds + F.col("dsub")).cast("int").alias("do"),
         F.col("d").cast("int").alias("di"),
@@ -1007,9 +960,7 @@ def opq_rotation_train(
     rows = []
     for it in range(n_iters + 1):
         xr = _rotate(raw, rot).localCheckpoint(eager=False)
-        cent, codes, _ = pq_codebooks(
-            corpus, n_sub, ks, lloyd_iters, vec_col, id_col, raw_ex=xr
-        )
+        cent, codes, _ = pq_codebooks(corpus, n_sub, ks, lloyd_iters, raw_ex=xr)
         # decode: ŷ[d] = codebook centroid component of the assigned cell
         yhat = codes.join(
             F.broadcast(cent), (codes["sub"] == cent["sub"]) & (codes["code"] == cent["cell"])

@@ -46,26 +46,22 @@ PROBE_ITERS = 3  # fixed rounds — the probe reads separability, not SOTA
 def perceptron_probe(
     vectors: DataFrame,
     iters: int = PROBE_ITERS,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    label_col: str = "label",
-    train_col: str = "is_train",
 ) -> DataFrame:
     """(split, true_label, pred_label, n) — held-out confusion matrix
     of a one-vs-rest batch perceptron trained for ``iters`` rounds on
-    the ``train_col`` == true rows and applied to every row.
+    the ``is_train`` rows and applied to every row.
 
     Bias lives in PROBE_SCALE² units so the integer margin
     Σ xq·wq + bq carries the real-valued sign exactly; prediction is
     argmax over class margins, ties to the smallest class id
     (deterministic — margins are integers)."""
-    dim = _infer_dim(vectors, vec_col)
+    dim = _infer_dim(vectors)
     vq = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(label_col).alias("label"),
-        F.col(train_col).alias("is_train"),
+        "vec_id",
+        "label",
+        "is_train",
         F.expr(
-            f"transform({vec_col}, x ->"
+            "transform(embedding, x ->"
             f" cast(floor(cast(x as double) * {PROBE_SCALE}) as bigint))"
         ).alias("xq"),
     ).localCheckpoint()

@@ -89,24 +89,19 @@ def with_norm(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
     return vectors.withColumn("_norm", norm(F.col(vec_col)))
 
 
-def cosine_scores(
-    queries: DataFrame,
-    corpus: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_scores(queries: DataFrame, corpus: DataFrame) -> DataFrame:
     """(query_id, corpus_id, sim) for every query × corpus pair.
 
     The query side is broadcast (queries are the small side by
     assumption); scoring is partition-local over the corpus scan."""
-    q = with_norm(queries, vec_col).select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("_qv"),
+    q = with_norm(queries).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("embedding").alias("_qv"),
         F.col("_norm").alias("_qn"),
     )
-    c = with_norm(corpus, vec_col).select(
-        F.col(id_col).alias("corpus_id"),
-        F.col(vec_col).alias("_cv"),
+    c = with_norm(corpus).select(
+        F.col("vec_id").alias("corpus_id"),
+        F.col("embedding").alias("_cv"),
         F.col("_norm").alias("_cn"),
     )
     return (
@@ -131,16 +126,10 @@ def topk(scores: DataFrame, k: int) -> DataFrame:
     )
 
 
-def cosine_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_topk(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
     """Brute-force exact cosine top-k — the baseline every ANN variant
     is measured against."""
-    return topk(cosine_scores(queries, corpus, vec_col, id_col), k)
+    return topk(cosine_scores(queries, corpus), k)
 
 
 def srp_plane_components(spark, n_planes: int, dim: int) -> DataFrame:
@@ -171,9 +160,7 @@ SRP_SCALE = 1 << 20  # power of two: x·2²⁰ is an exact double op
 SCORE_SCALE = float(1 << 40)
 
 
-def exploded_vectors(
-    vectors: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+def exploded_vectors(vectors: DataFrame) -> DataFrame:
     """(vec_id, d, x double) — the element-wise expansion every
     vector op (signatures, norms, pair dots) reads. Callers that feed
     it to more than one consumer should localCheckpoint it once.
@@ -184,21 +171,18 @@ def exploded_vectors(
     from convoy_spark.operators.scale import widen_narrow_scan
 
     return widen_narrow_scan(vectors).select(
-        F.col(id_col).alias("vec_id"),
-        F.posexplode(F.col(vec_col)).alias("d", "x"),
+        "vec_id", F.posexplode("embedding").alias("d", "x")
     ).withColumn("x", F.col("x").cast("double"))
 
 
 def srp_signatures(
     vectors: DataFrame,
     n_planes: int = N_PLANES,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     rows_per_band: int = SRP_ROWS,
 ) -> DataFrame:
     return srp_signatures_from_exploded(
-        exploded_vectors(vectors, vec_col, id_col),
-        _infer_dim(vectors, vec_col),
+        exploded_vectors(vectors),
+        _infer_dim(vectors),
         n_planes,
         rows_per_band,
     )
@@ -270,8 +254,8 @@ def srp_signatures_from_exploded(
     ).select("vec_id", F.col("_bk.band").alias("band"), F.col("_bk.key").alias("key"))
 
 
-def _infer_dim(vectors: DataFrame, vec_col: str) -> int:
-    return vectors.select(F.size(F.col(vec_col)).alias("n")).first().n
+def _infer_dim(vectors: DataFrame) -> int:
+    return vectors.select(F.size("embedding").alias("n")).first().n
 
 
 def _sq_dist(a: Column, b: Column) -> Column:
@@ -297,8 +281,6 @@ def ivf_index(
     corpus: DataFrame,
     n_cells: int = 16,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> tuple[DataFrame, DataFrame]:
     """IVF coarse quantizer: deterministic k-means (first ``n_cells``
     vectors by id seed the centroids; ``iters`` Lloyd rounds with
@@ -312,10 +294,8 @@ def ivf_index(
     pairwise corpus work anywhere, which is the point of IVF: the
     index build is O(N · n_cells), the search probes a few cells.
     """
-    ex = exploded_vectors(corpus, vec_col, id_col).localCheckpoint(
-        eager=False
-    )
-    cent, assignment = _coarse_kmeans(ex, corpus, id_col, n_cells, iters)
+    ex = exploded_vectors(corpus).localCheckpoint(eager=False)
+    cent, assignment = _coarse_kmeans(ex, corpus, n_cells, iters)
     centroids = cent.groupBy("cell").agg(
         F.transform(
             F.array_sort(F.collect_list(F.struct("d", "m"))),
@@ -326,7 +306,7 @@ def ivf_index(
 
 
 def _coarse_kmeans(
-    ex: DataFrame, corpus: DataFrame, id_col: str, n_cells: int, iters: int
+    ex: DataFrame, corpus: DataFrame, n_cells: int, iters: int
 ) -> tuple[DataFrame, DataFrame]:
     """(cent (cell, d, m), assignment (vec_id, cell)) over the
     checkpointed (vec_id, d, x) frame: the PQ Lloyd loop
@@ -342,7 +322,7 @@ def _coarse_kmeans(
         "vec_id", F.lit(0).alias("sub"), F.col("d").alias("dsub"), "x"
     )
     _, codes = lloyd(
-        one, corpus.select(F.col(id_col).alias("vec_id")), n_cells, iters,
+        one, corpus.select("vec_id"), n_cells, iters,
         wide=False,
     )
     return (
@@ -385,8 +365,6 @@ def ann_ivf_topk(
     k: int = 5,
     n_cells: int = 16,
     n_probe: int = 4,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     coarse_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """IVF search: rank cells per query by centroid distance, score
@@ -400,15 +378,18 @@ def ann_ivf_topk(
 
     # each vector sits in exactly one cell, so the pairs are distinct
     cand = ivfpq_candidates(
-        queries, corpus, n_cells, n_probe, vec_col, id_col,
-        coarse_index=coarse_index,
+        queries, corpus, n_cells, n_probe, coarse_index=coarse_index
     ).withColumnRenamed("vec_id", "corpus_id")
     qv = with_norm(
-        queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("_qv")),
+        queries.select(
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
+        ),
         "_qv",
     ).withColumnRenamed("_norm", "_qn")
     cv = with_norm(
-        corpus.select(F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("_cv")),
+        corpus.select(
+            F.col("vec_id").alias("corpus_id"), F.col("embedding").alias("_cv")
+        ),
         "_cv",
     ).withColumnRenamed("_norm", "_cn")
     scores = (
@@ -427,8 +408,6 @@ def ann_lsh_topk(
     corpus: DataFrame,
     k: int = 5,
     n_planes: int = N_PLANES,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     rows_per_band: int = SRP_ROWS,
     multiprobe: bool = True,
     queries_within_corpus: bool = False,
@@ -454,7 +433,7 @@ def ann_lsh_topk(
     sig_input = (
         corpus
         if queries_within_corpus
-        else queries.unionByName(corpus).dropDuplicates([id_col])
+        else queries.unionByName(corpus).dropDuplicates(["vec_id"])
     )
     # ONE element-wise expansion feeds everything downstream —
     # signatures, norms, and candidate-pair dot products — and is
@@ -465,13 +444,11 @@ def ann_lsh_topk(
     # operators/dedup.py::minhash_lsh_neardup already encodes; the
     # un-shared variant re-ran the most expensive stage twice per
     # query (the only round-2 bench regression).
-    ex = exploded_vectors(sig_input, vec_col, id_col).localCheckpoint(
-        eager=False
-    )
+    ex = exploded_vectors(sig_input).localCheckpoint(eager=False)
     all_sigs = srp_signatures_from_exploded(
-        ex, _infer_dim(corpus, vec_col), n_planes, rows_per_band
+        ex, _infer_dim(corpus), n_planes, rows_per_band
     ).localCheckpoint(eager=False)
-    q_ids = queries.select(F.col(id_col).alias("query_id"))
+    q_ids = queries.select(F.col("vec_id").alias("query_id"))
     q_sigs = all_sigs.join(
         F.broadcast(q_ids), all_sigs.vec_id == q_ids.query_id
     ).select("query_id", "band", "key")
@@ -490,9 +467,9 @@ def ann_lsh_topk(
             "band",
             F.col("key").bitwiseXOR(F.col("_m").cast("long")).alias("key"),
         )
-    c = corpus.join(
-        all_sigs.withColumnRenamed("vec_id", id_col), id_col
-    ).select(F.col(id_col).alias("corpus_id"), "band", "key")
+    c = corpus.join(all_sigs, "vec_id").select(
+        F.col("vec_id").alias("corpus_id"), "band", "key"
+    )
     cand = (
         q_sigs.join(c, ["band", "key"])
         .filter(F.col("query_id") != F.col("corpus_id"))
@@ -553,8 +530,6 @@ def knn_graph(
     n_probe: int = 2,
     target_cell: int = 64,
     min_cells: int = 16,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """(src, dst, sim, rank) — the k-nearest-neighbor GRAPH over an
     embedding corpus: every vector's top-``k`` cosine neighbors among
@@ -583,9 +558,7 @@ def knn_graph(
     value-hash-checks against the SQL mirror (the shared
     scaled-cells k-means unroll + a probe/candidate/score tail)."""
     n_cells = max(min_cells, corpus.count() // target_cell)
-    centroids, assignment = ivf_index(
-        corpus, n_cells=n_cells, vec_col=vec_col, id_col=id_col
-    )
+    centroids, assignment = ivf_index(corpus, n_cells=n_cells)
     # The exploded frame is dim× the corpus — an input-multiple whose
     # checkpoint unroll must not ride the input-sized partitioning
     # (the sfg10 OOM class; operators/partitioning.py). Repartition
@@ -598,11 +571,11 @@ def knn_graph(
     # it saves (sf0.1 build 9.4 → 11.2 s in round 10) and the plain
     # round-9 checkpoint shape is kept.
     src = (
-        corpus.repartition(blowup_partitions(corpus), id_col)
+        corpus.repartition(blowup_partitions(corpus), "vec_id")
         if blowup_engaged(corpus)
         else corpus
     )
-    ex = exploded_vectors(src, vec_col, id_col).localCheckpoint(
+    ex = exploded_vectors(src).localCheckpoint(
         eager=False, storageLevel=blowup_storage_level(corpus)
     )
     # Probe distances over the EXPLODED frame in whole-stage codegen —
@@ -701,8 +674,6 @@ def semantic_dedup(
     eps: float = 0.3,
     n_cells: int = 16,
     iters: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     near-duplicate REMOVAL over an embedding corpus — cluster with the
@@ -736,10 +707,8 @@ def semantic_dedup(
     # ONE exploded frame feeds the k-means loop, the priority
     # distances, the norms and the pair dots; centroids come back
     # exploded, skipping the array assembly + re-explode round-trip.
-    ex = exploded_vectors(corpus, vec_col, id_col).localCheckpoint(
-        eager=False
-    )
-    cent_ex, assignment = _coarse_kmeans(ex, corpus, id_col, n_cells, iters)
+    ex = exploded_vectors(corpus).localCheckpoint(eager=False)
+    cent_ex, assignment = _coarse_kmeans(ex, corpus, n_cells, iters)
     scaled = lambda c: (  # noqa: E731
         F.sum(F.floor(c * F.lit(SCORE_SCALE))).cast("double")
         / F.lit(SCORE_SCALE)
@@ -789,8 +758,7 @@ def semantic_dedup(
     # motion. Identical integers to the exploded form: floor per
     # term, long sum, order-free.
     varr = corpus.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     dots = (
         pairs.join(
@@ -829,13 +797,7 @@ def semantic_dedup(
     )
 
 
-def cosine_ranks_fast(
-    corpus: DataFrame,
-    n_queries: int,
-    k: int,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def cosine_ranks_fast(corpus: DataFrame, n_queries: int, k: int) -> DataFrame:
     """(query_id, doc_id, sim, rank) — exact cosine top-``k`` for the
     first ``n_queries`` corpus vectors, in the exploded scaled-long
     codegen shape (SCORE_SCALE): the per-row zip_with/aggregate dot
@@ -846,7 +808,7 @@ def cosine_ranks_fast(
     SRP candidate scorer (floor-scaled long sums — bit-identical
     across engines), shared by the hybrid-RRF vector leg and the
     retrieval-metrics harness."""
-    ex = exploded_vectors(corpus, vec_col, id_col).localCheckpoint(eager=False)
+    ex = exploded_vectors(corpus).localCheckpoint(eager=False)
     scaled_sum = lambda c: (  # noqa: E731
         F.sum(F.floor(c * F.lit(SCORE_SCALE))).cast("double")
         / F.lit(SCORE_SCALE)

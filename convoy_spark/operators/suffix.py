@@ -55,17 +55,13 @@ REPEAT_WINDOW = 16  # L: compared window length; log2(L) = 4 rounds
 SENTINEL = -1  # rank of the empty suffix (past the doc end)
 
 
-def token_positions(
-    docs: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+def token_positions(docs: DataFrame) -> DataFrame:
     """(doc_id, pos, tok) — the house tokenizer (lowercase, WS_SPLIT,
     empties dropped) exploded WITH contiguous 0-based positions."""
     toks = F.filter(
-        F.split(F.lower(F.col(text_col)), WS_SPLIT), lambda x: x != ""
+        F.split(F.lower(F.col("text")), WS_SPLIT), lambda x: x != ""
     )
-    return docs.select(
-        F.col(id_col).alias("doc_id"), F.posexplode(toks).alias("pos", "tok")
-    )
+    return docs.select("doc_id", F.posexplode(toks).alias("pos", "tok"))
 
 
 def _first_occurrence(col: Column) -> Column:

@@ -74,8 +74,8 @@ def winnow_gram_hash_sql(codes: str, i: str, k: int = WINNOW_K) -> str:
     return expr
 
 
-def _tokens(text_col: str = "text"):
-    return F.split(F.lower(F.col(text_col)), WS_SPLIT)
+def _tokens():
+    return F.split(F.lower(F.col("text")), WS_SPLIT)
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -504,22 +504,6 @@ def char_ngrams(docs: DataFrame, n: int = LANGID_NGRAM) -> DataFrame:
                 ),
             ).otherwise(F.array())
         ).alias("gram"),
-    )
-
-
-def langid_profiles(docs: DataFrame, top_k: int = LANGID_TOP_K) -> DataFrame:
-    """(lang, gram) — the ``top_k`` most frequent trigrams per
-    language, trained from the labeled corpus. Deterministic tiebreak
-    (count desc, gram asc) so the profile — and every downstream
-    prediction — is stable across partitionings."""
-    counts = char_ngrams(docs).groupBy("lang", "gram").agg(
-        F.count("*").alias("c")
-    )
-    w = Window.partitionBy("lang").orderBy(F.col("c").desc(), F.col("gram").asc())
-    return (
-        counts.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= top_k)
-        .select("lang", "gram")
     )
 
 

@@ -128,8 +128,6 @@ def descendant_pairs(edges: DataFrame, max_iterations: int = 64) -> DataFrame:
 def tree_stats(
     edges: DataFrame,
     attrs: DataFrame | None = None,
-    author_col: str = "author_id",
-    metric_col: str = "metric",
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Per-node subtree statistics (A5 + A8 derived ratios).
@@ -147,7 +145,7 @@ def tree_stats(
     - ``branching_factor`` — ``n_descendants / (1 + n_descendants -
       n_leaf_descendants)`` exactly as `:200-201`.
 
-    With ``attrs`` (``node_id``, author, metric) also:
+    With ``attrs`` (``node_id``, ``author_id``, ``metric``) also:
 
     - ``n_authors`` — exact distinct authors over the subtree
       (self included) — `collect_set`-free: plain ``countDistinct``
@@ -187,8 +185,8 @@ def tree_stats(
         enriched = enriched.join(
             attrs.select(
                 F.col("node_id").alias("a_node"),
-                F.col(author_col).alias("__author"),
-                F.col(metric_col).alias("__metric"),
+                F.col("author_id").alias("__author"),
+                F.col("metric").alias("__metric"),
             ),
             enriched.node_id == F.col("a_node"),
         )
@@ -223,7 +221,6 @@ def tree_stats(
 def tree_metric_mad(
     edges: DataFrame,
     attrs: DataFrame,
-    metric_col: str = "metric",
     pairs: DataFrame | None = None,
 ) -> DataFrame:
     """Two-pass mean absolute deviation of a metric over each subtree
@@ -241,7 +238,7 @@ def tree_metric_mad(
     vals = pairs.join(
         attrs.select(
             F.col("node_id").alias("a_node"),
-            F.col(metric_col).alias("__metric"),
+            F.col("metric").alias("__metric"),
         ),
         pairs.node_id == F.col("a_node"),
     ).select("anc_id", "__metric")

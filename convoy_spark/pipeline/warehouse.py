@@ -76,9 +76,10 @@ def conversation_edges(tweets: DataFrame) -> DataFrame:
     """O1 (`2_enrich_ur_conversation_ids.py:30-37`): quote/retweet
     references from thread roots become conversation→conversation
     edges; the quoting/retweeting conversation points at the quoted
-    one (its ur-ancestor). UNION dedups; one parent per conversation
-    is enforced with min(to) — the deterministic stand-in for the
-    reference's INSERT-IGNORE-first-wins primary key."""
+    one (its ur-ancestor). One parent per conversation is enforced
+    with min(to), which duplicate edges cannot change — the
+    deterministic stand-in for the reference's INSERT-IGNORE-first-wins
+    primary key."""
     t = tweets.alias("t")
     quoting = tweets.filter(F.col("in_reply_to").isNull()).alias("q")
 
@@ -91,7 +92,7 @@ def conversation_edges(tweets: DataFrame) -> DataFrame:
             )
         )
 
-    edges = edge("quotes").unionByName(edge("retweet_of")).distinct()
+    edges = edge("quotes").unionByName(edge("retweet_of"))
     return (
         edges.filter(F.col("from_conv") != F.col("to_conv"))
         .groupBy("from_conv")
@@ -106,15 +107,7 @@ def enrich_ur_conversations(tweets: DataFrame) -> DataFrame:
     conv_nodes = conversation_edges(tweets).select(
         F.col("from_conv").alias("child_id"), F.col("to_conv").alias("parent_id")
     )
-    # Closure needs roots present as nodes: parents that never appear
-    # as children join in with NULL parents.
-    roots_only = (
-        conv_nodes.select(F.col("parent_id").alias("child_id"))
-        .distinct()
-        .join(conv_nodes.select("child_id"), "child_id", "left_anti")
-        .withColumn("parent_id", F.lit(None).cast("long"))
-    )
-    cmap = closure_roots(conv_nodes.unionByName(roots_only)).filter(
+    cmap = closure_roots(conv_nodes).filter(
         F.col("node_id") != F.col("root_id")
     )
     return enrich_with_roots(
@@ -134,7 +127,7 @@ def tweet_stats(tweets: DataFrame) -> DataFrame:
         F.col("author_id"),
         F.col("like_count").cast("double").alias("metric"),
     )
-    return tree_stats(edges, attrs=attrs, author_col="author_id")
+    return tree_stats(edges, attrs=attrs)
 
 
 def build_tweets_wide(tweets: DataFrame, stats: DataFrame) -> DataFrame:

@@ -1889,7 +1889,7 @@ def srp_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     ex = exploded_vectors(emb).localCheckpoint(eager=False)
-    dim = _infer_dim(emb, "embedding")
+    dim = _infer_dim(emb)
     # rows_per_band=1: band == plane, key == the plane's sign bit
     sig1 = srp_signatures_from_exploded(
         ex, dim, N_PLANES, rows_per_band=1

@@ -126,10 +126,10 @@ def tree_stats_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def tree_stats_grouped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The grouped-map ``applyInPandas`` strategy against the SAME
-    oracle as ``tree_stats`` — three independent physical strategies
-    (pair expansion, level fold, per-tree pandas DFS), one semantic
-    contract. This one mirrors the reference's per-conversation loop
-    shape, distributed per tree."""
+    oracle as ``tree_stats`` — two independent physical strategies
+    (pair expansion, per-tree pandas DFS), one semantic contract. This
+    one mirrors the reference's per-conversation loop shape,
+    distributed per tree."""
     return tree_stats_pandas(forest_edges(spark, sf_dir))
 
 

@@ -57,11 +57,11 @@ EMB_STREAM_SCHEMA = StructType(
 MOMENTS_SCHEMA = "d int, n long, s decimal(38,0), s2 decimal(38,0)"
 
 
-def _dim_deltas(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def _dim_deltas(vectors: DataFrame) -> DataFrame:
     """(d, n, s, s2) — one row per dimension of exact scaled-long
     partial sums over ``vectors``."""
     ex = vectors.select(
-        F.posexplode(F.col(vec_col)).alias("d", "x")
+        F.posexplode("embedding").alias("d", "x")
     ).withColumn("x", F.col("x").cast("double"))
     q = F.floor(F.col("x") * F.lit(float(PSCALE))).cast("decimal(38,0)")
     q2 = F.floor(F.col("x") * F.col("x") * F.lit(float(PSCALE))).cast(
@@ -130,10 +130,10 @@ def embedding_moments(spark: SparkSession, state_dir: str) -> DataFrame:
     )
 
 
-def batch_moments(vectors: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def batch_moments(vectors: DataFrame) -> DataFrame:
     """The one-pass batch twin of :func:`embedding_moments` — same
     exact integer sums, so stream == batch bit-for-bit."""
-    return _moments_from_sums(_dim_deltas(vectors, vec_col))
+    return _moments_from_sums(_dim_deltas(vectors))
 
 
 __all__ = [

@@ -94,7 +94,7 @@ def apply_hardneg_batch(
     cb, ds, ks = _load_codebook(spark, state_dir)
     queries = _load_queries(spark, state_dir)
     codes = _assign(
-        _sub_exploded(batch, ds, "embedding", "vec_id"), cb, ks
+        _sub_exploded(batch, ds), cb, ks
     ).select("vec_id", F.col("sub").cast("int"), F.col("code").cast("int"))
     short = ann_pq_adc_topk(
         queries, batch, k=k_short, index=(cb, codes, None)
@@ -230,7 +230,7 @@ def batch_negatives(
     cb, ds, ks = _load_codebook(spark, state_dir)
     queries = _load_queries(spark, state_dir)
     codes = _assign(
-        _sub_exploded(corpus, ds, "embedding", "vec_id"), cb, ks
+        _sub_exploded(corpus, ds), cb, ks
     ).select("vec_id", F.col("sub").cast("int"), F.col("code").cast("int"))
     short = ann_pq_adc_topk(
         queries, corpus, k=k_short, index=(cb, codes, None)

@@ -93,13 +93,12 @@ def apply_hh_batch(
     state_dir: str,
     batch_tag: str,
     summary_size: int = HH_SUMMARY,
-    text_col: str = "text",
 ) -> None:
     """Fold one micro-batch of documents into its own summary delta
     partition. Overwrites the batch's own path — replay-idempotent
     (the summary is a pure function of the batch's rows)."""
     toks = F.filter(
-        F.split(F.lower(F.col(text_col)), WS_SPLIT), lambda t: t != F.lit("")
+        F.split(F.lower(F.col("text")), WS_SPLIT), lambda t: t != F.lit("")
     )
     tokens = batch.select(F.explode(toks).alias("token"))
     summary = tokens.mapInPandas(

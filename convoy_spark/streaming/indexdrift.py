@@ -20,10 +20,8 @@ batch:
   the batch's commit marker: a crash between the two writes replays
   into an overwrite of both.
 
-``seq`` is the store's logical clock: a replayed batch reuses the seq
-its own partition already carries; a new batch takes max(seq)+1
-(micro-batches within a drain commit sequentially, so the clock is
-total-ordered even across drains sharing the state dir).
+``seq`` is the store's logical clock
+(:func:`~convoy_spark.streaming.util.fragment_seq`).
 
 Query time: :func:`index_drift_snapshots` derives, per epoch × probe
 term, the CUMULATIVE df / n_docs / avgdl and the same log-free
@@ -57,6 +55,7 @@ from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
 from convoy_spark.streaming.util import (
     drain,
     fragment_path,
+    fragment_seq,
     read_fragment_kind,
     stream_parquet,
 )
@@ -95,27 +94,10 @@ def apply_index_drift_batch(
     base = fragment_path(state_dir, "deltas", batch_tag)
     corpus_path = os.path.join(base, "corpus")
     tokens_path = os.path.join(base, "tokens")
-
-    # Logical clock: a replayed batch must KEEP the seq its own
-    # partition already carries (either store file records it — a
-    # crash can leave tokens without the corpus marker); only a
-    # genuinely new batch advances max(committed corpus seq) + 1.
-    seq = None
-    for own in (corpus_path, tokens_path):
-        if seq is None and os.path.isdir(own):
-            row = spark.read.parquet(own).select("seq").first()
-            seq = None if row is None else row.seq
-    if seq is None:
-        prev = (
-            read_fragment_kind(
-                spark, os.path.join(state_dir, "deltas"), "corpus",
-                CORPUS_SCHEMA,
-            )
-            .agg(F.max("seq").alias("m"))
-            .first()
-            .m
-        )
-        seq = 0 if prev is None else prev + 1
+    seq = fragment_seq(
+        spark, state_dir, "deltas", batch_tag,
+        (("corpus", CORPUS_SCHEMA), ("tokens", TOKENS_SCHEMA)),
+    )
     tok, corpus = _batch_deltas(batch)
     # tokens first, corpus (the commit marker) last — see module doc
     tok.select(F.lit(seq).cast("long").alias("seq"), "token", "df").write.mode(
@@ -217,18 +199,13 @@ def index_drift_profile(
     docs: DataFrame,
     probe_terms: list[str],
     n_epochs: int = 4,
-    epoch_col=None,
 ) -> DataFrame:
     """Batch twin of :func:`index_drift_snapshots`: the same drift
     table computed from a static corpus with a deterministic epoch
-    assignment (default ``doc_id % n_epochs`` — a stand-in arrival
-    order). Shares :func:`_drift_from_deltas` with the streaming
-    reader, so the stream==batch pytest is table equality."""
-    epoch = (
-        epoch_col
-        if epoch_col is not None
-        else F.pmod(F.col("doc_id"), F.lit(n_epochs)).cast("long")
-    )
+    assignment (``doc_id % n_epochs`` — a stand-in arrival order).
+    Shares :func:`_drift_from_deltas` with the streaming reader, so
+    the stream==batch pytest is table equality."""
+    epoch = F.pmod(F.col("doc_id"), F.lit(n_epochs)).cast("long")
     tagged = docs.select(epoch.alias("seq"), "doc_id", "text")
     tk = tagged.select(
         "seq",

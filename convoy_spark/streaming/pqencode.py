@@ -88,7 +88,7 @@ def apply_pqencode_batch(
     partition (idempotent under replay)."""
     spark = batch.sparkSession
     cb, ds, ks = _load_codebook(spark, state_dir)
-    codes = _assign(_sub_exploded(batch, ds, "embedding", "vec_id"), cb, ks)
+    codes = _assign(_sub_exploded(batch, ds), cb, ks)
     codes.select(
         "vec_id", F.col("sub").cast("int"), F.col("code").cast("int")
     ).write.mode("overwrite").parquet(
@@ -130,7 +130,7 @@ def batch_codes(
     bit-for-bit."""
     cb, ds, ks = _load_codebook(spark, state_dir)
     return _assign(
-        _sub_exploded(corpus, ds, "embedding", "vec_id"), cb, ks
+        _sub_exploded(corpus, ds), cb, ks
     ).select(
         "vec_id", F.col("sub").cast("int"), F.col("code").cast("int")
     )
@@ -158,7 +158,7 @@ def adc_search_over_store(
     cb, ds, _ks = _load_codebook(spark, state_dir)
     codes = encoded_codes(spark, state_dir)
     n_sub = cb.agg(F.max("sub")).first()[0] + 1
-    q_ex = _sub_exploded(queries, ds, "embedding", "vec_id")
+    q_ex = _sub_exploded(queries, ds)
     dtab = adc_table(q_ex, cb)
     batched = codes.count() >= PQ_WIDE_MIN_ROWS * n_sub
     return _topk_by_adist(_adc_scored(codes, dtab, n_sub, batched), k)

@@ -96,7 +96,7 @@ def batch_vector_errors(
     byte-for-byte. Batch sizes are micro-batch-bounded, so the row
     shape of quant_error is always the right one here (the wide gate
     is a corpus-scan optimization; identical longs either way)."""
-    ex = _sub_exploded(batch, ds, "embedding", "vec_id")
+    ex = _sub_exploded(batch, ds)
     return (
         quant_error(ex, codebook, ks=ks)
         .join(batch.select("vec_id", _epoch_col()), "vec_id")
@@ -209,8 +209,8 @@ def pq_retrain_profile(corpus: DataFrame) -> DataFrame:
     train = corpus.filter((F.col("label") % RETRAIN_EPOCHS) == 0)
     codebook, _, _ = pq_codebooks(train)
     wide = corpus.count() >= PQ_WIDE_MIN_ROWS
-    dim = _infer_dim(corpus, "embedding")
-    ex_all = _sub_exploded(corpus, dim // PQ_SUB, "embedding", "vec_id")
+    dim = _infer_dim(corpus)
+    ex_all = _sub_exploded(corpus, dim // PQ_SUB)
     err = quant_error(ex_all, codebook, wide=wide)
     errors = err.join(
         corpus.select("vec_id", _epoch_col()), "vec_id"

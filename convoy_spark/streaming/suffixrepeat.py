@@ -78,6 +78,7 @@ from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
 from convoy_spark.streaming.util import (
     drain,
     fragment_path,
+    fragment_seq,
     read_fragment_kind,
     stream_parquet,
 )
@@ -94,27 +95,15 @@ def apply_suffix_batch(
 ) -> None:
     """Fold one micro-batch of (doc_id, text): tokenize once, append
     the batch's positions + doc universe to its own delta partition
-    (idempotent under replay — the indexdrift seq/commit-marker
-    discipline)."""
+    (idempotent under replay — the util.fragment_seq clock, with the
+    docs file as commit marker)."""
     base = fragment_path(state_dir, "deltas", batch_tag)
     pos_path = os.path.join(base, "positions")
     docs_path = os.path.join(base, "docs")
-
-    seq = None
-    for own, schema in ((docs_path, DOCS_SCHEMA), (pos_path, POS_SCHEMA)):
-        if seq is None and os.path.isdir(own):
-            row = spark.read.schema(schema).parquet(own).select("seq").first()
-            seq = None if row is None else row.seq
-    if seq is None:
-        prev = (
-            read_fragment_kind(
-                spark, os.path.join(state_dir, "deltas"), "docs", DOCS_SCHEMA
-            )
-            .agg(F.max("seq").alias("m"))
-            .first()
-            .m
-        )
-        seq = 0 if prev is None else prev + 1
+    seq = fragment_seq(
+        spark, state_dir, "deltas", batch_tag,
+        (("docs", DOCS_SCHEMA), ("positions", POS_SCHEMA)),
+    )
 
     pos = token_positions(batch).localCheckpoint()
     pos.select(

@@ -40,6 +40,7 @@ import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 # Default bucket count for the bucketed store layout. Local testing
@@ -228,12 +229,51 @@ def read_fragment_kind(
     return spark.read.schema(schema).parquet(*parts)
 
 
+def fragment_seq(
+    spark: SparkSession,
+    state_dir: str,
+    kind: str,
+    tag: str,
+    files: tuple[tuple[str, str], ...],
+) -> int:
+    """The logical clock of a multi-file fragment store: the ``seq``
+    that batch ``tag`` writes into ``<state_dir>/<kind>``. ``files``
+    are the batch's (file, schema) pairs, its commit marker first.
+
+    A replayed batch reuses the seq its own partition already carries;
+    any of its files records it, since a crash can leave the earlier
+    files without the commit marker. A new batch takes max(committed
+    seq)+1, or 0 in an empty store. Micro-batches drain sequentially,
+    so the clock is total-ordered even across drains sharing the state
+    dir."""
+    own = fragment_path(state_dir, kind, tag)
+    for name, schema in files:
+        if os.path.isdir(os.path.join(own, name)):
+            row = (
+                spark.read.schema(schema)
+                .parquet(os.path.join(own, name))
+                .select("seq")
+                .first()
+            )
+            if row is not None:
+                return row.seq
+    commit, schema = files[0]
+    prev = (
+        read_fragment_kind(spark, os.path.join(state_dir, kind), commit, schema)
+        .agg(F.max("seq").alias("m"))
+        .first()
+        .m
+    )
+    return 0 if prev is None else prev + 1
+
+
 __all__ = [
     "STORE_BUCKETS",
     "append_store",
     "batch_tag",
     "drain",
     "fragment_path",
+    "fragment_seq",
     "load_store",
     "read_fragment_kind",
     "read_fragments",

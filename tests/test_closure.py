@@ -77,14 +77,22 @@ def _true_root(parents, node):
     return node
 
 
-@pytest.mark.parametrize("seed", [0, 1, 2])
-def test_random_forest_property(spark, seed):
+@pytest.mark.parametrize(
+    "seed,root_rows",
+    [pytest.param(s, True, id=str(s)) for s in range(3)]
+    + [pytest.param(s, False, id=f"{s}-no-root-rows") for s in range(3)],
+)
+def test_random_forest_property(spark, seed, root_rows):
+    # Without root rows every root is a parent that has no row of its
+    # own; it must still resolve as a root (warehouse.py relies on it).
     rng = random.Random(seed)
     edges, parents = _random_forest(rng, 200)
+    if not root_rows:
+        edges = [e for e in edges if e[1] is not None]
     got = roots_dict(spark, edges)
-    assert len(got) == 200
-    for node, root in got.items():
-        assert root == _true_root(parents, node), f"node {node}"
+    assert len(got) == len(edges)
+    for node, _ in edges:
+        assert got[node] == _true_root(parents, node), f"node {node}"
 
 
 def test_idempotent_rerun(spark):

@@ -81,9 +81,7 @@ def test_wide_and_row_shapes_agree(spark):
             )
     cent, codes, _ = pq_codebooks(emb)
     ds = len(emb.first().embedding) // PQ_SUB
-    q_ex = _sub_exploded(
-        emb.filter(F.col("vec_id") < 8), ds, "embedding", "vec_id"
-    )
+    q_ex = _sub_exploded(emb.filter(F.col("vec_id") < 8), ds)
     dtab = adc_table(q_ex, cent)
     assert rows(_adc_scored(codes, dtab, batched=True)) == rows(
         _adc_scored(codes, dtab, batched=False)
