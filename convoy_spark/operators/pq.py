@@ -520,19 +520,29 @@ def _topk_by_adist(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+def _geometry(codebook: DataFrame) -> tuple[int, int]:
+    """(n_sub, ds) of a trained codebook, read off its last (sub, dsub)
+    row, so a search can never disagree with the geometry its index was
+    trained at. Every subspace carries all ``ds`` components. A top-1
+    is one job with no exchange, where an aggregate would be two."""
+    row = (
+        codebook.select("sub", "dsub")
+        .orderBy(F.col("sub").desc(), F.col("dsub").desc())
+        .first()
+    )
+    return row.sub + 1, row.dsub + 1
+
+
 def ann_pq_adc_topk(
     queries: DataFrame,
-    corpus: DataFrame,
+    index: tuple[DataFrame, DataFrame, DataFrame | None],
     k: int = 5,
-    n_sub: int = PQ_SUB,
-    ks: int = PQ_KS,
-    iters: int = PQ_ITERS,
-    index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
     dim_map: DataFrame | None = None,
 ) -> DataFrame:
-    """Flat PQ-ADC top-k: train codebooks on the corpus, encode it,
-    and rank every corpus vector per query by the table-lookup
+    """Flat PQ-ADC top-k over a trained index (:func:`pq_codebooks`):
+    rank every encoded corpus vector per query by the table-lookup
     approximate distance. Returns (query_id, corpus_id, adist, rank).
+    Pass the ``dim_map`` the index was trained under, if any.
 
     The scan is linear over the CODE table (|N|·n_sub small-int rows —
     the compressed index), never the float vectors: the distance table
@@ -540,39 +550,36 @@ def ann_pq_adc_topk(
     long aggregate. Queries are assumed drawn from the corpus id space;
     self-pairs are excluded.
     """
-    codebook, codes, _ = index or pq_codebooks(
-        corpus, n_sub, ks, iters, dim_map=dim_map
-    )
-    dim = _infer_dim(corpus)
-    q_ex = _sub_exploded(queries, dim // n_sub, dim_map)
-    dtab = adc_table(q_ex, codebook)
-    batched = corpus.count() >= PQ_WIDE_MIN_ROWS  # physical-shape choice
+    codebook, codes, _ = index
+    n_sub, ds = _geometry(codebook)
+    dtab = adc_table(_sub_exploded(queries, ds, dim_map), codebook)
+    # physical-shape choice: codes hold n_sub rows per corpus vector
+    batched = codes.count() >= PQ_WIDE_MIN_ROWS * n_sub
     return _topk_by_adist(_adc_scored(codes, dtab, n_sub, batched), k)
 
 
 def ivfpq_candidates(
     queries: DataFrame,
-    corpus: DataFrame,
-    n_cells: int = 16,
+    coarse_index: tuple[DataFrame, DataFrame],
     n_probe: int = 4,
-    coarse_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """(query_id, vec_id) — the IVF-pruned candidate pairs: for each
     query, every corpus vector assigned to one of its ``n_probe``
-    nearest coarse cells (self excluded). THE candidate stage of
-    :func:`ann_ivfpq_topk`, split out so the recall-vs-n_probe sweep
-    harness (queries/similarity.py::pq_recall_sweep) measures exactly
-    the candidate set the search runs on — shared-by-construction,
-    cannot drift. It is also the probe stage of
+    nearest cells of ``coarse_index`` (operators/similarity.ivf_index),
+    self excluded. THE candidate stage of :func:`ann_ivfpq_topk`, split
+    out so the recall-vs-n_probe sweep harness
+    (queries/similarity.py::pq_recall_sweep) measures exactly the
+    candidate set the search runs on — shared-by-construction, cannot
+    drift. It is also the probe stage of
     operators/similarity.ann_ivf_topk.
 
     Probe ranking is the exact floor-scaled query→centroid distance
     with the deterministic (d, cell) tiebreak; candidates come from one
     equi-join on cell — candidate volume is n_probe/n_cells of the
     corpus, no Q×N anywhere."""
-    from convoy_spark.operators.similarity import _sq_dist, ivf_index
+    from convoy_spark.operators.similarity import _sq_dist
 
-    centroids, assignment = coarse_index or ivf_index(corpus, n_cells=n_cells)
+    centroids, assignment = coarse_index
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.transform("embedding", lambda x: x.cast("double")).alias("qv"),
@@ -598,15 +605,10 @@ def ivfpq_candidates(
 
 def ann_ivfpq_topk(
     queries: DataFrame,
-    corpus: DataFrame,
+    pq_index: tuple[DataFrame, DataFrame, DataFrame | None],
+    coarse_index: tuple[DataFrame, DataFrame],
     k: int = 5,
-    n_cells: int = 16,
     n_probe: int = 4,
-    n_sub: int = PQ_SUB,
-    ks: int = PQ_KS,
-    iters: int = PQ_ITERS,
-    pq_index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
-    coarse_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """IVF-PQ: the coarse quantizer prunes the scan to the ``n_probe``
     nearest cells per query, and PQ-ADC ranks only those candidates —
@@ -617,21 +619,16 @@ def ann_ivfpq_topk(
     ADC stage never touches float vectors — it joins the probed cells'
     code rows against the broadcast distance table.
 
-    Both index builds run the one Lloyd loop (:func:`lloyd`: the IVF
+    Both indexes come from the one Lloyd loop (:func:`lloyd`: the IVF
     coarse quantizer at one subspace, PQ at ``n_sub``), and the
     candidate pruning is an equi-join on cell — no Q×N anywhere.
     """
-    codebook, codes, _ = pq_index or pq_codebooks(corpus, n_sub, ks, iters)
-    dim = _infer_dim(corpus)
-    q_ex = _sub_exploded(queries, dim // n_sub)
-    dtab = adc_table(q_ex, codebook)
-    cand_codes = ivfpq_candidates(
-        queries,
-        corpus,
-        n_cells=n_cells,
-        n_probe=n_probe,
-        coarse_index=coarse_index,
-    ).join(codes, "vec_id")
+    codebook, codes, _ = pq_index
+    _, ds = _geometry(codebook)
+    dtab = adc_table(_sub_exploded(queries, ds), codebook)
+    cand_codes = ivfpq_candidates(queries, coarse_index, n_probe).join(
+        codes, "vec_id"
+    )
     dt = dtab.select(
         F.col("query_id").alias("_dq"),
         F.col("sub").alias("_dsub"),
@@ -658,35 +655,26 @@ def ann_ivfpq_topk(
 
 def ann_pq_rerank_topk(
     queries: DataFrame,
-    corpus: DataFrame,
+    index: tuple[DataFrame, DataFrame, DataFrame],
     k: int = 5,
-    rerank: int = PQ_RERANK,
-    n_sub: int = PQ_SUB,
-    ks: int = PQ_KS,
-    iters: int = PQ_ITERS,
-    index: tuple[DataFrame, DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
     """The production PQ pipeline: ADC over the compressed code table
-    shortlists ``rerank · k`` candidates per query, then ONLY those
+    shortlists ``PQ_RERANK · k`` candidates per query, then ONLY those
     candidates' float vectors are fetched for an exact L2 re-rank —
     sketch-then-verify, same discipline as the MinHash dedup. Returns
     (query_id, corpus_id, dist, rank) with exact distances.
 
     Scale: the scan stage reads codes only (the 25×-compressed index);
-    the verify stage touches rerank·k·|Q| float vectors — candidate-
+    the verify stage touches PQ_RERANK·k·|Q| float vectors — candidate-
     proportional, never corpus-proportional. Measured recall@5 vs
     exact L2 at sf0.001: 0.99 (pure ADC: ~0.3 — the shortlist is what
     makes PQ usable, not the raw code ranks). Exactness: the re-rank
-    distance is the decimal-exact squared L2 over the exploded frame,
-    so the final ranks carry a full value-hash oracle."""
-    codebook, codes, ex = index or pq_codebooks(corpus, n_sub, ks, iters)
-    dim = _infer_dim(corpus)
-    q_ex = _sub_exploded(queries, dim // n_sub)
-    dtab = adc_table(q_ex, codebook)
-    batched = corpus.count() >= PQ_WIDE_MIN_ROWS  # physical-shape choice
-    short = _topk_by_adist(
-        _adc_scored(codes, dtab, n_sub, batched), rerank * k
-    ).select("query_id", "corpus_id")
+    distance is the decimal-exact squared L2 over the index's exploded
+    frame, so the final ranks carry a full value-hash oracle."""
+    ex = index[2]
+    short = ann_pq_adc_topk(queries, index, PQ_RERANK * k).select(
+        "query_id", "corpus_id"
+    )
     ea = ex.select(
         F.col("vec_id").alias("query_id"), "sub", "dsub", F.col("x").alias("xa")
     )

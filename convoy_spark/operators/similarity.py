@@ -282,53 +282,44 @@ def ivf_index(
     n_cells: int = 16,
     iters: int = 2,
 ) -> tuple[DataFrame, DataFrame]:
-    """IVF coarse quantizer: deterministic k-means (first ``n_cells``
-    vectors by id seed the centroids; ``iters`` Lloyd rounds with
-    floor-scaled-long elementwise means), returning
+    """IVF coarse quantizer: the PQ Lloyd loop (operators/pq.lloyd) at
+    ONE subspace spanning all dimensions (sub = 0, dsub = d), in the
+    row shape — the first ``n_cells`` vectors by id seed the
+    centroids, then ``iters`` rounds with floor-scaled-long elementwise
+    means. Returns
 
     - centroids: (cell, centroid array<double>)
     - assignment: (vec_id, cell)
+
+    The centroids are the means of the FINAL assignment — one update
+    past the codebook that assignment was made against — which is what
+    every IVF consumer (priority distances, probe scoring) and the
+    unrolled oracle (queries/similarity.py _ivf_kmeans_ctes) read.
 
     Each Lloyd round is one broadcast join (centroids are tiny) + one
     min-struct aggregation + one elementwise-mean aggregation — no
     pairwise corpus work anywhere, which is the point of IVF: the
     index build is O(N · n_cells), the search probes a few cells.
     """
-    ex = exploded_vectors(corpus).localCheckpoint(eager=False)
-    cent, assignment = _coarse_kmeans(ex, corpus, n_cells, iters)
-    centroids = cent.groupBy("cell").agg(
-        F.transform(
-            F.array_sort(F.collect_list(F.struct("d", "m"))),
-            lambda s: s["m"],
-        ).alias("centroid")
-    )
-    return centroids, assignment
-
-
-def _coarse_kmeans(
-    ex: DataFrame, corpus: DataFrame, n_cells: int, iters: int
-) -> tuple[DataFrame, DataFrame]:
-    """(cent (cell, d, m), assignment (vec_id, cell)) over the
-    checkpointed (vec_id, d, x) frame: the PQ Lloyd loop
-    (operators/pq.lloyd) at ONE subspace spanning all dimensions
-    (sub = 0, dsub = d), in the row shape. The returned centroids are
-    the means of the FINAL assignment — one update past the codebook
-    that assignment was made against — which is what every IVF
-    consumer (priority distances, probe scoring) and the unrolled
-    oracle (queries/similarity.py _ivf_kmeans_ctes) read."""
     from convoy_spark.operators.pq import _update, lloyd
 
-    one = ex.select(
-        "vec_id", F.lit(0).alias("sub"), F.col("d").alias("dsub"), "x"
+    one = (
+        exploded_vectors(corpus)
+        .localCheckpoint(eager=False)
+        .select("vec_id", F.lit(0).alias("sub"), F.col("d").alias("dsub"), "x")
     )
-    _, codes = lloyd(
-        one, corpus.select("vec_id"), n_cells, iters,
-        wide=False,
+    _, codes = lloyd(one, corpus.select("vec_id"), n_cells, iters, wide=False)
+    centroids = (
+        _update(codes, one)
+        .groupBy("cell")
+        .agg(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("dsub", "m"))),
+                lambda s: s["m"],
+            ).alias("centroid")
+        )
     )
-    return (
-        _update(codes, one).select("cell", F.col("dsub").alias("d"), "m"),
-        codes.select("vec_id", F.col("code").alias("cell")),
-    )
+    return centroids, codes.select("vec_id", F.col("code").alias("cell"))
 
 
 def scaled_sum_guard(n_col, mx_col, value, what: str):
@@ -362,24 +353,21 @@ def scaled_sum_guard(n_col, mx_col, value, what: str):
 def ann_ivf_topk(
     queries: DataFrame,
     corpus: DataFrame,
+    coarse_index: tuple[DataFrame, DataFrame],
     k: int = 5,
-    n_cells: int = 16,
-    n_probe: int = 4,
-    coarse_index: tuple[DataFrame, DataFrame] | None = None,
 ) -> DataFrame:
-    """IVF search: rank cells per query by centroid distance, score
-    only vectors in the ``n_probe`` nearest cells. The probe knob
-    trades recall for the fraction of the corpus touched
-    (n_probe/n_cells here) — tested against the brute-force
-    baseline. The probe stage is operators/pq.ivfpq_candidates, the
-    one shared with IVF-PQ search; ``coarse_index`` is a prebuilt
-    :func:`ivf_index` of ``corpus`` (trained here when omitted)."""
+    """IVF search over ``coarse_index`` (an :func:`ivf_index` of
+    ``corpus``): rank cells per query by centroid distance, score only
+    vectors in the nearest cells. The probe count trades recall for the
+    fraction of the corpus touched (n_probe/n_cells) — tested against
+    the brute-force baseline. The probe stage is
+    operators/pq.ivfpq_candidates, the one shared with IVF-PQ search."""
     from convoy_spark.operators.pq import ivfpq_candidates
 
     # each vector sits in exactly one cell, so the pairs are distinct
-    cand = ivfpq_candidates(
-        queries, corpus, n_cells, n_probe, coarse_index=coarse_index
-    ).withColumnRenamed("vec_id", "corpus_id")
+    cand = ivfpq_candidates(queries, coarse_index).withColumnRenamed(
+        "vec_id", "corpus_id"
+    )
     qv = with_norm(
         queries.select(
             F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qv")
@@ -671,15 +659,15 @@ def knn_graph(
 
 def semantic_dedup(
     corpus: DataFrame,
+    index: tuple[DataFrame, DataFrame],
     eps: float = 0.3,
-    n_cells: int = 16,
-    iters: int = 2,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): semantic
     near-duplicate REMOVAL over an embedding corpus — cluster with the
-    deterministic k-means coarse quantizer (:func:`ivf_index`), then
-    within each cluster drop every vector whose cosine similarity to a
-    higher-priority cluster member is ≥ ``eps``. Priority follows the
+    deterministic k-means coarse quantizer (``index``, an
+    :func:`ivf_index` of ``corpus``), then within each cluster drop
+    every vector whose cosine similarity to a higher-priority cluster
+    member is ≥ ``eps``. Priority follows the
     paper's keep-the-outlier rule: members rank by distance to their
     own centroid DESCENDING (farthest kept first, vec_id tiebreak), so
     of a duplicate group the most centroid-atypical copy survives.
@@ -704,11 +692,10 @@ def semantic_dedup(
     rank, and the keep decision are bit-identical across engines and
     partitionings — full value-hash oracle in queries/similarity.py.
     """
-    # ONE exploded frame feeds the k-means loop, the priority
-    # distances, the norms and the pair dots; centroids come back
-    # exploded, skipping the array assembly + re-explode round-trip.
+    # ONE exploded frame feeds the priority distances and the norms
+    centroids, assignment = index
+    cent_ex = centroids.select("cell", F.posexplode("centroid").alias("d", "m"))
     ex = exploded_vectors(corpus).localCheckpoint(eager=False)
-    cent_ex, assignment = _coarse_kmeans(ex, corpus, n_cells, iters)
     scaled = lambda c: (  # noqa: E731
         F.sum(F.floor(c * F.lit(SCORE_SCALE))).cast("double")
         / F.lit(SCORE_SCALE)

@@ -321,7 +321,7 @@ def ann_ivf_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     an oracle-checkable decomposition of the default-quality ANN).
     The coarse index is the session's shared IVF build."""
     q, c = _queries_and_corpus(spark, sf_dir)
-    return ann_ivf_topk(q, c, k=TOP_K, coarse_index=shared_ivf_index(spark, sf_dir))
+    return ann_ivf_topk(q, c, shared_ivf_index(spark, sf_dir), k=TOP_K)
 
 
 @query(
@@ -729,8 +729,8 @@ def semantic_dedup_query(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return semantic_dedup(
         load_table(spark, sf_dir, "embeddings"),
+        shared_ivf_index(spark, sf_dir),
         eps=SEMDEDUP_EPS,
-        n_cells=IVF_CELLS,
     )
 
 
@@ -765,11 +765,11 @@ def semantic_dedup_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     (At the driver's sf0.01 the floor keeps this identical to the
     pinned form — the divergence is exercised at sf0.1+ where
     N/{SEMDEDUP_TARGET_CELL} > {IVF_CELLS}, pytest + slope runs.)"""
-    from convoy_spark.operators.similarity import semantic_dedup
+    from convoy_spark.operators.similarity import ivf_index, semantic_dedup
 
     emb = load_table(spark, sf_dir, "embeddings")
     n_cells = max(IVF_CELLS, emb.count() // SEMDEDUP_TARGET_CELL)
-    return semantic_dedup(emb, eps=SEMDEDUP_EPS, n_cells=n_cells)
+    return semantic_dedup(emb, ivf_index(emb, n_cells=n_cells), eps=SEMDEDUP_EPS)
 
 
 # --- k-NN graph over embeddings + semantic communities (round 9) ----
@@ -1102,7 +1102,7 @@ def shared_pq_index(spark: SparkSession, sf_dir: str):
 @shared_build(
     "ivf_index",
     family="ivf",
-    consumers={"ann_ivf_topk", "ann_ivfpq_topk", "pq_recall_sweep"},
+    consumers={"ann_ivf_topk", "ann_ivfpq_topk", "pq_recall_sweep", "semantic_dedup"},
 )
 def shared_ivf_index(spark: SparkSession, sf_dir: str):
     from convoy_spark.operators.similarity import ivf_index
@@ -1245,8 +1245,8 @@ def pq_adc_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     table broadcasts; ranking is the two-phase per-query top-k. Fully
     oracle-checked: the iterative codebook training unrolls into SQL
     CTEs exactly like ann_ivf_topk's coarse quantizer."""
-    q, c = _queries_and_corpus(spark, sf_dir)
-    return ann_pq_adc_topk(q, c, k=TOP_K, index=shared_pq_index(spark, sf_dir))
+    q, _ = _queries_and_corpus(spark, sf_dir)
+    return ann_pq_adc_topk(q, shared_pq_index(spark, sf_dir), k=TOP_K)
 
 
 # Query→coarse-centroid probe distances (exact decimal, the
@@ -1306,13 +1306,9 @@ def ann_ivfpq_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows (no float vector is touched after the index build); both
     k-means loops are deterministic fixed-depth dataflows, so the
     composed index carries a full value-hash oracle."""
-    q, c = _queries_and_corpus(spark, sf_dir)
+    q, _ = _queries_and_corpus(spark, sf_dir)
     return ann_ivfpq_topk(
-        q,
-        c,
-        k=TOP_K,
-        pq_index=shared_pq_index(spark, sf_dir),
-        coarse_index=shared_ivf_index(spark, sf_dir),
+        q, shared_pq_index(spark, sf_dir), shared_ivf_index(spark, sf_dir), k=TOP_K
     )
 
 
@@ -1370,10 +1366,8 @@ def pq_rerank_topk_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     is what makes PQ usable). The verify stage touches
     {PQ_RERANK}·k·|Q| float vectors — candidate-proportional, never
     corpus-proportional."""
-    q, c = _queries_and_corpus(spark, sf_dir)
-    return ann_pq_rerank_topk(
-        q, c, k=TOP_K, index=shared_pq_index(spark, sf_dir)
-    )
+    q, _ = _queries_and_corpus(spark, sf_dir)
+    return ann_pq_rerank_topk(q, shared_pq_index(spark, sf_dir), k=TOP_K)
 
 
 # n_probe operating points for the recall-vs-cost sweep: 1 → cheapest
@@ -1500,13 +1494,11 @@ def pq_recall_sweep_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     denom = F.lit(float(N_QUERIES * TOP_K))
     out = None
     for p in PQ_SWEEP_PROBES:
-        ann = ann_ivfpq_topk(
-            q, c, k=TOP_K, n_probe=p, pq_index=pq_idx, coarse_index=coarse
-        )
+        ann = ann_ivfpq_topk(q, pq_idx, coarse, k=TOP_K, n_probe=p)
         hits = ann.join(exact, ["query_id", "corpus_id"], "left_semi").agg(
             F.count(F.lit(1)).cast("long").alias("n_hits")
         )
-        cand = ivfpq_candidates(q, c, n_probe=p, coarse_index=coarse).select(
+        cand = ivfpq_candidates(q, coarse, n_probe=p).select(
             "query_id", F.col("vec_id").alias("corpus_id")
         )
         # cand_recall separates the two loss sources: the candidate
@@ -1663,9 +1655,9 @@ def pq_opq_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
         if layout == "balanced":
             dm = balanced_dim_map(c, ex=raw).localCheckpoint(eager=False)
             bal_idx = pq_codebooks(c, dim_map=dm, raw_ex=raw)
-            top = ann_pq_adc_topk(q, c, k=TOP_K, index=bal_idx, dim_map=dm)
+            top = ann_pq_adc_topk(q, bal_idx, k=TOP_K, dim_map=dm)
         else:
-            top = ann_pq_adc_topk(q, c, k=TOP_K, index=idx)
+            top = ann_pq_adc_topk(q, idx, k=TOP_K)
         row = (
             top.join(exact, ["query_id", "corpus_id"], "left_semi")
             .agg(F.count(F.lit(1)).cast("long").alias("n_hits"))
@@ -1750,7 +1742,7 @@ def hard_negative_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     q, c = _queries_and_corpus(spark, sf_dir)
     short = ann_pq_adc_topk(
-        q, c, k=HN_SHORTLIST, index=shared_pq_index(spark, sf_dir)
+        q, shared_pq_index(spark, sf_dir), k=HN_SHORTLIST
     ).select("query_id", "corpus_id", "adist")
     pos = exact_l2_topk(q, c, k=TOP_K).select("query_id", "corpus_id")
     negs = short.join(pos, ["query_id", "corpus_id"], "left_anti")
@@ -2433,9 +2425,9 @@ def knn_adc_label_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     q = emb.join(kq, "vec_id")
     idx = shared_pq_index(spark, sf_dir)
-    short = ann_pq_adc_topk(
-        q, emb, k=KNN_ADC_SHORTLIST, index=idx
-    ).select("query_id", "corpus_id")
+    short = ann_pq_adc_topk(q, idx, k=KNN_ADC_SHORTLIST).select(
+        "query_id", "corpus_id"
+    )
     cand = short.join(
         sp.filter(F.col("is_train")).select(F.col("vec_id").alias("corpus_id")),
         "corpus_id",

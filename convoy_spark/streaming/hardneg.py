@@ -93,12 +93,16 @@ def apply_hardneg_batch(
         return
     cb, ds, ks = _load_codebook(spark, state_dir)
     queries = _load_queries(spark, state_dir)
-    codes = _assign(
-        _sub_exploded(batch, ds), cb, ks
-    ).select("vec_id", F.col("sub").cast("int"), F.col("code").cast("int"))
-    short = ann_pq_adc_topk(
-        queries, batch, k=k_short, index=(cb, codes, None)
-    ).select("query_id", "corpus_id", "adist")
+    # the search counts the codes for its shape choice, then scans
+    # them: checkpointed so the batch is encoded once
+    codes = (
+        _assign(_sub_exploded(batch, ds), cb, ks)
+        .select("vec_id", F.col("sub").cast("int"), F.col("code").cast("int"))
+        .localCheckpoint(eager=False)
+    )
+    short = ann_pq_adc_topk(queries, (cb, codes, None), k=k_short).select(
+        "query_id", "corpus_id", "adist"
+    )
     truth = exact_l2_topk(queries, batch, k=k_truth).select(
         "query_id", "corpus_id", "dnum"
     )
@@ -229,12 +233,16 @@ def batch_negatives(
     result :func:`mined_negatives` must equal bit-for-bit."""
     cb, ds, ks = _load_codebook(spark, state_dir)
     queries = _load_queries(spark, state_dir)
-    codes = _assign(
-        _sub_exploded(corpus, ds), cb, ks
-    ).select("vec_id", F.col("sub").cast("int"), F.col("code").cast("int"))
-    short = ann_pq_adc_topk(
-        queries, corpus, k=k_short, index=(cb, codes, None)
-    ).select("query_id", "corpus_id", "adist")
+    # the search counts the codes for its shape choice, then scans
+    # them: checkpointed so the corpus is encoded once
+    codes = (
+        _assign(_sub_exploded(corpus, ds), cb, ks)
+        .select("vec_id", F.col("sub").cast("int"), F.col("code").cast("int"))
+        .localCheckpoint(eager=False)
+    )
+    short = ann_pq_adc_topk(queries, (cb, codes, None), k=k_short).select(
+        "query_id", "corpus_id", "adist"
+    )
     truth = exact_l2_topk(queries, corpus, k=k_truth).select(
         "query_id", "corpus_id", "dnum"
     )

@@ -43,6 +43,7 @@ from convoy_spark.operators.pq import (
     PQ_SUB,
     _assign,
     _sub_exploded,
+    ann_pq_adc_topk,
     pq_codebooks,
 )
 from convoy_spark.streaming.embstats import EMB_STREAM_SCHEMA
@@ -147,21 +148,8 @@ def adc_search_over_store(
     the original vectors. Because encoding is deterministic, results
     are bit-identical to searching a batch-built index over the same
     corpus (tested). Returns (query_id, corpus_id, adist, rank)."""
-    from convoy_spark.operators.pq import (
-        PQ_WIDE_MIN_ROWS,
-        _adc_scored,
-        _sub_exploded,
-        _topk_by_adist,
-        adc_table,
-    )
-
-    cb, ds, _ks = _load_codebook(spark, state_dir)
-    codes = encoded_codes(spark, state_dir)
-    n_sub = cb.agg(F.max("sub")).first()[0] + 1
-    q_ex = _sub_exploded(queries, ds)
-    dtab = adc_table(q_ex, cb)
-    batched = codes.count() >= PQ_WIDE_MIN_ROWS * n_sub
-    return _topk_by_adist(_adc_scored(codes, dtab, n_sub, batched), k)
+    cb = spark.read.parquet(os.path.join(state_dir, "codebook"))
+    return ann_pq_adc_topk(queries, (cb, encoded_codes(spark, state_dir), None), k)
 
 
 __all__ = [

@@ -88,6 +88,70 @@ def test_wide_and_row_shapes_agree(spark):
     )
 
 
+def test_adc_search_reads_the_index_geometry(spark):
+    """An index trained at a non-default geometry (8 subspaces of 8
+    dims) is searched at the geometry of its own codebook: every ADC
+    distance, and the top-5 it ranks, equals the table-lookup distance
+    recomputed here from that codebook and those codes."""
+    from convoy_spark.operators.pq import ann_pq_adc_topk
+
+    emb = load_table(spark, SF_DIR, "embeddings")
+    q = emb.filter(F.col("vec_id") < 8)
+    index = pq_codebooks(emb, n_sub=8)
+    codebook, codes, _ = index
+    got = sorted(
+        (r.query_id, r.corpus_id, r.adist, r.rank)
+        for r in ann_pq_adc_topk(q, index, k=5).collect()
+    )
+
+    scale = float(1 << 40)
+    m = np.zeros((8, PQ_KS, 8))
+    for r in codebook.collect():
+        m[r.sub, r.cell, r.dsub] = r.m
+    code = {}
+    for r in codes.collect():
+        code.setdefault(r.vec_id, np.zeros(8, dtype=np.int64))[r.sub] = r.code
+    vec = {
+        r.vec_id: np.array(r.embedding, dtype=np.float64)
+        for r in emb.select("vec_id", "embedding").collect()
+    }
+    want = []
+    for qid in range(8):
+        xq = vec[qid].reshape(8, 1, 8)
+        # (sub, cell) table of floor-scaled long sums, as adc_table
+        table = np.floor(((xq - m) * (xq - m)) * scale).astype(np.int64).sum(axis=2)
+        dist = sorted(
+            (float(table[np.arange(8), c].sum()) / scale, cid)
+            for cid, c in code.items()
+            if cid != qid
+        )
+        want += [(qid, cid, d, rank) for rank, (d, cid) in enumerate(dist[:5], 1)]
+    assert got == sorted(want)
+
+
+def test_one_ivf_training_per_session(spark, monkeypatch):
+    """Every IVF search in the catalog reads the session's one shared
+    coarse index: constructing all four consumers trains the 16-cell
+    k-means (a one-subspace Lloyd loop) exactly once."""
+    import convoy_spark.operators.pq as pq
+    import convoy_spark.queries.similarity as simq
+    from convoy_spark.queries import QUERIES
+
+    monkeypatch.setattr(simq, "_IVF_INDEX_CACHE", {})
+    one_sub = []
+    real = pq.lloyd
+
+    def counting(ex, ids, ks, iters, wide):
+        if ex.agg(F.max("sub")).first()[0] == 0:
+            one_sub.append(ks)
+        return real(ex, ids, ks, iters, wide)
+
+    monkeypatch.setattr(pq, "lloyd", counting)
+    for name in ("ann_ivf_topk", "ann_ivfpq_topk", "pq_recall_sweep", "semantic_dedup"):
+        QUERIES[name](spark, SF_DIR)
+    assert one_sub == [simq.IVF_CELLS]
+
+
 def test_pq_rerank_parity(spark, duck):
     run_parity(spark, duck, "pq_rerank_topk")
 
@@ -110,7 +174,7 @@ def test_pq_rerank_recall_vs_exact_l2(spark):
     q = emb.filter(F.col("vec_id") < 16)
     approx = {
         (r.query_id, r.corpus_id)
-        for r in ann_pq_rerank_topk(q, emb, k=5).collect()
+        for r in ann_pq_rerank_topk(q, pq_codebooks(emb), k=5).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.85, f"PQ re-rank recall collapsed: {recall:.2f}"
@@ -129,13 +193,13 @@ def test_persisted_index_serves_search_identically(spark, tmp_path):
         load_pq_index,
         write_pq_index,
     )
-    from convoy_spark.operators.similarity import exploded_vectors  # noqa: F401
+    from convoy_spark.operators.similarity import ivf_index
 
     emb = load_table(spark, SF_DIR, "embeddings")
     q = emb.filter(F.col("vec_id") < 16)
     want = sorted(
         (r.query_id, r.corpus_id, r.adist, r.rank)
-        for r in ann_ivfpq_topk(q, emb, k=5).collect()
+        for r in ann_ivfpq_topk(q, pq_codebooks(emb), ivf_index(emb), k=5).collect()
     )
     base = str(tmp_path / "pqindex")
     write_pq_index(emb, base)
@@ -144,10 +208,9 @@ def test_persisted_index_serves_search_identically(spark, tmp_path):
         (r.query_id, r.corpus_id, r.adist, r.rank)
         for r in ann_ivfpq_topk(
             q,
-            emb,
+            (idx["codebook"], idx["codes"], None),
+            (idx["centroids"], idx["assignment"]),
             k=5,
-            pq_index=(idx["codebook"], idx["codes"], None),
-            coarse_index=(idx["centroids"], idx["assignment"]),
         ).collect()
     )
     assert got == want
@@ -226,6 +289,7 @@ def test_hard_negative_mine_semantics(spark):
         HN_PER_QUERY,
         HN_SHORTLIST,
         TOP_K,
+        shared_pq_index,
     )
 
     emb = load_table(spark, SF_DIR, "embeddings")
@@ -236,7 +300,9 @@ def test_hard_negative_mine_semantics(spark):
     }
     short = {
         (r.query_id, r.corpus_id)
-        for r in ann_pq_adc_topk(q, emb, k=HN_SHORTLIST).collect()
+        for r in ann_pq_adc_topk(
+            q, shared_pq_index(spark, SF_DIR), k=HN_SHORTLIST
+        ).collect()
     }
     got = QUERIES["hard_negative_mine"](spark, SF_DIR).collect()
     per_q: dict = {}
@@ -326,7 +392,7 @@ def test_knn_adc_neighbor_recall_vs_exact(spark):
         for r in exact_l2_topk(q, train, k=KNN_K).collect()
     }
     idx = shared_pq_index(spark, SF_DIR)
-    short = ann_pq_adc_topk(q, emb, k=KNN_ADC_SHORTLIST, index=idx).join(
+    short = ann_pq_adc_topk(q, idx, k=KNN_ADC_SHORTLIST).join(
         sp.filter(F.col("is_train")).select(
             F.col("vec_id").alias("corpus_id")
         ),

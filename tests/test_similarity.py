@@ -90,7 +90,7 @@ def test_ivf_recall_vs_brute_force(spark):
     }
     approx = {
         (r.query_id, r.corpus_id)
-        for r in ann_ivf_topk(q, emb, k=5).collect()
+        for r in ann_ivf_topk(q, emb, ivf_index(emb), k=5).collect()
     }
     recall = len(exact & approx) / len(exact)
     assert recall >= 0.6, f"IVF recall collapsed: {recall:.2f}"  # 0.94 measured
@@ -113,7 +113,7 @@ def test_semantic_dedup_hand_case(spark):
     )
     out = {
         r.vec_id: r
-        for r in semantic_dedup(vecs, eps=0.9, n_cells=2, iters=2).collect()
+        for r in semantic_dedup(vecs, ivf_index(vecs, n_cells=2), eps=0.9).collect()
     }
     assert len(out) == 4
     # each near-dup group keeps exactly one member
@@ -139,7 +139,7 @@ def test_semantic_dedup_vs_python_reference(spark):
 
     emb = load_table(spark, "/root/testdata/sf0.001", "embeddings")
     eps = 0.3
-    rows = semantic_dedup(emb, eps=eps, n_cells=16).collect()
+    rows = semantic_dedup(emb, ivf_index(emb), eps=eps).collect()
     vec = {
         r.vec_id: r.embedding
         for r in emb.select("vec_id", "embedding").collect()

@@ -95,7 +95,7 @@ def test_adc_search_over_streamed_store(spark, tmp_path):
     """Searching the streamed store returns BIT-IDENTICAL top-k to
     the batch-built flat index over the same corpus — the store, not
     the vectors, is the search asset."""
-    from convoy_spark.operators.pq import ann_pq_adc_topk
+    from convoy_spark.operators.pq import ann_pq_adc_topk, pq_codebooks
     from convoy_spark.streaming.pqencode import adc_search_over_store
 
     emb = _emb(spark)
@@ -110,7 +110,7 @@ def test_adc_search_over_streamed_store(spark, tmp_path):
     q = emb.filter(F.col("vec_id") < 8)
     want = sorted(
         (r.query_id, r.corpus_id, r.adist, r.rank)
-        for r in ann_pq_adc_topk(q, emb, k=5).collect()
+        for r in ann_pq_adc_topk(q, pq_codebooks(emb), k=5).collect()
     )
     got = sorted(
         (r.query_id, r.corpus_id, r.adist, r.rank)
