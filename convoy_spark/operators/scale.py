@@ -17,6 +17,8 @@ when a 100 TB join/groupBy key misbehaves.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -103,6 +105,17 @@ def explain_str(df: DataFrame) -> str:
     with contextlib.redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+# Ids that differ from run to run: expression ``#N`` ids, RDD ids and
+# ``plan_id``.
+RUN_IDS = re.compile(r"(#|RDD\[|plan_id=)\d+")
+
+
+def normalize_plan(plan: str) -> str:
+    """``plan`` with its run-dependent ids replaced by ``N``, so two
+    dumps of the same plan ``diff`` clean."""
+    return RUN_IDS.sub(r"\1N", plan)
 
 
 # --- Z-order (Morton) layout -------------------------------------------------

@@ -2098,11 +2098,12 @@ def community_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ONE N:1 enrichment join (labels ⋈ per-doc stats,
     both |N| rows) and a TWO-LEVEL aggregation — level 1 pre-reduces
     per (community, lang, source) with map-side combine (decimal
-    partial sums keep the davg exact-mergeable), level 2 runs the
-    multi-distinct Expand over the pre-reduced frame only
-    (communities × langs × sources rows), so the ×3 Expand multiplier
-    the fk_audit docstring warns about never touches corpus-sized
-    rows. The corpus-mean quality rides in as a broadcast one-row
+    partial sums keep the davg exact-mergeable), level 2 reduces the
+    pre-reduced frame only (communities × langs × sources rows) and
+    counts its langs and sources as set sizes. Two ``countDistinct``
+    would plan a multi-distinct Expand whose group order follows the
+    run's expression ids, so the plan text would change from run to
+    run. The corpus-mean quality rides in as a broadcast one-row
     aggregate frame."""
     from convoy_spark.functions.numeric import DEC, davg
     from convoy_spark.queries.similarity import _knng_labels
@@ -2129,8 +2130,8 @@ def community_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     gq = j.agg(davg(F.col("quality_score")).alias("_gq"))
     prof = pre.groupBy("community").agg(
         F.sum("_n").cast("long").alias("n_docs"),
-        F.countDistinct("lang").alias("n_langs"),
-        F.countDistinct("source").alias("n_sources"),
+        F.size(F.collect_set("lang")).cast("long").alias("n_langs"),
+        F.size(F.collect_set("source")).cast("long").alias("n_sources"),
         F.sum("_toks").cast("long").alias("total_tokens"),
         F.sum("_chars").cast("long").alias("total_chars"),
         (F.sum("_qsum").cast("double") / F.sum("_n")).alias(

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Dump `.explain("formatted")` for named catalog queries to files —
 the plans/r{N}/<query>_{before,after}.txt evidence the optimization
-rounds commit. Ids that differ from run to run (expression ``#N`` ids,
-RDD ids, ``plan_id``) are replaced by ``N``, so dumps of two checkouts
+rounds commit. Ids that differ from run to run are replaced by ``N``
+(``operators.scale.normalize_plan``), so dumps of two checkouts
 ``diff`` clean unless their plans differ.
 
 Usage: python tools/dump_plans.py <out_dir> <suffix> q1,q2,... [sf_dir]
@@ -12,17 +12,9 @@ Writes <out_dir>/<query>_<suffix>.txt per query.
 from __future__ import annotations
 
 import os
-import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-
-
-RUN_IDS = re.compile(r"(#|RDD\[|plan_id=)\d+")
-
-
-def normalize(plan: str) -> str:
-    return RUN_IDS.sub(r"\1N", plan)
 
 
 def main() -> int:
@@ -37,11 +29,11 @@ def main() -> int:
     from convoy_spark.session import get_spark
 
     spark = get_spark("plan-dump", data_dir=sf_dir)
-    from convoy_spark.operators.scale import explain_str
+    from convoy_spark.operators.scale import explain_str, normalize_plan
     from convoy_spark.queries import QUERIES
 
     for name in names:
-        plan = normalize(explain_str(QUERIES[name](spark, sf_dir)))
+        plan = normalize_plan(explain_str(QUERIES[name](spark, sf_dir)))
         path = os.path.join(out_dir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
             fh.write(plan)

@@ -11,8 +11,6 @@ plan property is missing, so it can run as a gate.
 
 from __future__ import annotations
 
-import contextlib
-import io
 import os
 import sys
 
@@ -399,6 +397,7 @@ EXPECTATIONS = {
 
 def main() -> int:
     spark = get_spark("explain-audit", cpus=8)
+    from convoy_spark.operators.scale import explain_str, normalize_plan
     from convoy_spark.queries import QUERIES
 
     # Queries that serve a per-session materialized shared frame
@@ -474,11 +473,7 @@ def main() -> int:
     failures: list[str] = []
     sections: list[str] = []
     for name, musts in EXPECTATIONS.items():
-        df = OVERRIDES.get(name, QUERIES[name])(spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        plan = buf.getvalue()
+        plan = normalize_plan(explain_str(OVERRIDES.get(name, QUERIES[name])(spark, SF_DIR)))
         checks = []
         for m in musts:
             ok = m in plan

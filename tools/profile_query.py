@@ -10,6 +10,11 @@ and, per stage, the wall duration, task count, summed task time, and
 the dominant metric split (executor compute / shuffle fetch / GC /
 scheduler+overhead) — the §7.1 "where is the time going" readout the
 disabled UI would otherwise provide.
+
+A first line gives the JVM layer: the session start seconds, the
+class-data-sharing state of the driver JVM (``shared``, ``dumping``
+or ``off``, from its input arguments), and, over the JVM's life so
+far, the classes loaded and the JIT's compilation seconds.
 """
 
 from __future__ import annotations
@@ -22,6 +27,25 @@ import time
 import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def jvm_line(spark, start_s: float) -> str:
+    """The JVM layer: session start seconds, CDS state, and classes
+    loaded and JIT compile seconds from the management beans (py4j)."""
+    mf = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = list(mf.getRuntimeMXBean().getInputArguments())
+    cds = "off"
+    for flag, state in (("-XX:SharedArchiveFile=", "shared"), ("-XX:ArchiveClassesAtExit=", "dumping")):
+        if any(a.startswith(flag) for a in args):
+            cds = state
+    jit = mf.getCompilationMXBean()
+    jit_s = (
+        f"{jit.getTotalCompilationTime() / 1000.0:.2f}s"
+        if jit is not None and jit.isCompilationTimeMonitoringSupported()
+        else "n/a"
+    )
+    classes = mf.getClassLoadingMXBean().getTotalLoadedClassCount()
+    return f"jvm: start_s={start_s:.2f} cds={cds} classes_loaded={classes} jit_compile_s={jit_s}"
 
 
 def main() -> int:
@@ -47,7 +71,9 @@ def main() -> int:
     )
     from convoy_spark.session import get_spark
 
+    t = time.perf_counter()
     spark = get_spark("convoy-spark-profile", data_dir=sf_dir)
+    start_s = time.perf_counter() - t
     from convoy_spark.queries import QUERIES
 
     spark.range(1000).selectExpr("sum(id)").collect()
@@ -66,8 +92,10 @@ def main() -> int:
     t1 = time.time() * 1000
     spark.sparkContext.setJobDescription(None)
     app_id = spark.sparkContext.applicationId
+    jvm = jvm_line(spark, start_s)
     spark.stop()
 
+    print(jvm)
     print(f"{name}: wall={['%.2f' % w for w in wall]}")
     # Spark 4 rolling layout: eventlog_v2_<appId>/events_*; fall back
     # to the classic single file.
