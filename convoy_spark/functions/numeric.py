@@ -25,9 +25,9 @@ verifiable against an independent engine, and (b) the difference
 between a reproducible and an unreproducible pipeline at 100 TB —
 the silent-wrongness class (long overflow, run-to-run float drift)
 this engine refuses. Deployments that explicitly prefer speed over
-bit-reproducibility can flip ``CONVOY_EXACT_AGG=0`` (or pass
-``exact=False`` per call) to get plain double sums — the two profiles
-are cross-checked within float tolerance in
+bit-reproducibility can set ``CONVOY_EXACT_AGG=0`` (or assign
+``numeric.EXACT_DEFAULT = False`` before building a plan) to get plain
+double sums — the two profiles are cross-checked within float tolerance in
 ``tests/test_numeric_profiles.py``, so the fast path is tested, not a
 footgun. Oracle SQL fragments intentionally have no fast profile: the
 oracle's entire job is exact comparison.
@@ -55,22 +55,18 @@ DEC_MERGED = "decimal(28,6)"
 EXACT_DEFAULT = os.environ.get("CONVOY_EXACT_AGG", "1") != "0"
 
 
-def dsum(col: Column, exact: bool | None = None) -> Column:
-    """Order-insensitive double sum (decimal-exact by default;
-    ``exact=False`` → plain double accumulation, the fast profile)."""
-    if exact is None:
-        exact = EXACT_DEFAULT
-    if not exact:
+def dsum(col: Column) -> Column:
+    """Order-insensitive double sum (decimal-exact by default; plain
+    double accumulation under the fast profile)."""
+    if not EXACT_DEFAULT:
         return F.sum(col.cast("double"))
     return F.sum(col.cast(DEC)).cast("double")
 
 
-def davg(col: Column, exact: bool | None = None) -> Column:
+def davg(col: Column) -> Column:
     """Order-insensitive double mean: decimal sum / count (or plain
     double mean under the fast profile)."""
-    if exact is None:
-        exact = EXACT_DEFAULT
-    if not exact:
+    if not EXACT_DEFAULT:
         return F.sum(col.cast("double")) / F.count(col)
     return F.sum(col.cast(DEC)).cast("double") / F.count(col)
 

@@ -294,7 +294,6 @@ def decision_forest_train(
     feats: DataFrame,
     n_trees: int = FOREST_TREES,
     depth: int = TREE_DEPTH,
-    feats_per_split: int | None = FOREST_FEATS_PER_SPLIT,
 ) -> DataFrame:
     """(tree, depth, node_id, ...) — a random forest trained as ONE
     keyed dataflow: the docs frame crossJoins the tree-id range,
@@ -303,7 +302,7 @@ def decision_forest_train(
     own deterministic ~2/3 bootstrap; EVAL rows replicate to every
     tree — each tree's held-out routing is reported per tree), and
     each (tree, node) split search sees only its hash-ranked
-    ``feats_per_split`` features. Tree count widens the keyed
+    ``FOREST_FEATS_PER_SPLIT`` features. Tree count widens the keyed
     aggregates; plan depth stays the single tree's."""
     trees = feats.sparkSession.range(n_trees).select(
         F.col("id").alias("tree")
@@ -324,7 +323,7 @@ def decision_forest_train(
         )
         .localCheckpoint()
     )
-    return _grow(docs, depth, feats_per_split)
+    return _grow(docs, depth, FOREST_FEATS_PER_SPLIT)
 
 
 def coarsen_features(feats: DataFrame, shift: int) -> DataFrame:
@@ -349,13 +348,12 @@ ISO_PICK_SALT = "iso-pick-v1"
 ISO_CUT_SALT = "iso-cut-v1"
 
 
-def isolation_scores(feats: DataFrame, n_trees: int = ISO_TREES,
-                     depth: int = ISO_DEPTH) -> DataFrame:
+def isolation_scores(feats: DataFrame) -> DataFrame:
     """(doc_id, sum_leaf_n, mean_leaf_n) — isolation-forest-style
     multivariate outlier score (Liu et al., ICDM 2008, derandomized
-    the repo's way): ``n_trees`` random binary trees, each level
+    the repo's way): ``ISO_TREES`` random binary trees, each level
     picking a salted-hash feature and a salted-hash cut point inside
-    the node's [min, max], grown for ``depth`` levels as ONE keyed
+    the node's [min, max], grown for ``ISO_DEPTH`` levels as ONE keyed
     dataflow (tree in every key, the forest pattern). The score is
     the SIZE of each point's final leaf summed over trees — the
     integer-exact stand-in for the paper's expected path length
@@ -364,15 +362,15 @@ def isolation_scores(feats: DataFrame, n_trees: int = ISO_TREES,
     normalization is a transcendental and is deliberately dropped —
     the model_quality no-sigmoid discipline — since ranking, the
     consumer of the score, is invariant to it at fixed depth).
-    Outliers = smallest sum_leaf_n. mean_leaf_n = sum / n_trees is
-    exact for power-of-two n_trees.
+    Outliers = smallest sum_leaf_n. mean_leaf_n = sum / ISO_TREES is
+    exact for power-of-two ISO_TREES.
 
     Scale, per level: one keyed min/max aggregate over the chosen
     feature values and a broadcast of the ≤ trees·2^depth cut rows —
     the corpus never shuffles except those keyed aggs. A node whose
     chosen feature is constant (vmax = vmin) stays unsplit — its
     rows ride to the bottom as one (large, inlier-scored) leaf."""
-    trees = feats.sparkSession.range(n_trees).select(
+    trees = feats.sparkSession.range(ISO_TREES).select(
         F.col("id").alias("tree")
     )
     docs = (
@@ -381,7 +379,7 @@ def isolation_scores(feats: DataFrame, n_trees: int = ISO_TREES,
         .select("tree", "doc_id", "fmap", F.lit(0).cast("long").alias("node"))
         .localCheckpoint()
     )
-    for _d in range(depth):
+    for _d in range(ISO_DEPTH):
         fv = docs.select(
             "tree", "node", "doc_id", F.explode("fmap").alias("f", "v")
         )
@@ -447,7 +445,7 @@ def isolation_scores(feats: DataFrame, n_trees: int = ISO_TREES,
         .select(
             "doc_id",
             "sum_leaf_n",
-            (F.col("sum_leaf_n").cast("double") / F.lit(float(n_trees)))
+            (F.col("sum_leaf_n").cast("double") / F.lit(float(ISO_TREES)))
             .alias("mean_leaf_n"),
         )
     )

@@ -34,10 +34,15 @@ from pyspark.sql import functions as F
 
 log = logging.getLogger(__name__)
 
+# Bound on closure_roots' doubling iterations: 50 covers depth 2^50; on
+# a true forest the loop always exits long before this.
+CLOSURE_MAX_ITERATIONS = 50
+# Bound on connected_components' min-label rounds.
+COMPONENTS_MAX_ITERATIONS = 30
+
 
 def closure_roots(
     edges: DataFrame,
-    max_iterations: int = 50,
     on_cycle: str = "resolve",
 ) -> DataFrame:
     """Resolve every node of a forest to its root.
@@ -51,9 +56,6 @@ def closure_roots(
         would make this a DAG — the reference's data model guarantees
         a forest, and the first parent wins there via INSERT IGNORE;
         callers must pre-dedup.)
-    max_iterations:
-        Bound on doubling iterations — 50 covers depth 2^50; on a
-        true forest the loop always exits long before this.
     on_cycle:
         Directed cycles (possible in real data via mutual quote
         edges, despite the reference's forest assumption) make pure
@@ -147,7 +149,7 @@ def closure_roots(
         .localCheckpoint(eager=False)
     )
 
-    for i in range(max_iterations):
+    for i in range(CLOSURE_MAX_ITERATIONS):
         # Lazy checkpoint + immediate aggregate: the aggregate job
         # materializes the checkpoint, so each iteration costs ONE
         # Spark job instead of two (eager checkpoint job + count job)
@@ -215,9 +217,9 @@ def closure_roots(
             break
     else:
         raise RuntimeError(
-            f"closure did not converge in {max_iterations} iterations — "
+            f"closure did not converge in {CLOSURE_MAX_ITERATIONS} iterations — "
             "forest depth plus max cycle length exceeds "
-            f"2^{max_iterations}; raise max_iterations"
+            f"2^{CLOSURE_MAX_ITERATIONS}; raise max_iterations"
         )
 
     if on_cycle != "resolve":
@@ -239,7 +241,6 @@ def closure_roots(
 def incremental_closure_update(
     closure_map: DataFrame,
     new_edges: DataFrame,
-    max_iterations: int = 50,
 ) -> DataFrame:
     """Fold a batch of new ``(child_id, parent_id)`` edges into an
     existing ``(node_id, root_id)`` map WITHOUT re-running the full
@@ -289,7 +290,7 @@ def incremental_closure_update(
             F.col("root_id").alias("parent_id"),
         )
     )
-    resolved = closure_roots(fresh.unionByName(portals), max_iterations)
+    resolved = closure_roots(fresh.unionByName(portals))
     new_rows = resolved.join(
         closure_map.select("node_id"), "node_id", "left_anti"
     )
@@ -306,7 +307,7 @@ def incremental_closure_update(
     return healed.unionByName(new_rows)
 
 
-def connected_components(pairs: DataFrame, max_iterations: int = 30) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """(node_id, component_id) over an UNDIRECTED (doc_a, doc_b) pair list;
     ``component_id`` = the minimum node id in the component —
     deterministic under any partitioning.
@@ -338,7 +339,7 @@ def connected_components(pairs: DataFrame, max_iterations: int = 30) -> DataFram
         .select("node_id", F.col("node_id").alias("label"))
         .localCheckpoint()
     )
-    for i in range(max_iterations):
+    for i in range(COMPONENTS_MAX_ITERATIONS):
         nbr_min = (
             sym.join(labels, sym.dst == labels.node_id)
             .groupBy("src")
@@ -377,7 +378,7 @@ def connected_components(pairs: DataFrame, max_iterations: int = 30) -> DataFram
             break
     else:
         raise RuntimeError(
-            f"components did not converge in {max_iterations} rounds"
+            f"components did not converge in {COMPONENTS_MAX_ITERATIONS} rounds"
         )
     return labels.select("node_id", F.col("label").alias("component_id"))
 

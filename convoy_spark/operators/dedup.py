@@ -50,6 +50,7 @@ from convoy_spark.functions.hashing import (
 # shared verbatim with every DuckDB oracle (see hashing.WS_SPLIT).
 TOKEN_SPLIT = WS_SPLIT
 NUM_HASHES = 16
+SHINGLE_N = 3  # word n-gram length of the near-dup shingles
 LSH_BANDS = 4
 LSH_ROWS = 4
 SIMHASH_BITS = 60
@@ -70,7 +71,7 @@ def doc_tokens(docs: DataFrame) -> DataFrame:
     ).filter(F.col("token") != "")
 
 
-def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
+def doc_shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, shingle) — distinct word n-grams. Built with array
     built-ins (transform/sequence/slice/array_join): whole-stage
     codegen, no Python in the loop, zero shuffle before the distinct.
@@ -101,29 +102,19 @@ def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
     )
 
 
-def shingle_hashes(docs: DataFrame, n: int = 3) -> DataFrame:
+def shingle_hashes(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
     """(doc_id, h) — 60-bit hash per distinct shingle."""
     return doc_shingles(docs, n).select(
         "doc_id", hash60(F.col("shingle")).alias("h")
     )
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    min_jaccard: float,
-    n: int = 3,
-    max_shingle_freq: int | None = None,
-) -> DataFrame:
+def jaccard_pairs(docs: DataFrame, min_jaccard: float) -> DataFrame:
     """Exact n-gram Jaccard near-dup pairs: (doc_a, doc_b, jaccard).
 
     Shingle-set self-join: |A∩B| by counting shared shingles, sizes
-    from a per-doc aggregate, J = ∩ / (|A|+|B|−∩). ``max_shingle_freq``
-    drops shingles appearing in more docs than the cap before the join
-    (exactness trade-off documented at the call site)."""
-    sh = shingle_hashes(docs, n)
-    if max_shingle_freq is not None:
-        freq = sh.groupBy("h").count().filter(F.col("count") <= max_shingle_freq)
-        sh = sh.join(freq.select("h"), "h", "left_semi")
+    from a per-doc aggregate, J = ∩ / (|A|+|B|−∩)."""
+    sh = shingle_hashes(docs)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n_sh"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "h")
     b = sh.select(F.col("doc_id").alias("doc_b"), "h")
@@ -155,9 +146,7 @@ SETSIM_NUM = 4
 SETSIM_DEN = 5
 
 
-def setsim_prefix_join(
-    docs: DataFrame, n: int = 3, checkpoint: bool = True
-) -> DataFrame:
+def setsim_prefix_join(docs: DataFrame, checkpoint: bool = True) -> DataFrame:
     """Exact set-similarity self-join via prefix filtering (the
     All-Pairs/PPJoin candidate scheme of Bayardo et al. / Xiao et al.;
     the MapReduce formulation is Vernica et al., SIGMOD'10): all doc
@@ -199,7 +188,7 @@ def setsim_prefix_join(
         if checkpoint
         else (lambda d: d)
     )
-    sh = ckpt(shingle_hashes(docs, n))
+    sh = ckpt(shingle_hashes(docs))
     df_tab = sh.groupBy("h").agg(F.count("*").alias("df"))
     sets = ckpt(
         sh.join(df_tab, "h")
@@ -271,9 +260,7 @@ def setsim_prefix_join(
     )
 
 
-def minhash_signatures(
-    docs: DataFrame, num_hashes: int = NUM_HASHES, n: int = 3
-) -> DataFrame:
+def minhash_signatures(docs: DataFrame) -> DataFrame:
     """(doc_id, i, v) — MinHash signature in long format: v =
     min over shingles of the i-th permuted hash.
 
@@ -283,31 +270,28 @@ def minhash_signatures(
     ``stack`` reshapes 1 row × 16 cols into 16 rows. The naive
     params-cross-join formulation multiplies the shingle table 16×
     through the shuffle — measurably 10× slower at sf0.1."""
-    wide = minhash_signatures_wide(docs, num_hashes, n)
-    stack_expr = ", ".join(f"{i}, mh{i}" for i in range(num_hashes))
+    wide = minhash_signatures_wide(docs)
+    stack_expr = ", ".join(f"{i}, mh{i}" for i in range(NUM_HASHES))
     return wide.selectExpr(
         "doc_id",
-        f"stack({num_hashes}, {stack_expr}) AS (i, v)",
+        f"stack({NUM_HASHES}, {stack_expr}) AS (i, v)",
     )
 
 
 def minhash_signatures_wide(
-    docs: DataFrame | None = None,
-    num_hashes: int = NUM_HASHES,
-    n: int = 3,
-    sh: DataFrame | None = None,
+    docs: DataFrame | None = None, sh: DataFrame | None = None
 ) -> DataFrame:
     """(doc_id, mh0..mh{H-1}) — one row per doc, one min-agg
     expression per permutation; single shuffle, zero expansion.
     Pass ``sh`` to reuse an already-computed (cached) shingle-hash
     frame."""
     if sh is None:
-        sh = shingle_hashes(docs, n)
+        sh = shingle_hashes(docs)
     aggs = [
         F.min(
             perm_hash(F.col("h"), F.lit(a), F.lit(b))
         ).alias(f"mh{i}")
-        for i, a, b in minhash_params(num_hashes)
+        for i, a, b in minhash_params(NUM_HASHES)
     ]
     return sh.groupBy("doc_id").agg(*aggs)
 
@@ -333,16 +317,11 @@ def lsh_band_keys(
     )
 
 
-def lsh_band_keys_wide(
-    wide: DataFrame,
-    num_hashes: int = NUM_HASHES,
-    rows_per_band: int = LSH_ROWS,
-) -> DataFrame:
+def lsh_band_keys_wide(wide: DataFrame) -> DataFrame:
     """(doc_id, band, key) straight from the wide signature — band
     keys are string-concats of in-band columns (identical strings to
     the long-format path), produced by one explode of a per-row
     array: no groupBy at all."""
-    n_bands = num_hashes // rows_per_band
     bands = F.array(
         *[
             F.struct(
@@ -350,12 +329,12 @@ def lsh_band_keys_wide(
                 F.concat_ws(
                     "-",
                     *[
-                        F.col(f"mh{b * rows_per_band + r}")
-                        for r in range(rows_per_band)
+                        F.col(f"mh{b * LSH_ROWS + r}")
+                        for r in range(LSH_ROWS)
                     ],
                 ).alias("key"),
             )
-            for b in range(n_bands)
+            for b in range(NUM_HASHES // LSH_ROWS)
         ]
     )
     return wide.select("doc_id", F.explode(bands).alias("bk")).select(
@@ -383,13 +362,7 @@ def _band_join(bands: DataFrame) -> DataFrame:
     )
 
 
-def minhash_lsh_neardup(
-    docs: DataFrame,
-    min_jaccard: float = 0.8,
-    num_hashes: int = NUM_HASHES,
-    rows_per_band: int = LSH_ROWS,
-    n: int = 3,
-) -> DataFrame:
+def minhash_lsh_neardup(docs: DataFrame, min_jaccard: float = 0.8) -> DataFrame:
     """Sketch-then-verify near-dup: LSH candidates → exact Jaccard
     filter. Only candidate pairs (a vanishing fraction of all pairs)
     pay the verification join.
@@ -402,14 +375,8 @@ def minhash_lsh_neardup(
     the ContextCleaner when the result DataFrame is garbage-collected,
     instead of pinning executor memory in the cache manager for the
     session lifetime (round-1 advisor finding)."""
-    sh = shingle_hashes(docs, n).localCheckpoint(eager=False)
-    cand = _band_join(
-        lsh_band_keys_wide(
-            minhash_signatures_wide(sh=sh, num_hashes=num_hashes),
-            num_hashes,
-            rows_per_band,
-        )
-    )
+    sh = shingle_hashes(docs).localCheckpoint(eager=False)
+    cand = _band_join(lsh_band_keys_wide(minhash_signatures_wide(sh=sh)))
     # Semi-join-prune the verification inputs to CANDIDATE docs (the
     # same pruning streaming/neardup.py applies to its history store):
     # candidates are a vanishing fraction of the corpus, so without
@@ -449,10 +416,7 @@ def minhash_lsh_neardup(
     )
 
 
-def simhash_signature(
-    docs: DataFrame,
-    bits: int = SIMHASH_BITS,
-) -> DataFrame:
+def simhash_signature(docs: DataFrame) -> DataFrame:
     """(doc_id, simhash) — frequency-weighted SimHash over unigram
     tokens: bit j of the fingerprint is the sign of
     Σ_tokens count·(2·bit_j(hash)−1), i.e. bit j is set iff more than
@@ -482,13 +446,13 @@ def simhash_signature(
     Docs with zero tokens produce no rows (explode semantics): an
     empty doc has no fingerprint, rather than 0, which would
     spuriously pair all empty docs at hamming 0."""
-    n_longs = (bits + 1) // 2
+    n_longs = (SIMHASH_BITS + 1) // 2
     packed_sums = []
     for k in range(n_longs):
         fields = []
         for i in range(2):
             j = 2 * k + i
-            if j >= bits:
+            if j >= SIMHASH_BITS:
                 break
             bit = F.shiftright(F.col("h"), j).bitwiseAND(F.lit(1).cast("long"))
             fields.append(F.shiftleft(bit, 30 * i) if i else bit)
@@ -503,7 +467,7 @@ def simhash_signature(
         .agg(F.count("*").alias("n"), *packed_sums)
     )
     fingerprint = None
-    for j in range(bits):
+    for j in range(SIMHASH_BITS):
         k, i = divmod(j, 2)
         c = F.shiftright(F.col(f"p{k}"), 30 * i).bitwiseAND(
             F.lit((1 << 30) - 1).cast("long")
@@ -515,22 +479,18 @@ def simhash_signature(
     return per_doc.select("doc_id", fingerprint.alias("simhash"))
 
 
-def simhash_neardup(
-    docs: DataFrame,
-    max_hamming: int = 3,
-    bits: int = SIMHASH_BITS,
-    blocks: int = SIMHASH_BLOCKS,
-) -> DataFrame:
+def simhash_neardup(docs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """(doc_a, doc_b, hamming) pairs with hamming ≤ ``max_hamming``.
 
-    Pigeonhole blocking: fingerprints are cut into ``blocks`` equal
-    bit-blocks; any pair within ``blocks−1`` hamming distance shares at
-    least one identical block, so candidates come from ``blocks``
-    equi-joins (unioned via an exploded block table) instead of a cross
-    join. Requires ``max_hamming < blocks``."""
-    if max_hamming >= blocks:
+    Pigeonhole blocking: fingerprints are cut into ``SIMHASH_BLOCKS``
+    equal bit-blocks; any pair within ``SIMHASH_BLOCKS−1`` hamming
+    distance shares at least one identical block, so candidates come
+    from ``SIMHASH_BLOCKS`` equi-joins (unioned via an exploded block
+    table) instead of a cross join. Requires
+    ``max_hamming < SIMHASH_BLOCKS``."""
+    if max_hamming >= SIMHASH_BLOCKS:
         raise ValueError("pigeonhole needs max_hamming < blocks")
-    width = bits // blocks
+    width = SIMHASH_BITS // SIMHASH_BLOCKS
     mask = (1 << width) - 1
     # The fingerprint table feeds BOTH sides of the self-join below;
     # without a materialization barrier Spark recomputes the whole
@@ -540,12 +500,12 @@ def simhash_neardup(
     # cached blocks), saving the separate checkpoint job — the same
     # count-as-materializer pattern as the iterative loops (~-0.2 s
     # of fixed overhead at any SF, round-4 measurement).
-    fp = simhash_signature(docs, bits).localCheckpoint(eager=False)
+    fp = simhash_signature(docs).localCheckpoint(eager=False)
     blocked = fp.select(
         "doc_id",
         "simhash",
         F.explode(
-            F.array(*[F.lit(k) for k in range(blocks)])
+            F.array(*[F.lit(k) for k in range(SIMHASH_BLOCKS)])
         ).alias("blk"),
     ).withColumn(
         "blk_val",
@@ -607,9 +567,7 @@ SUBSTR_CAP = 64  # stop-gram cap: grams in more docs are boilerplate
 SUBSTR_MIN_SHARED = 3  # pair threshold: distinct shared sampled grams
 
 
-def sampled_gram_hashes(
-    docs: DataFrame, k: int = SUBSTR_K, sample_mod: int = SUBSTR_MOD
-) -> DataFrame:
+def sampled_gram_hashes(docs: DataFrame) -> DataFrame:
     """(doc_id, gh) — distinct content-sampled Horner char-k-gram
     hashes per doc (stages 1–2 of :func:`substring_dup_pairs`; also
     the per-batch sketch of the streaming form)."""
@@ -621,12 +579,12 @@ def sampled_gram_hashes(
         " i -> cast(ascii(substring(_low, i, 1)) as bigint))"
     )
     hashes = F.expr(
-        f"transform(sequence(1, size(_codes) - {k - 1}),"
-        f" i -> {winnow_gram_hash_sql('_codes', 'i', k)})"
+        f"transform(sequence(1, size(_codes) - {SUBSTR_K - 1}),"
+        f" i -> {winnow_gram_hash_sql('_codes', 'i', SUBSTR_K)})"
     )
-    sampled = F.expr(f"filter(_h, h -> h % {sample_mod} = 0)")
+    sampled = F.expr(f"filter(_h, h -> h % {SUBSTR_MOD} = 0)")
     return (
-        widen_narrow_scan(docs.filter(F.length("text") >= k))
+        widen_narrow_scan(docs.filter(F.length("text") >= SUBSTR_K))
         .select("doc_id", F.lower(F.col("text")).alias("_low"))
         .select("doc_id", F.explode(F.array(codes)).alias("_codes"))
         .select("doc_id", hashes.alias("_h"))
@@ -636,11 +594,7 @@ def sampled_gram_hashes(
 
 
 def substring_dup_pairs(
-    docs: DataFrame,
-    k: int = SUBSTR_K,
-    sample_mod: int = SUBSTR_MOD,
-    cap: int = SUBSTR_CAP,
-    min_shared: int = SUBSTR_MIN_SHARED,
+    docs: DataFrame, min_shared: int = SUBSTR_MIN_SHARED
 ) -> DataFrame:
     """(doc_a, doc_b, n_shared) — pairs of documents sharing at least
     ``min_shared`` distinct sampled exact k-char passages.
@@ -651,26 +605,27 @@ def substring_dup_pairs(
        polynomial (the winnowing machinery, textops.py — one codepoint
        array per doc, k integer ops per position, no md5).
     2. **Content-defined sampling**: keep hashes ≡ 0 (mod
-       ``sample_mod``). Unlike strided sampling, selection depends
+       ``SUBSTR_MOD``). Unlike strided sampling, selection depends
        only on passage CONTENT, so the same passage at different
        offsets in two docs samples the same grams — offset-invariant
        by construction, the property winnowing gets from window-minima
        and suffix arrays get for free.
     3. Distinct (doc_id, gram) + **stop-gram cap**: grams present in
-       more than ``cap`` docs are boilerplate (headers, licence
+       more than ``SUBSTR_CAP`` docs are boilerplate (headers, licence
        text); dropping them bounds every bucket of the join below
-       ``cap`` — the same skew guard as the LSH band join, making the
-       worst-case join cost cap²·|grams| instead of |corpus|².
+       ``SUBSTR_CAP`` — a skew guard the LSH band join does not have —
+       making the worst-case join cost cap²·|grams| instead of
+       |corpus|².
     4. Equi-join on gram hash, count distinct shared grams per
        ordered pair, threshold.
 
     Expected shared-gram count for an L-char exact overlap is
-    ~L/(sample_mod) k-grams, so ``min_shared=3`` with mod 8 needs
+    ~L/SUBSTR_MOD k-grams, so ``min_shared=3`` with mod 8 needs
     roughly a 24+3·8-char true overlap — tune per corpus.
     """
-    g = sampled_gram_hashes(docs, k, sample_mod)
+    g = sampled_gram_hashes(docs)
     ok = g.groupBy("gh").agg(F.count("*").alias("_n")).filter(
-        F.col("_n") <= cap
+        F.col("_n") <= SUBSTR_CAP
     )
     gg = g.join(ok.select("gh"), "gh", "left_semi")
     a = gg.select(F.col("doc_id").alias("doc_a"), "gh")
@@ -819,9 +774,7 @@ SNM_WINDOW = 4  # sorted-neighborhood window (rank distance < SNM_WINDOW)
 
 
 def sorted_neighborhood_pairs(
-    names: DataFrame,
-    window: int = SNM_WINDOW,
-    checkpoint: bool = True,
+    names: DataFrame, checkpoint: bool = True
 ) -> DataFrame:
     """(name_a, name_b, dist): Levenshtein ≤ 1 pairs found by
     multi-pass sorted-neighborhood blocking (Hernández & Stolfo,
@@ -862,7 +815,7 @@ def sorted_neighborhood_pairs(
         probe = ranked.select(
             F.col("n").alias("_na"),
             F.explode(
-                F.expr(f"sequence(1, {window - 1})")
+                F.expr(f"sequence(1, {SNM_WINDOW - 1})")
             ).alias("_d"),
             (F.col("r") + F.col("_d")).alias("r"),
         )

@@ -279,7 +279,7 @@ def triangle_counts(edges_undirected: DataFrame) -> DataFrame:
 LPA_ITERS = 3
 
 
-def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
+def label_propagation(edges: DataFrame) -> DataFrame:
     """(id, label) — synchronous label propagation (Raghavan, Albert &
     Kumara 2007), derandomized the repo's way: labels start as node
     ids, and each SYNCHRONOUS round every node adopts the most common
@@ -328,7 +328,7 @@ def label_propagation(edges: DataFrame, iters: int = LPA_ITERS) -> DataFrame:
     # ITERATE_BROADCAST_MAX_NODES
     n_nodes = nodes.count()
     labels = nodes.select("id", F.col("id").alias("lab"))
-    for _ in range(iters):
+    for _ in range(LPA_ITERS):
         cnt = (
             edges.join(
                 _maybe_broadcast(

@@ -311,16 +311,17 @@ def mixture_rates(
     )
 
 
-def mixture_decide(
-    docs: DataFrame, rates: DataFrame, salt: str = "mix0"
-) -> DataFrame:
+MIX_SALT = "mix0"
+
+
+def mixture_decide(docs: DataFrame, rates: DataFrame) -> DataFrame:
     """(doc_id, domain, accept_rate, sampled) — apply per-domain
     acceptance rates to ``(doc_id, domain)`` rows via the
     deterministic salted-hash threshold (map-side: rates broadcast,
     nothing about the corpus shuffles)."""
     thresh = F.floor(F.col("accept_rate") * F.lit(1_000_000.0)).cast("long")
     bucket = F.pmod(
-        hash60(F.concat(F.lit(salt + ":"), F.col("doc_id").cast("string"))),
+        hash60(F.concat(F.lit(MIX_SALT + ":"), F.col("doc_id").cast("string"))),
         F.lit(1_000_000),
     )
     return docs.join(F.broadcast(rates), "domain").select(
@@ -331,11 +332,7 @@ def mixture_decide(
     )
 
 
-def mixture_sample(
-    docs: DataFrame,
-    targets: dict[str, float],
-    salt: str = "mix0",
-) -> DataFrame:
+def mixture_sample(docs: DataFrame, targets: dict[str, float]) -> DataFrame:
     """(doc_id, domain, accept_rate, sampled) — sample the corpus to a
     TARGET domain mixture (the data-mixture step of every pretraining
     recipe): given target weights w_d, the largest achievable sample
@@ -343,13 +340,13 @@ def mixture_sample(
     ``C = min_d(n_d / w_d)`` total rows, i.e. per-domain acceptance
     rate ``r_d = w_d * C / n_d`` (the binding domain samples at rate
     1.0). Acceptance is the deterministic salted-hash threshold
-    ``hash60(salt:doc_id) % 10^6 < r_d * 10^6`` — reproducible,
+    ``hash60(MIX_SALT:doc_id) % 10^6 < r_d * 10^6`` — reproducible,
     engine-independent, and exactly the split/sample machinery the
     dedup family already proves. Domains absent from ``targets`` get
     rate 0. Counts ride one keyed aggregation; rates broadcast."""
     base = docs.select("doc_id", F.col("source").alias("domain"))
     counts = base.groupBy("domain").agg(F.count("*").alias("n_d"))
-    return mixture_decide(base, mixture_rates(counts, targets), salt)
+    return mixture_decide(base, mixture_rates(counts, targets))
 
 
 def mixture_rates_feedback(

@@ -62,6 +62,7 @@ from pyspark.sql import functions as F
 from convoy_spark.operators.similarity import exploded_vectors
 
 PCA_ITERATIONS = 4
+PCA_PROJECT_ITERATIONS = 2
 PSCALE = 1 << 40
 
 
@@ -302,7 +303,7 @@ def pca_project_topk(
 
 def pca_project(
     vectors: DataFrame,
-    n_iterations: int = 2,
+    n_iterations: int = PCA_PROJECT_ITERATIONS,
 ) -> DataFrame:
     """(vec_id, score, whitened) — every vector's projection onto the
     ``n_iterations``-step top-component iterate, and the

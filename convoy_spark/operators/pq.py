@@ -106,11 +106,7 @@ def _sub_exploded(
     )
 
 
-def balanced_dim_map(
-    corpus: DataFrame,
-    n_sub: int | None = None,
-    ex: DataFrame | None = None,
-) -> DataFrame:
+def balanced_dim_map(corpus: DataFrame, ex: DataFrame | None = None) -> DataFrame:
     """(d, sub, dsub) — variance-balanced dimension permutation, the
     non-parametric OPQ initialization (Ge et al., OPQ CVPR'13 §4's
     balance goal; FAISS's pre-rotation heuristic): rank dimensions by
@@ -131,7 +127,6 @@ def balanced_dim_map(
     the result is a dim-count-sized frame (broadcast by every
     consumer). Pass ``ex`` — an already-materialized (vec_id, d, x)
     frame — to skip the corpus explode (shared-frame amortization)."""
-    n_sub = n_sub or PQ_SUB
     if ex is None:
         ex = exploded_vectors(corpus)
     stats = ex.groupBy("d").agg(
@@ -152,8 +147,8 @@ def balanced_dim_map(
         "d", (F.row_number().over(w) - 1).alias("rk")
     ).select(
         "d",
-        (F.col("rk") % n_sub).cast("int").alias("sub"),
-        F.expr(f"rk div {n_sub}").cast("int").alias("dsub"),
+        (F.col("rk") % PQ_SUB).cast("int").alias("sub"),
+        F.expr(f"rk div {PQ_SUB}").cast("int").alias("dsub"),
     )
 
 
@@ -170,11 +165,11 @@ def balanced_dim_map(
 PQ_WIDE_MIN_ROWS = 40_000
 
 
-def _assign(
-    ex: DataFrame, cent: DataFrame, ks: int = PQ_KS, wide: bool = False
-) -> DataFrame:
-    """(vec_id, sub, code) — per-subspace nearest-centroid argmin with
-    the deterministic (dist, cell) tiebreak.
+def _nearest(ex: DataFrame, cent: DataFrame, ks: int, wide: bool) -> DataFrame:
+    """(vec_id, sub, dd, cell) — per-subspace nearest centroid ``cell``
+    and its distance ``dd``, with the deterministic (dd, cell)
+    tiebreak: the one distance computation behind :func:`_assign` (which
+    keeps ``cell``) and :func:`quant_error` (which sums ``dd``).
 
     Distances are floor-scaled LONG sums (similarity.SCORE_SCALE —
     each (x−m)² is one deterministic double op, scaling and floor are
@@ -206,11 +201,10 @@ def _assign(
                 ).alias("dd")
             )
         )
-        return dist.groupBy("vec_id", "sub").agg(
-            F.min(F.struct(F.col("dd"), F.col("cell")))
-            .getField("cell")
-            .alias("code")
+        best = dist.groupBy("vec_id", "sub").agg(
+            F.min(F.struct(F.col("dd"), F.col("cell"))).alias("_best")
         )
+        return best.select("vec_id", "sub", "_best.dd", "_best.cell")
     cw = F.broadcast(
         cent.groupBy("sub", "dsub")
         .pivot("cell", list(range(ks)))
@@ -238,8 +232,17 @@ def _assign(
         )
         for c in range(ks)
     ]
-    return dd.select(
-        "vec_id", "sub", F.least(*cands).getField("cell").alias("code")
+    best = dd.select("vec_id", "sub", F.least(*cands).alias("_best"))
+    return best.select("vec_id", "sub", "_best.dd", "_best.cell")
+
+
+def _assign(
+    ex: DataFrame, cent: DataFrame, ks: int = PQ_KS, wide: bool = False
+) -> DataFrame:
+    """(vec_id, sub, code) — per-subspace nearest-centroid argmin with
+    the deterministic (dist, cell) tiebreak (:func:`_nearest`)."""
+    return _nearest(ex, cent, ks, wide).select(
+        "vec_id", "sub", F.col("cell").alias("code")
     )
 
 
@@ -763,14 +766,7 @@ def exact_l2_topk(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFram
     )
 
 
-def write_pq_index(
-    corpus: DataFrame,
-    base_path: str,
-    n_cells: int = 16,
-    n_sub: int = PQ_SUB,
-    ks: int = PQ_KS,
-    iters: int = PQ_ITERS,
-) -> None:
+def write_pq_index(corpus: DataFrame, base_path: str) -> None:
     """Build and persist the full IVF-PQ index: PQ codebook + bucketed
     code table + coarse centroids + bucketed cell assignment.
     Overwrites any index at ``base_path`` (an index REBUILD — the
@@ -781,8 +777,8 @@ def write_pq_index(
     from convoy_spark.operators.similarity import ivf_index
     from convoy_spark.streaming.util import append_store
 
-    codebook, codes, _ = pq_codebooks(corpus, n_sub, ks, iters)
-    centroids, assignment = ivf_index(corpus, n_cells=n_cells)
+    codebook, codes, _ = pq_codebooks(corpus)
+    centroids, assignment = ivf_index(corpus)
     for sub in ("codes", "assignment"):
         p = os.path.join(base_path, sub)
         if os.path.isdir(p):
@@ -870,10 +866,6 @@ def opq_rotation_train(
     corpus: DataFrame,
     n_queries: int = 16,
     k: int = 5,
-    n_iters: int = OPQ_ITERS,
-    n_sub: int = PQ_SUB,
-    ks: int = PQ_KS,
-    lloyd_iters: int = PQ_ITERS,
 ) -> DataFrame:
     """Learned OPQ rotation, non-parametric alternation (Ge et al.,
     "Optimized Product Quantization", CVPR 2013 §4): starting from the
@@ -908,7 +900,7 @@ def opq_rotation_train(
 
     spark = corpus.sparkSession
     dim = _infer_dim(corpus)
-    ds = dim // n_sub
+    ds = dim // PQ_SUB
     raw = exploded_vectors(corpus).localCheckpoint(eager=False)
     adc_batched = corpus.count() >= PQ_WIDE_MIN_ROWS
     truth = exact_l2_topk(
@@ -917,7 +909,7 @@ def opq_rotation_train(
     denom = float(n_queries * k)
 
     # R0 = the balanced permutation as a matrix: slot(d) = sub·ds + dsub
-    dm = balanced_dim_map(corpus, n_sub, ex=raw)
+    dm = balanced_dim_map(corpus, ex=raw)
     rot = dm.select(
         (F.col("sub") * ds + F.col("dsub")).cast("int").alias("do"),
         F.col("d").cast("int").alias("di"),
@@ -946,9 +938,9 @@ def opq_rotation_train(
         return g.select(*gb, val.alias(alias))
 
     rows = []
-    for it in range(n_iters + 1):
+    for it in range(OPQ_ITERS + 1):
         xr = _rotate(raw, rot).localCheckpoint(eager=False)
-        cent, codes, _ = pq_codebooks(corpus, n_sub, ks, lloyd_iters, raw_ex=xr)
+        cent, codes, _ = pq_codebooks(corpus, raw_ex=xr)
         # decode: ŷ[d] = codebook centroid component of the assigned cell
         yhat = codes.join(
             F.broadcast(cent), (codes["sub"] == cent["sub"]) & (codes["code"] == cent["cell"])
@@ -977,12 +969,12 @@ def opq_rotation_train(
         )
         dtab = adc_table(q_exr, cent)
         hits = (
-            _topk_by_adist(_adc_scored(codes, dtab, n_sub, adc_batched), k)
+            _topk_by_adist(_adc_scored(codes, dtab, batched=adc_batched), k)
             .join(truth, ["query_id", "corpus_id"], "left_semi")
             .count()
         )
         rows.append((it, float(qerr), hits / denom))
-        if it == n_iters:
+        if it == OPQ_ITERS:
             break
         # Procrustes update: M = Σ ŷ·xᵀ (dy, dx), R_new = U·Vᵀ
         m_rows = _gsum(
@@ -1032,57 +1024,10 @@ def quant_error(
     the n_sub-bounded sum are exact, so the per-vector err is
     bit-identical across engines, physical shapes, and any chunking
     of the corpus — which is what makes the per-epoch error
-    aggregates mergeable (the streaming twin's whole contract).
-
-    Both physical shapes of ``_assign`` are mirrored (identical longs
-    either way): row-shaped ×ks fan-out for small corpora, the
-    pivoted-codebook wide shape above PQ_WIDE_MIN_ROWS."""
-    if not wide:
-        dist = (
-            ex.join(F.broadcast(cent), ["sub", "dsub"])
-            .groupBy("vec_id", "sub", "cell")
-            .agg(
-                F.sum(
-                    F.floor(
-                        ((F.col("x") - F.col("m")) * (F.col("x") - F.col("m")))
-                        * F.lit(SCORE_SCALE)
-                    )
-                ).alias("dd")
-            )
-        )
-        per_sub = dist.groupBy("vec_id", "sub").agg(F.min("dd").alias("mdd"))
-    else:
-        cw = F.broadcast(
-            cent.groupBy("sub", "dsub")
-            .pivot("cell", list(range(ks)))
-            .agg(F.first("m"))
-            .select(
-                "sub",
-                "dsub",
-                *[F.col(str(c)).alias(f"m{c}") for c in range(ks)],
-            )
-        )
-        dd = ex.join(cw, ["sub", "dsub"]).groupBy("vec_id", "sub").agg(
-            *[
-                F.sum(
-                    F.floor(
-                        (
-                            (F.col("x") - F.col(f"m{c}"))
-                            * (F.col("x") - F.col(f"m{c}"))
-                        )
-                        * F.lit(SCORE_SCALE)
-                    )
-                ).alias(f"dd{c}")
-                for c in range(ks)
-            ]
-        )
-        sentinel = F.lit(1 << 62).cast("long")
-        per_sub = dd.select(
-            "vec_id",
-            "sub",
-            F.least(
-                *[F.coalesce(F.col(f"dd{c}"), sentinel) for c in range(ks)]
-            ).alias("mdd"),
-        )
+    aggregates mergeable (the streaming twin's whole contract)."""
     # n_sub-bounded sum of longs: exact, no population-sized envelope
-    return per_sub.groupBy("vec_id").agg(F.sum("mdd").alias("err"))
+    return (
+        _nearest(ex, cent, ks, wide)
+        .groupBy("vec_id")
+        .agg(F.sum("dd").alias("err"))
+    )

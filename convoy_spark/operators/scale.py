@@ -8,7 +8,7 @@ when a 100 TB join/groupBy key misbehaves.
   exchange entirely. The warehouse's answer to the reference's
   clustered/covering indexes (`1_initial_load.py:184-185`) — pay the
   shuffle once, amortize it over every downstream query.
-- **Salting** splits a skewed key across ``n_salts`` sub-keys for a
+- **Salting** splits a skewed key across ``N_SALTS`` sub-keys for a
   partial aggregate, then merges the partials — two small shuffles
   instead of one stuck straggler task. AQE's skew-join handling
   covers joins automatically; salting is for the aggregation side,
@@ -23,7 +23,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def widen_narrow_scan(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def widen_narrow_scan(df: DataFrame) -> DataFrame:
     """Round-robin repartition a DataFrame whose scan produces fewer
     partitions than the cluster has slots — and a no-op otherwise.
 
@@ -39,8 +39,7 @@ def widen_narrow_scan(df: DataFrame, min_partitions: int | None = None) -> DataF
     trades one tiny-table shuffle for full parallelism on the
     compute-bound stage that follows.
     """
-    spark = df.sparkSession
-    n = min_partitions or spark.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= n:
         return df
     return df.repartition(n)
@@ -66,20 +65,18 @@ def write_bucketed(
     w.saveAsTable(table)
 
 
-def salted_agg(
-    df: DataFrame,
-    key: str,
-    aggs: list[tuple[str, str]],
-    n_salts: int = 16,
-) -> DataFrame:
+N_SALTS = 16
+
+
+def salted_agg(df: DataFrame, key: str, aggs: list[tuple[str, str]]) -> DataFrame:
     """Two-phase salted aggregation: ``aggs`` is a list of
     (col, 'sum'|'count') specs — the decomposable aggregates, which
     are the only ones salting can merge exactly.
 
     Phase 1 groups on (key, salt) — the giant key's rows spread over
-    ``n_salts`` tasks; phase 2 merges the per-salt partials on the key
-    alone, now at most ``n_salts`` rows per key."""
-    salt = (F.rand(seed=42) * n_salts).cast("int").alias("_salt")
+    ``N_SALTS`` tasks; phase 2 merges the per-salt partials on the key
+    alone, now at most ``N_SALTS`` rows per key."""
+    salt = (F.rand(seed=42) * N_SALTS).cast("int").alias("_salt")
     phase1_aggs = []
     phase2_aggs = []
     for col, kind in aggs:
@@ -131,15 +128,15 @@ def normalize_plan(plan: str) -> str:
 ZORDER_BITS = 16
 
 
-def zorder_key(c1: Column, c2: Column, bits: int = ZORDER_BITS) -> Column:
-    """Morton interleave of the low ``bits`` bits of two non-negative
-    long columns (c1 in even positions, c2 in odd). Pure integer
-    shifts/masks — bit-identical in any engine, hence oracle-exact.
-    Callers range-normalize wider domains first (div to fit
-    ``bits``); 16+16 bits = 4·10^9 cells, plenty for file-level
+def zorder_key(c1: Column, c2: Column) -> Column:
+    """Morton interleave of the low ``ZORDER_BITS`` bits of two
+    non-negative long columns (c1 in even positions, c2 in odd). Pure
+    integer shifts/masks — bit-identical in any engine, hence
+    oracle-exact. Callers range-normalize wider domains first (div to
+    fit ``ZORDER_BITS``); 16+16 bits = 4·10^9 cells, plenty for file-level
     skipping."""
     expr = None
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         even = F.shiftleft(F.shiftright(c1, i).bitwiseAND(F.lit(1)), 2 * i)
         odd = F.shiftleft(
             F.shiftright(c2, i).bitwiseAND(F.lit(1)), 2 * i + 1
@@ -149,11 +146,11 @@ def zorder_key(c1: Column, c2: Column, bits: int = ZORDER_BITS) -> Column:
     return expr
 
 
-def sql_zorder_key(e1: str, e2: str, bits: int = ZORDER_BITS) -> str:
+def sql_zorder_key(e1: str, e2: str) -> str:
     """DuckDB fragment identical to :func:`zorder_key`."""
     # every piece fully parenthesized: DuckDB's << binds LOOSER than +
     pieces = []
-    for i in range(bits):
+    for i in range(ZORDER_BITS):
         pieces.append(f"(((({e1}) >> {i}) & 1) << {2 * i})")
         pieces.append(f"(((({e2}) >> {i}) & 1) << {2 * i + 1})")
     return "(" + " + ".join(pieces) + ")"
@@ -164,7 +161,6 @@ def zorder_bucket_stats(
     c1: str,
     c2: str,
     n_bucket_bits: int = 10,
-    bits: int = ZORDER_BITS,
 ) -> DataFrame:
     """(bucket, n_rows, min/max of both dims): the per-bucket min/max
     envelope a Z-order layout yields — the exact numbers a scan
@@ -173,10 +169,10 @@ def zorder_bucket_stats(
     ``repartitionByRange(zkey)`` write would produce, computed
     deterministically so the whole layout is oracle-checkable. One
     map + one keyed aggregation."""
-    z = zorder_key(F.col(c1), F.col(c2), bits)
+    z = zorder_key(F.col(c1), F.col(c2))
     b = df.select(
         F.col(c1), F.col(c2),
-        F.shiftright(z, 2 * bits - n_bucket_bits).alias("bucket"),
+        F.shiftright(z, 2 * ZORDER_BITS - n_bucket_bits).alias("bucket"),
     )
     return b.groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_rows"),
@@ -191,7 +187,6 @@ def range_rank(
     df: DataFrame,
     key_cols: list[str],
     out_col: str = "rank",
-    num_partitions: int | None = None,
     checkpoint: bool = True,
 ) -> DataFrame:
     """``df`` + ``out_col`` = the 1-based GLOBAL rank of each row in
@@ -210,8 +205,7 @@ def range_rank(
     rank is its position in the total order, independent of where
     the partition cuts land. Non-unique keys get a nondeterministic
     tie order — pass a tiebreaking column in ``key_cols``."""
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
+    n = df.sparkSession.sparkContext.defaultParallelism
     keyed = df.repartitionByRange(n, *[F.col(c) for c in key_cols])
     keyed = keyed.withColumn("_pid", F.expr("spark_partition_id()"))
     # Materialize the range exchange ONCE (round-6 ADVICE #5): the

@@ -175,16 +175,9 @@ def exploded_vectors(vectors: DataFrame) -> DataFrame:
     ).withColumn("x", F.col("x").cast("double"))
 
 
-def srp_signatures(
-    vectors: DataFrame,
-    n_planes: int = N_PLANES,
-    rows_per_band: int = SRP_ROWS,
-) -> DataFrame:
+def srp_signatures(vectors: DataFrame) -> DataFrame:
     return srp_signatures_from_exploded(
-        exploded_vectors(vectors),
-        _infer_dim(vectors),
-        n_planes,
-        rows_per_band,
+        exploded_vectors(vectors), _infer_dim(vectors)
     )
 
 
@@ -396,15 +389,13 @@ def ann_lsh_topk(
     corpus: DataFrame,
     k: int = 5,
     n_planes: int = N_PLANES,
-    rows_per_band: int = SRP_ROWS,
-    multiprobe: bool = True,
     queries_within_corpus: bool = False,
 ) -> DataFrame:
     """Approximate top-k: candidates = corpus vectors sharing any SRP
     band key with the query's probe set, scored exactly, deduped,
     ranked.
 
-    ``multiprobe`` probes, per band, the query's own key PLUS every
+    Multi-probe: per band, the query's own key PLUS every
     Hamming-1 neighbor key (each single sign bit flipped) — the
     classic multi-probe LSH trick. A pair becomes a candidate if any
     band key is within Hamming ≤ 1, which for cos ≈ 0.5 neighbors
@@ -434,27 +425,25 @@ def ann_lsh_topk(
     # query (the only round-2 bench regression).
     ex = exploded_vectors(sig_input).localCheckpoint(eager=False)
     all_sigs = srp_signatures_from_exploded(
-        ex, _infer_dim(corpus), n_planes, rows_per_band
+        ex, _infer_dim(corpus), n_planes
     ).localCheckpoint(eager=False)
     q_ids = queries.select(F.col("vec_id").alias("query_id"))
+    flips = F.array(
+        F.lit(0),  # 0 = no flip (the original key)
+        *[F.lit(1 << r) for r in range(SRP_ROWS)],
+    )
     q_sigs = all_sigs.join(
         F.broadcast(q_ids), all_sigs.vec_id == q_ids.query_id
-    ).select("query_id", "band", "key")
-    if multiprobe:
-        flips = F.array(
-            F.lit(0),  # 0 = no flip (the original key)
-            *[F.lit(1 << r) for r in range(rows_per_band)],
-        )
-        q_sigs = q_sigs.select(
-            "query_id",
-            "band",
-            F.explode(flips).alias("_m"),
-            "key",
-        ).select(
-            "query_id",
-            "band",
-            F.col("key").bitwiseXOR(F.col("_m").cast("long")).alias("key"),
-        )
+    ).select("query_id", "band", "key").select(
+        "query_id",
+        "band",
+        F.explode(flips).alias("_m"),
+        "key",
+    ).select(
+        "query_id",
+        "band",
+        F.col("key").bitwiseXOR(F.col("_m").cast("long")).alias("key"),
+    )
     c = corpus.join(all_sigs, "vec_id").select(
         F.col("vec_id").alias("corpus_id"), "band", "key"
     )

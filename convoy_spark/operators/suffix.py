@@ -142,12 +142,11 @@ def suffix_window_ranks(
 
 def crossdoc_repeat_profile(
     docs: DataFrame,
-    window: int = REPEAT_WINDOW,
     positions: DataFrame | None = None,
 ) -> DataFrame:
     """(doc_id, n_windows, n_repeat_windows, n_crossdoc_windows) — the
     exact repeated-window audit per document: of the doc's full
-    ``window``-token windows, how many occur at least twice anywhere
+    ``REPEAT_WINDOW``-token windows, how many occur at least twice anywhere
     in the corpus (n_repeat_windows), and how many occur in at least
     one OTHER document (n_crossdoc_windows — the Lee-et-al dedup
     signal). One row per INPUT doc: documents shorter than the window
@@ -164,14 +163,14 @@ def crossdoc_repeat_profile(
         if positions is not None
         else token_positions(docs).localCheckpoint(eager=False)
     )
-    ranked = suffix_window_ranks(pos, window)
+    ranked = suffix_window_ranks(pos)
     ntoks = pos.groupBy("doc_id").agg(F.max("pos").alias("_mx"))
     # materialized once: `full` feeds BOTH the per-class group stats
     # and the per-doc rollup join below — without the checkpoint the
     # whole doubling pipeline would execute twice.
     full = (
         ranked.join(ntoks, "doc_id")
-        .filter(F.col("pos") + window - 1 <= F.col("_mx"))
+        .filter(F.col("pos") + REPEAT_WINDOW - 1 <= F.col("_mx"))
         .select("doc_id", "r")
         .localCheckpoint(eager=False)
     )

@@ -289,8 +289,11 @@ def repetition_signals(docs: DataFrame) -> DataFrame:
     )
 
 
-def vocab_top_terms(docs: DataFrame, top_k: int = 100) -> DataFrame:
-    """Corpus vocabulary profile: the ``top_k`` most frequent tokens
+VOCAB_TOP_K = 100
+
+
+def vocab_top_terms(docs: DataFrame) -> DataFrame:
+    """Corpus vocabulary profile: the ``VOCAB_TOP_K`` most frequent tokens
     with total occurrences, document frequency, and cumulative corpus
     coverage — the first artifact a tokenizer-training or
     vocabulary-pruning pass computes over a pretraining corpus.
@@ -315,7 +318,7 @@ def vocab_top_terms(docs: DataFrame, top_k: int = 100) -> DataFrame:
     total = counts.agg(F.sum("n_occurrences").alias("_t"))
     top = counts.orderBy(
         F.col("n_occurrences").desc(), F.col("token").asc()
-    ).limit(top_k)
+    ).limit(VOCAB_TOP_K)
     w_rank = Window.orderBy(
         F.col("n_occurrences").desc(), F.col("token").asc()
     )
@@ -480,7 +483,7 @@ def token_cooccurrence(
     )
 
 
-def char_ngrams(docs: DataFrame, n: int = LANGID_NGRAM) -> DataFrame:
+def char_ngrams(docs: DataFrame) -> DataFrame:
     """(doc_id, lang, gram) — all char n-grams of the lowered text.
 
     ``substring`` with a *column* start index needs the SQL form (the
@@ -492,6 +495,7 @@ def char_ngrams(docs: DataFrame, n: int = LANGID_NGRAM) -> DataFrame:
     low = widen_narrow_scan(docs).select(
         "doc_id", "lang", F.lower(F.col("text")).alias("_low")
     )
+    n = LANGID_NGRAM
     return low.select(
         "doc_id",
         "lang",
@@ -507,11 +511,11 @@ def char_ngrams(docs: DataFrame, n: int = LANGID_NGRAM) -> DataFrame:
     )
 
 
-def langid_predict(docs: DataFrame, top_k: int = LANGID_TOP_K) -> DataFrame:
+def langid_predict(docs: DataFrame) -> DataFrame:
     """(doc_id, true_lang, pred_lang, n_hits) — score each doc's
     distinct trigrams against every language profile; argmax hits with
     (hits desc, lang asc) tiebreak. The profile join is a broadcast
-    (|langs|·top_k rows); scoring is one shuffle on (doc_id, lang).
+    (|langs|·LANGID_TOP_K rows); scoring is one shuffle on (doc_id, lang).
 
     The gram frame feeds both the trainer and the scorer; it is
     deliberately NOT cached — regenerating trigrams is cheap codegen
@@ -525,7 +529,7 @@ def langid_predict(docs: DataFrame, top_k: int = LANGID_TOP_K) -> DataFrame:
     )
     profiles = F.broadcast(
         counts.withColumn("rk", F.row_number().over(w_prof))
-        .filter(F.col("rk") <= top_k)
+        .filter(F.col("rk") <= LANGID_TOP_K)
         .select(F.col("lang").alias("cand_lang"), "gram")
     )
     doc_grams = grams.select("doc_id", "lang", "gram").distinct()
@@ -549,9 +553,7 @@ def langid_predict(docs: DataFrame, top_k: int = LANGID_TOP_K) -> DataFrame:
     )
 
 
-def winnow_fingerprints(
-    docs: DataFrame, k: int = WINNOW_K, w: int = WINNOW_W
-) -> DataFrame:
+def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """(doc_id, fp) — winnowing fingerprint set (Schleimer et al.,
     SIGMOD 2003, public algorithm): hash every char k-gram, slide a
     w-window over the hash sequence, keep each window's minimum,
@@ -575,6 +577,7 @@ def winnow_fingerprints(
     CollapseProject would otherwise inline the array-builder into all
     k element_at reads — k codepoint passes per position, the same
     O(len²) trap doc_shingles documents."""
+    k, w = WINNOW_K, WINNOW_W
     codes = F.expr(
         "transform(sequence(1, length(_low)),"
         " i -> cast(ascii(substring(_low, i, 1)) as bigint))"
@@ -631,8 +634,6 @@ def bm25_search(
     docs: DataFrame,
     query_terms: list[str],
     top_k: int = 50,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """(doc_id, score, n_hit_terms) — top-``top_k`` docs by BM25.
 
@@ -661,7 +662,7 @@ def bm25_search(
     q = spark.createDataFrame(
         [(0, t) for t in query_terms], "query_id int, term string"
     )
-    return bm25_search_multi(docs, q, top_k, k1, b).select(
+    return bm25_search_multi(docs, q, top_k).select(
         "doc_id", "score", "n_hit_terms"
     )
 
@@ -716,8 +717,6 @@ def bm25_score_postings(
     dl: DataFrame,
     q: DataFrame,
     top_k: int,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """(query_id, doc_id, score, n_hit_terms) — the BM25 scoring
     chain from prepared frames: ``tf`` (doc_id, token, tf) already
@@ -749,14 +748,14 @@ def bm25_score_postings(
         )
         .withColumn(
             "_norm",
-            F.col("tf").cast("double") * (1.0 + k1)
+            F.col("tf").cast("double") * (1.0 + BM25_K1)
             / (
                 F.col("tf").cast("double")
-                + k1
+                + BM25_K1
                 * (
                     1.0
-                    - b
-                    + b
+                    - BM25_B
+                    + BM25_B
                     * (
                         F.col("dl").cast("double")
                         * F.col("n_docs").cast("double")
@@ -805,8 +804,6 @@ def bm25_search_multi(
     docs: DataFrame,
     queries: DataFrame,
     top_k: int = 20,
-    k1: float = BM25_K1,
-    b: float = BM25_B,
 ) -> DataFrame:
     """(query_id, doc_id, score, n_hit_terms) — top-``top_k`` docs per
     query by BM25, for a query TABLE (query_id, term): the
@@ -854,7 +851,7 @@ def bm25_search_multi(
         tf, dl = bm25_tf_dl(docs, vocab_tokens=head)
     else:
         tf, dl = bm25_tf_dl(docs, vocab=vocab)
-    return bm25_score_postings(tf, dl, q, top_k, k1, b)
+    return bm25_score_postings(tf, dl, q, top_k)
 
 
 def bpe_train_steps(docs: DataFrame, n_steps: int = 4) -> DataFrame:
@@ -1152,11 +1149,11 @@ _MW_SQL = "((({h}) % {dim}) * 2654435761 + 12345) % 2001 - 1000"
 
 
 def model_quality_score(
-    docs: DataFrame, dim: int = MODEL_DIM, production_hash: bool = False
+    docs: DataFrame, production_hash: bool = False
 ) -> DataFrame:
     """(doc_id, n_features, score_num, logit, model_keep) —
     fastText-style linear quality scorer: word unigram + bigram
-    features hashed into ``dim`` buckets, per-doc score = mean bucket
+    features hashed into ``MODEL_DIM`` buckets, per-doc score = mean bucket
     weight; keep iff the logit is non-negative.
 
     Exactness: bucket weights are integer NUMERATORS, so ``score_num``
@@ -1174,10 +1171,10 @@ def model_quality_score(
     cross-engine-check requirement should use it; buckets (hence
     scores) differ, which is why the catalog query keeps md5."""
     if production_hash:
-        w = f"(pmod(xxhash64(f), {dim}) * {_MW_A} + {_MW_B}) % 2001 - 1000"
+        w = f"(pmod(xxhash64(f), {MODEL_DIM}) * {_MW_A} + {_MW_B}) % 2001 - 1000"
     else:
         h = "cast(conv(substring(md5(f), 1, 15), 16, 10) as bigint)"
-        w = _MW_SQL.format(h=h, dim=dim)
+        w = _MW_SQL.format(h=h, dim=MODEL_DIM)
     base = docs.select(
         "doc_id",
         F.explode(F.array(F.filter(_tokens(), lambda t: t != ""))).alias(

@@ -46,6 +46,9 @@ from convoy_spark.functions.numeric import davg, dsum
 
 log = logging.getLogger(__name__)
 
+# Bound on descendant_pairs' doubling rounds (forest depth 2^64).
+DESCENDANT_MAX_ITERATIONS = 64
+
 
 def child_edges(edges: DataFrame) -> DataFrame:
     """Non-root rows of a ``(child_id, parent_id)`` forest, as
@@ -70,7 +73,7 @@ def leaf_nodes(edges: DataFrame) -> DataFrame:
     )
 
 
-def descendant_pairs(edges: DataFrame, max_iterations: int = 64) -> DataFrame:
+def descendant_pairs(edges: DataFrame) -> DataFrame:
     """Every (anc_id, node_id, depth) ancestor/descendant pair,
     including the depth-0 self pair.
 
@@ -93,7 +96,7 @@ def descendant_pairs(edges: DataFrame, max_iterations: int = 64) -> DataFrame:
     prev_n = pairs.count()
 
     span = 1
-    for i in range(max_iterations):
+    for i in range(DESCENDANT_MAX_ITERATIONS):
         jump = pairs.filter(F.col("depth") == span)
         composed = (
             jump.select(
@@ -115,7 +118,7 @@ def descendant_pairs(edges: DataFrame, max_iterations: int = 64) -> DataFrame:
         prev_n = n
         span *= 2
     else:
-        raise RuntimeError(f"forest deeper than 2^{max_iterations} levels")
+        raise RuntimeError(f"forest deeper than 2^{DESCENDANT_MAX_ITERATIONS} levels")
 
     self_pairs = edges.select(
         F.col("child_id").alias("anc_id"),

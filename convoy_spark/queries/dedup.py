@@ -1541,14 +1541,14 @@ from convoy_spark.operators.suffix import (  # noqa: E402
 )
 
 
-def _suffix_repeat_oracle(window: int = REPEAT_WINDOW) -> str:
+def _suffix_repeat_oracle() -> str:
     """Unrolled prefix-doubling chain: r0 = dense rank of the token,
     each round ranks (r, r@pos+step) pairs — dense_rank over the
     joined frame equals the Spark side's row_number over the sorted
     DISTINCT pair set by construction."""
     rounds = []
     k, step = 0, 1
-    while step < window:
+    while step < REPEAT_WINDOW:
         rounds.append(f"""r{k + 1} AS MATERIALIZED (
       SELECT a.doc_id, a.pos,
              dense_rank() OVER (ORDER BY a.r, COALESCE(b.r, -1)) AS r
@@ -1575,7 +1575,7 @@ def _suffix_repeat_oracle(window: int = REPEAT_WINDOW) -> str:
     mx AS (SELECT doc_id, MAX(pos) AS mx FROM p GROUP BY 1),
     fullw AS (
       SELECT f.doc_id, f.r FROM r{k} f JOIN mx USING (doc_id)
-      WHERE f.pos + {window - 1} <= mx
+      WHERE f.pos + {REPEAT_WINDOW - 1} <= mx
     ),
     grp AS (
       SELECT r, COUNT(*) AS gn, MIN(doc_id) AS gmin, MAX(doc_id) AS gmax
@@ -1623,6 +1623,4 @@ def suffix_repeat_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     rounds of pure keyed dataflow, the textbook construction bound.
     One row per document, explicit zeros for docs shorter than the
     window (the bloom absent-row contract)."""
-    return crossdoc_repeat_profile(
-        load_table(spark, sf_dir, "documents"), window=REPEAT_WINDOW
-    )
+    return crossdoc_repeat_profile(load_table(spark, sf_dir, "documents"))

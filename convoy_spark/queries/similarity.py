@@ -26,6 +26,7 @@ from convoy_spark.tables import load_table
 
 from convoy_spark.operators.pca import (
     PCA_ITERATIONS,
+    PCA_PROJECT_ITERATIONS,
     PSCALE,
     pca_top_component,
     sql_xsum,
@@ -424,14 +425,14 @@ def _pca_ctes(n_iterations: int) -> list[str]:
     return _PCA_BASE_CTES + _power_ctes("c", "", n_iterations)
 
 
-def _pca_oracle(n_iterations: int = PCA_ITERATIONS) -> str:
-    ctes = _pca_ctes(n_iterations)
+def _pca_oracle() -> str:
+    ctes = _pca_ctes(PCA_ITERATIONS)
     ctes.append(
         f"""tr AS (
       SELECT {sql_xsum('y * y')} AS trace FROM c
     )"""
     )
-    n = n_iterations
+    n = PCA_ITERATIONS
     return (
         "WITH "
         + ",\n    ".join(ctes)
@@ -525,9 +526,9 @@ def _pca_project_topk_oracle(k: int, n_iterations: int) -> str:
     )
 
 
-def _pca_project_oracle(n_iterations: int = 2) -> str:
-    ctes = _pca_ctes(n_iterations)
-    n = n_iterations
+def _pca_project_oracle() -> str:
+    n = PCA_PROJECT_ITERATIONS
+    ctes = _pca_ctes(n)
     ctes.append(
         f"""sc AS (
       SELECT c.vec_id, {sql_xsum(f'c.y * v{n}.v')} AS score

@@ -402,14 +402,14 @@ def pii_scrub_query(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pii_scrub(load_table(spark, sf_dir, "documents"))
 
 
-def _winnow_horner_oracle(k: int = WINNOW_K) -> str:
+def _winnow_horner_oracle() -> str:
     """DuckDB mirror of operators.textops.winnow_gram_hash_sql: Horner
     codepoint polynomial over the k-gram at 1-based position ``pos``
     of lower(text). DuckDB ascii() == Spark ascii() == the Unicode
     codepoint of the first character, so the values are bit-identical."""
     c = "CAST(ascii(substring(lower(text), CAST(pos AS INT) + {j}, 1)) AS BIGINT)"
     expr = c.format(j=0)
-    for j in range(1, k):
+    for j in range(1, WINNOW_K):
         expr = f"(({expr}) * {WINNOW_B} + {c.format(j=j)}) % {MERSENNE31}"
     return expr
 

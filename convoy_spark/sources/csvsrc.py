@@ -53,9 +53,9 @@ def read_csv(
     )
 
 
-def corrupt_rows(rows: DataFrame, cache: bool = True) -> DataFrame:
+def corrupt_rows(rows: DataFrame) -> DataFrame:
     """The quarantine (same caching caveat as
     :func:`convoy_spark.sources.jsonl.corrupt_lines`: Spark refuses a
     corrupt-only projection straight off the scan)."""
-    src = rows.cache() if cache else rows
+    src = rows.cache()
     return src.filter(src[CORRUPT_COL].isNotNull()).select(CORRUPT_COL)

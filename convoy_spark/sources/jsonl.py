@@ -150,7 +150,7 @@ def read_pages(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def corrupt_lines(pages: DataFrame, cache: bool = True) -> DataFrame:
+def corrupt_lines(pages: DataFrame) -> DataFrame:
     """The quarantine: raw text of lines that failed to parse
     (reference logs-and-skips, `1_initial_load.py:331-332`).
 
@@ -158,14 +158,11 @@ def corrupt_lines(pages: DataFrame, cache: bool = True) -> DataFrame:
     column straight off a JSON scan (it would force a full re-parse);
     caching the page frame first is the documented pattern.
 
-    SIDE EFFECT (``cache=True``, the default): this caches ``pages``,
-    and the entry stays pinned in executor memory until the caller
-    runs ``pages.unpersist()`` — do so once the quarantine (and any
-    other readers of the page scan) are materialized. Pass
-    ``cache=False`` if the caller manages persistence itself (the
-    frame must already be cached/checkpointed or Spark raises
-    AnalysisException on the corrupt-only projection)."""
-    src = pages.cache() if cache else pages
+    SIDE EFFECT: this caches ``pages``, and the entry stays pinned in
+    executor memory until the caller runs ``pages.unpersist()`` — do so
+    once the quarantine (and any other readers of the page scan) are
+    materialized."""
+    src = pages.cache()
     return (
         src.filter(src["_corrupt_record"].isNotNull())
         .select("_corrupt_record")

@@ -51,7 +51,7 @@ FUNNEL_STREAM_SCHEMA = StructType(
 )
 
 
-def stateless_gates(batch: DataFrame, lang: str = FUNNEL_LANG) -> DataFrame:
+def stateless_gates(batch: DataFrame) -> DataFrame:
     """quality ∧ repetition ∧ language — per-doc transforms identical
     to the batch funnel's first three cumulative stages."""
     q = text_quality(batch).select(
@@ -66,7 +66,7 @@ def stateless_gates(batch: DataFrame, lang: str = FUNNEL_LANG) -> DataFrame:
         .filter(
             F.coalesce("q_ok", F.lit(False))
             & F.coalesce("r_ok", F.lit(False))
-            & (F.col("lang") == lang)
+            & (F.col("lang") == FUNNEL_LANG)
         )
         .select("doc_id", "text")
     )
@@ -77,11 +77,10 @@ def apply_funnel_batch(
     batch: DataFrame,
     seen_path: str,
     kept_sink,
-    lang: str = FUNNEL_LANG,
 ) -> None:
     """Fold one micro-batch through gates → dedup map → train split;
     deliver surviving (doc_id, text) rows to ``kept_sink(df)``."""
-    survivors = stateless_gates(batch, lang)
+    survivors = stateless_gates(batch)
 
     def after_dedup(kept: DataFrame) -> None:
         kept_sink(
@@ -99,7 +98,6 @@ def run_streaming_funnel(
     checkpoint_dir: str,
     seen_path: str,
     kept_sink,
-    lang: str = FUNNEL_LANG,
 ) -> None:
     """Drain all document files present through the funnel; stop when
     caught up. Re-running with the same checkpoint processes only new
@@ -107,7 +105,7 @@ def run_streaming_funnel(
     drain(
         stream_parquet(spark, landing_dir, FUNNEL_STREAM_SCHEMA),
         checkpoint_dir,
-        lambda b, _tag: apply_funnel_batch(spark, b, seen_path, kept_sink, lang),
+        lambda b, _tag: apply_funnel_batch(spark, b, seen_path, kept_sink),
     )
 
 

@@ -83,8 +83,6 @@ def apply_hardneg_batch(
     batch: DataFrame,
     state_dir: str,
     batch_tag: str,
-    k_short: int = K_SHORT,
-    k_truth: int = K_TRUTH,
 ) -> None:
     """Fold one micro-batch of (vec_id, embedding) corpus vectors:
     write its local ADC shortlist and exact-truth tops to the batch's
@@ -100,10 +98,10 @@ def apply_hardneg_batch(
         .select("vec_id", F.col("sub").cast("int"), F.col("code").cast("int"))
         .localCheckpoint(eager=False)
     )
-    short = ann_pq_adc_topk(queries, (cb, codes, None), k=k_short).select(
+    short = ann_pq_adc_topk(queries, (cb, codes, None), k=K_SHORT).select(
         "query_id", "corpus_id", "adist"
     )
-    truth = exact_l2_topk(queries, batch, k=k_truth).select(
+    truth = exact_l2_topk(queries, batch, k=K_TRUTH).select(
         "query_id", "corpus_id", "dnum"
     )
     short.write.mode("overwrite").parquet(
@@ -183,7 +181,6 @@ def mined_negatives(
     state_dir: str,
     k_short: int = K_SHORT,
     k_truth: int = K_TRUTH,
-    k_neg: int = K_NEG,
 ) -> DataFrame:
     """Hard negatives from the persisted store alone: re-rank the
     union of per-batch local tops (global top-k ⊆ union of local
@@ -217,16 +214,13 @@ def mined_negatives(
         "dnum",
         k_truth,
     )
-    return _negatives_from(short, truth, k_neg)
+    return _negatives_from(short, truth, K_NEG)
 
 
 def batch_negatives(
     spark: SparkSession,
     corpus: DataFrame,
     state_dir: str,
-    k_short: int = K_SHORT,
-    k_truth: int = K_TRUTH,
-    k_neg: int = K_NEG,
 ) -> DataFrame:
     """One-pass batch twin over the same frozen codebook + query set:
     encode the whole corpus, ADC-rank, exact-truth anti-join — the
@@ -240,13 +234,13 @@ def batch_negatives(
         .select("vec_id", F.col("sub").cast("int"), F.col("code").cast("int"))
         .localCheckpoint(eager=False)
     )
-    short = ann_pq_adc_topk(queries, (cb, codes, None), k=k_short).select(
+    short = ann_pq_adc_topk(queries, (cb, codes, None), k=K_SHORT).select(
         "query_id", "corpus_id", "adist"
     )
-    truth = exact_l2_topk(queries, corpus, k=k_truth).select(
+    truth = exact_l2_topk(queries, corpus, k=K_TRUTH).select(
         "query_id", "corpus_id", "dnum"
     )
-    return _negatives_from(short, truth, k_neg)
+    return _negatives_from(short, truth, K_NEG)
 
 
 __all__ = [

@@ -41,6 +41,9 @@ from pyspark.sql.types import (
 from convoy_spark.functions.numeric import dsum
 from convoy_spark.tables import table_path
 
+TUMBLE_WIDTH = "1 hour"
+WATERMARK_DELAY = "10 minutes"
+
 # Explicit source schema — a stream cannot infer (SURVEY §1.4 applies:
 # schema is declared, never guessed). The ts physical type differs by
 # testdata generation (TIMESTAMP(NANOS) rounds 1–3, timestamp[us] NTZ
@@ -82,12 +85,12 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
-def tumbling_agg(events: DataFrame, width: str = "1 hour") -> DataFrame:
+def tumbling_agg(events: DataFrame) -> DataFrame:
     """Per-(window, event_type) counts and decimal-exact value sums.
     Works identically on a batch or streaming DataFrame — the same
     declarative plan, which is the point."""
     return (
-        events.groupBy(F.window("ts", width), "event_type")
+        events.groupBy(F.window("ts", TUMBLE_WIDTH), "event_type")
         .agg(
             F.count("*").alias("n_events"),
             dsum(F.col("value")).alias("total_value"),
@@ -106,13 +109,12 @@ def run_available_now(
     sf_dir: str,
     checkpoint_dir: str,
     table_name: str = "stream_tumbling",
-    watermark: str = "10 minutes",
 ) -> None:
     """Drain the source through the windowed aggregation into an
     in-memory sink, then stop — the reference's checkpointed catch-up
     run. Calling it again with the same checkpoint reprocesses
     nothing (exactly-once)."""
-    events = stream_events(spark, sf_dir).withWatermark("ts", watermark)
+    events = stream_events(spark, sf_dir).withWatermark("ts", WATERMARK_DELAY)
     q = (
         tumbling_agg(events)
         .writeStream.outputMode("complete")

@@ -133,19 +133,13 @@ def bm25_over_index(
     state_dir: str,
     queries: DataFrame,
     top_k: int = 20,
-    k1: float | None = None,
-    b: float | None = None,
     layout: str = "plain",
 ) -> DataFrame:
     """(query_id, doc_id, score, n_hit_terms) — BM25 top-k per query
     computed from the persisted index ALONE, via the shared
     :func:`~convoy_spark.operators.textops.bm25_score_postings`
     scoring chain (tested equal to the corpus-pass operator)."""
-    from convoy_spark.operators.textops import (
-        BM25_B,
-        BM25_K1,
-        bm25_score_postings,
-    )
+    from convoy_spark.operators.textops import bm25_score_postings
 
     pb = POSTINGS_BUCKET if layout == "bucketed" else None
     postings = load_store(
@@ -161,14 +155,7 @@ def bm25_over_index(
     tf = postings.join(
         F.broadcast(q.select("token").distinct()), "token", "left_semi"
     )
-    return bm25_score_postings(
-        tf,
-        doclens,
-        q,
-        top_k,
-        BM25_K1 if k1 is None else k1,
-        BM25_B if b is None else b,
-    )
+    return bm25_score_postings(tf, doclens, q, top_k)
 
 
 __all__ = [

@@ -78,7 +78,6 @@ def apply_mixture_batch(
     state_dir: str,
     batch_tag: str,
     targets: dict[str, float],
-    salt: str = "mix0",
     feedback: bool = False,
 ) -> None:
     """Fold one micro-batch of (doc_id, source): persist its domain
@@ -119,7 +118,7 @@ def apply_mixture_batch(
         )
     else:
         rates = mixture_rates(counts, targets)
-    dec = mixture_decide(b, rates, salt)
+    dec = mixture_decide(b, rates)
     dec.select(F.lit(batch_tag).alias("batch_tag"), "*").write.mode(
         "overwrite"
     ).parquet(fragment_path(state_dir, "decisions", batch_tag))
@@ -137,7 +136,6 @@ def run_incremental_mixture(
     checkpoint_dir: str,
     state_dir: str,
     targets: dict[str, float],
-    salt: str = "mix0",
     feedback: bool = False,
 ) -> None:
     """Drain all document files present through the quota sampler;
@@ -146,9 +144,7 @@ def run_incremental_mixture(
     drain(
         stream_parquet(spark, landing_dir, DOC_STREAM_SCHEMA),
         checkpoint_dir,
-        lambda b, tag: apply_mixture_batch(
-            b, state_dir, tag, targets, salt, feedback
-        ),
+        lambda b, tag: apply_mixture_batch(b, state_dir, tag, targets, feedback),
     )
 
 

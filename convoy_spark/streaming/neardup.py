@@ -56,8 +56,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from convoy_spark.operators.dedup import (
-    LSH_ROWS,
-    NUM_HASHES,
     lsh_band_keys_wide,
     minhash_signatures_wide,
     shingle_hashes,
@@ -86,9 +84,6 @@ def apply_neardup_batch(
     state_dir: str,
     pairs_sink,
     min_jaccard: float = 0.8,
-    num_hashes: int = NUM_HASHES,
-    rows_per_band: int = LSH_ROWS,
-    n: int = 3,
     layout: str = "plain",
 ) -> None:
     """Fold one micro-batch of (doc_id, text): emit near-dup pairs
@@ -122,12 +117,8 @@ def apply_neardup_batch(
     # per-store fenced so a replay converges the stores regardless.)
     batch = batch.join(hist_ids, "doc_id", "left_anti")
 
-    b_sh = shingle_hashes(batch, n).localCheckpoint()
-    b_bands = lsh_band_keys_wide(
-        minhash_signatures_wide(sh=b_sh, num_hashes=num_hashes),
-        num_hashes,
-        rows_per_band,
-    ).localCheckpoint()
+    b_sh = shingle_hashes(batch).localCheckpoint()
+    b_bands = lsh_band_keys_wide(minhash_signatures_wide(sh=b_sh)).localCheckpoint()
 
     # Within-batch candidates (a < b), as in the batch operator.
     a = b_bands.select(F.col("doc_id").alias("doc_a"), "band", "key")

@@ -40,7 +40,6 @@ from pyspark.sql import functions as F
 from convoy_spark.operators.pq import (
     PQ_ITERS,
     PQ_KS,
-    PQ_SUB,
     _assign,
     _sub_exploded,
     ann_pq_adc_topk,
@@ -60,14 +59,13 @@ CODES_SCHEMA = "vec_id long, sub int, code int"
 def freeze_codebook(
     train_corpus: DataFrame,
     state_dir: str,
-    n_sub: int = PQ_SUB,
     ks: int = PQ_KS,
     iters: int = PQ_ITERS,
 ) -> None:
     """Train the per-subspace codebooks on ``train_corpus`` (the
     deterministic Lloyd dataflow of operators.pq.pq_codebooks) and
     persist them as the stream's frozen quantizer."""
-    codebook, _, _ = pq_codebooks(train_corpus, n_sub, ks, iters)
+    codebook, _, _ = pq_codebooks(train_corpus, ks=ks, iters=iters)
     codebook.write.mode("overwrite").parquet(
         os.path.join(state_dir, "codebook")
     )

@@ -58,9 +58,7 @@ from pyspark.sql import functions as F
 
 from convoy_spark.operators.dedup import (
     SUBSTR_CAP,
-    SUBSTR_K,
     SUBSTR_MIN_SHARED,
-    SUBSTR_MOD,
     sampled_gram_hashes,
 )
 from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
@@ -85,8 +83,6 @@ def apply_substrdup_batch(
     batch: DataFrame,
     state_dir: str,
     pairs_sink,
-    k: int = SUBSTR_K,
-    sample_mod: int = SUBSTR_MOD,
     cap: int = SUBSTR_CAP,
     min_shared: int = SUBSTR_MIN_SHARED,
     layout: str = "plain",
@@ -115,7 +111,7 @@ def apply_substrdup_batch(
     # cost of counting it) would grow linearly for the stream's whole
     # lifetime.
     b_g = (
-        sampled_gram_hashes(batch, k, sample_mod)
+        sampled_gram_hashes(batch)
         .join(dead, "gh", "left_anti")
         .localCheckpoint()
     )

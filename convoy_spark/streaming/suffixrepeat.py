@@ -69,11 +69,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from convoy_spark.operators.suffix import (
-    REPEAT_WINDOW,
-    crossdoc_repeat_profile,
-    token_positions,
-)
+from convoy_spark.operators.suffix import crossdoc_repeat_profile, token_positions
 from convoy_spark.streaming.dedup import DOC_STREAM_SCHEMA
 from convoy_spark.streaming.util import (
     drain,
@@ -145,9 +141,7 @@ def run_incremental_suffix_store(
     )
 
 
-def suffix_repeat_over_store(
-    spark: SparkSession, state_dir: str, window: int = REPEAT_WINDOW
-) -> DataFrame:
+def suffix_repeat_over_store(spark: SparkSession, state_dir: str) -> DataFrame:
     """The periodic re-rank: run the batch prefix-doubling audit over
     the ACCUMULATED position store. Only COMMITTED batches (the docs
     marker in the SAME batch-<tag> dir — not merely a matching seq,
@@ -176,7 +170,7 @@ def suffix_repeat_over_store(
         .select("doc_id")
         .distinct()
     )
-    return crossdoc_repeat_profile(universe, window, positions=pos)
+    return crossdoc_repeat_profile(universe, positions=pos)
 
 
 __all__ = [

@@ -8,6 +8,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
+from convoy_spark.operators import closure
 from convoy_spark.operators.closure import closure_roots, enrich_with_roots
 
 EDGE_SCHEMA = "child_id long, parent_id long"
@@ -115,7 +116,7 @@ def test_idempotent_rerun(spark):
     }
 
 
-def test_cycle_resolves_to_min_id(spark):
+def test_cycle_resolves_to_min_id(spark, monkeypatch):
     # Directed 3-cycle (mutual quote edges can create these in real
     # data despite the forest assumption): pointer jumping oscillates
     # forever, so after the doubling loop stalls the min-combining
@@ -123,8 +124,8 @@ def test_cycle_resolves_to_min_id(spark):
     # cycle — to the smallest reachable id, deterministically.
     edges = [(10, 11), (11, 12), (12, 10), (13, 10), (1, None), (2, 1)]
     df = spark.createDataFrame(edges, EDGE_SCHEMA)
-    got = {r.node_id: r.root_id for r in
-           closure_roots(df, max_iterations=6).collect()}
+    monkeypatch.setattr(closure, "CLOSURE_MAX_ITERATIONS", 6)
+    got = {r.node_id: r.root_id for r in closure_roots(df).collect()}
     assert got[10] == got[11] == got[12] == got[13] == 10
     assert got[1] == 1 and got[2] == 1  # the clean tree is untouched
 
@@ -141,7 +142,7 @@ def test_even_cycle_resolves_to_min_id(spark):
     assert got == {21: 21, 22: 21, 23: 21, 24: 21}
 
 
-def test_long_increasing_cycle_converges_fast(spark):
+def test_long_increasing_cycle_converges_fast(spark, monkeypatch):
     # Ids increasing along the cycle is the adversarial case for
     # min-combining pointer walks (the min creeps one hop per
     # iteration — O(L)); the windowed prefix-min doubles its coverage
@@ -151,16 +152,17 @@ def test_long_increasing_cycle_converges_fast(spark):
     n = 40
     edges = [(100 + i, 100 + (i + 1) % n) for i in range(n)]
     df = spark.createDataFrame(edges, EDGE_SCHEMA)
-    got = {r.node_id: r.root_id for r in
-           closure_roots(df, max_iterations=8).collect()}
+    monkeypatch.setattr(closure, "CLOSURE_MAX_ITERATIONS", 8)
+    got = {r.node_id: r.root_id for r in closure_roots(df).collect()}
     assert got == {100 + i: 100 for i in range(n)}
 
 
-def test_cycle_error_mode_raises(spark):
+def test_cycle_error_mode_raises(spark, monkeypatch):
     edges = [(10, 11), (11, 12), (12, 10)]
     df = spark.createDataFrame(edges, EDGE_SCHEMA)
+    monkeypatch.setattr(closure, "CLOSURE_MAX_ITERATIONS", 6)
     with pytest.raises(RuntimeError, match="did not converge"):
-        closure_roots(df, max_iterations=6, on_cycle="error")
+        closure_roots(df, on_cycle="error")
 
 
 def test_incremental_update_matches_full_closure(spark):

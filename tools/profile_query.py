@@ -22,9 +22,10 @@ from __future__ import annotations
 import json
 import os
 import shlex
+import shutil
 import sys
+import tempfile
 import time
-import uuid
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -56,9 +57,18 @@ def main() -> int:
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
     runs = int(sys.argv[3]) if len(sys.argv) > 3 else 1
 
-    log_dir = f"/tmp/spark-events-{uuid.uuid4().hex[:8]}"
-    os.makedirs(log_dir, exist_ok=True)
+    # The event log is only read back by this run, so it lives in a
+    # private temporary directory that goes once it is parsed.
+    log_dir = tempfile.mkdtemp(prefix="spark-events-")
+    try:
+        return profile(name, sf_dir, runs, log_dir)
+    finally:
+        shutil.rmtree(log_dir, ignore_errors=True)
 
+
+def profile(name: str, sf_dir: str, runs: int, log_dir: str) -> int:
+    """Run and time ``name`` with its event log in ``log_dir``, then
+    print the JVM line and the per-stage readout parsed from the log."""
     # The event-log confs go in at JVM launch, next to get_spark's own
     # confs, so the profiled session runs under the bench's memory and
     # shuffle settings.
